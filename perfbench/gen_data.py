@@ -121,9 +121,14 @@ def generate(seed, sf, out):
                          "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)]}),
            pa.schema([("event_id", i64), ("ts", ts), ("user_id", i64), ("event_type", s),
                       ("value", f64), ("props", s)]))
-    # documents: random text over a 30-word vocabulary; 5% are a copy of an
-    # earlier document with " dup" appended (near duplicates), a few are
-    # exact copies
+    _documents(rng, n_doc, out)
+    _embeddings(rng, n_emb, out)
+
+
+def _documents(rng, n_doc, out):
+    # random text over a 30-word vocabulary; 5% are a copy of an earlier
+    # document with " dup" appended (near duplicates), a few are exact copies
+    i64, s = pa.int64(), pa.string()
     words = np.array(WORDS)
     texts = [" ".join(rng.choice(words, k)) for k in rng.integers(10, 101, n_doc)]
     for i in rng.choice(np.arange(1, n_doc), n_doc // 20, replace=False):
@@ -137,7 +142,10 @@ def generate(seed, sf, out):
                          "source": [f"src{i % 20}" for i in range(n_doc)],
                          "n_chars": np.array([len(t) for t in texts], dtype=np.int64)}),
            pa.schema([("doc_id", i64), ("text", s), ("lang", s), ("source", s), ("n_chars", i64)]))
-    # embeddings: 10 weak clusters of unit-norm 64-d float vectors
+
+
+def _embeddings(rng, n_emb, out):
+    # 10 weak clusters of unit-norm 64-d float vectors
     labels = rng.integers(0, 10, n_emb)
     centers = rng.normal(0.0, 1.0, (10, 64))
     vecs = centers[labels] * 0.17 + rng.normal(0.0, 1.0, (n_emb, 64)) / 8.0
@@ -146,7 +154,17 @@ def generate(seed, sf, out):
            pd.DataFrame({"vec_id": np.arange(n_emb, dtype=np.int64),
                          "embedding": list(vecs),
                          "label": labels.astype(np.int32)}),
-           pa.schema([("vec_id", i64), ("embedding", pa.list_(pa.float32())), ("label", i32)]))
+           pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
+                      ("label", pa.int32())]))
+
+
+def kernel_sample(out):
+    """The fixed input of the kernel timings: sf0.1's document and
+    embedding tables from seed 0, whatever the run's seed and workload."""
+    rng = np.random.default_rng(0)
+    os.makedirs(out, exist_ok=True)
+    _documents(rng, 5000, out)
+    _embeddings(rng, 2000, out)
 
 
 def main():

@@ -8,18 +8,20 @@ import graft.Tables
 import graft.functions.{ArrayDot, Md5Hash, WordNgrams}
 
 /** Times graft's native kernels by calling them directly on a fixed
-  * sample of the run's tables (the first 2,000 documents and 500
-  * embeddings by id), outside any Spark job. Each kernel loops over the
-  * sample `Reps` times inside one span; the span carries the bytes (or
-  * pairs) processed, so the traced report is time per unit. */
+  * sample, outside any Spark job: the first 2,000 documents and 500
+  * embeddings by id of the tables in `sample` (`gen_data.kernel_sample`:
+  * sf0.1's generator with seed 0, whatever the run's seed and workload).
+  * Each kernel loops over the sample `Reps` times inside one span; the
+  * span carries the bytes (or pairs) processed, so the traced report is
+  * time per unit. */
 object Kernels {
   val Reps = 5
 
-  def run(spark: SparkSession, data: String): Unit = {
+  def run(spark: SparkSession, sample: String): Unit = {
     import spark.implicits._
-    val texts = Tables.documents(spark, data).orderBy("doc_id").limit(2000)
+    val texts = Tables.documents(spark, sample).orderBy("doc_id").limit(2000)
       .select("text").as[String].collect().map(UTF8String.fromString)
-    val vecs = Tables.embeddings(spark, data).orderBy("vec_id").limit(500)
+    val vecs = Tables.embeddings(spark, sample).orderBy("vec_id").limit(500)
       .select("embedding").as[Array[Float]].collect()
       .map(a => UnsafeArrayData.fromPrimitiveArray(a))
     val textBytes = texts.map(_.numBytes.toLong).sum

@@ -11,14 +11,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.{CacheScope, GraftSession, IndexCache, SparkEntry, Tables}
-import graft.operators.{Etl, Events, Relational}
+import graft.operators.{Events, Relational}
 import graft.sources.Io
 
 /** One benchmark run in one JVM: start a graft session, load the tables,
   * then run the call plan `run.py` generated (a cold pass, warm-up passes
   * and the timed window, each a list of calls) with one client thread.
   *
-  * Arguments are `key=value`: plan, data, work, slots, trace.
+  * Arguments are `key=value`: plan, data, work, slots, trace, and with
+  * trace=1 kernels (the fixed sample the kernel timings read).
   * Writes `oracle_sql.json` (the registered oracle of each query called),
   * `result.json` (per-call and per-pass timings, the run record,
   * and with trace=1 the spans and scheduler records) and `rows.jsonl`
@@ -63,7 +64,7 @@ object Main {
       .filter(_.trim.nonEmpty).map(l => mapper.readTree(l)).toVector
     val workload = plan.head.get("workload").asText
     val oracles = plan.map(_.get("name").asText).distinct.flatMap { n =>
-      SparkEntry.oracleSql.get(if (n == "etl_jsonl_e2e") "etl_pipeline_e2e" else n).map(n -> _)
+      SparkEntry.oracleSql.get(n).map(n -> _)
     }.toMap
     mapper.writeValue(new java.io.File(s"$work/oracle_sql.json"), oracles.asJava)
 
@@ -145,7 +146,7 @@ object Main {
     }
     val windowEnd = (System.nanoTime(), cpuNs, jitMs, gcMs, stealJiffies)
 
-    if (traced) { Trace.enabled = true; Kernels.run(spark, data) }
+    if (traced) { Trace.enabled = true; Kernels.run(spark, args("kernels")) }
 
     val rt = ManagementFactory.getRuntimeMXBean
     val (ws, we) = (windowStart, windowEnd)
@@ -236,59 +237,24 @@ final class Calls(spark: SparkSession, data: String, work: String) {
           col("event_type") === str("event_type") && col("user_id") < int("max_user"),
           "ts", "event_id", int("n"))
           .select("event_id", "ts", "user_id", "event_type", "value")
-      case "query" if str("name") == "etl_jsonl_e2e" => jsonlPipeline()
       case "query" => SparkEntry.queries(str("name"))(spark, data)
     }
-  }
-
-  /** `etl_pipeline_e2e`'s composition (JSON-lines ingest, per-entity
-    * transform, dedup-merge, KV batch shape) with its scratch directory
-    * inside the benchmark's work directory instead of a fixed /tmp path;
-    * it answers `etl_pipeline_e2e`'s oracle. */
-  private def jsonlPipeline(): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val scratch = s"$work/jsonl_e2e"
-    val src = Tables.events(spark, data).select("event_id", "user_id", "event_type", "value")
-    Io.writeJsonLines(src, scratch)
-    val ingested = Io.readJsonLines(spark, scratch,
-      org.apache.spark.sql.types.StructType(src.schema.fields))
-    val normed = Etl.renameNormalize(ingested,
-      renames = Map("user_id" -> "clientId"), statusCol = "event_type",
-      domain = Seq("click", "view", "purchase"),
-      remap = Map("error" -> "pending"), fallback = "in-progress")
-    val merged = Etl.dedupMerge(normed, key = "clientId", orderCol = "event_id",
-      scalarCols = Seq("value"), setCol = "event_type")
-    Io.kvBatches(merged,
-      key = pmod(col("clientId"), lit(20)),
-      payload = to_json(struct(col("clientId"), col("value"), col("event_type_set"))),
-      batchSize = 25)
-      .orderBy("pk", "batch_seq")
   }
 
   /** Runs the call to its end. AutoAPI calls collect the page to the
     * client and return it (column names, rows) for the oracle check,
     * which renders it after the call's timing ends; ETL calls commit
-    * parquet through `Io.atomicParquetArtifact`
-    * into a fresh directory; LLM calls write to noop, except on the cold
-    * pass, whose parquet output the oracle check reads. */
-  def consume(r: JsonNode, df: DataFrame): Option[(Seq[String], Seq[Row])] = {
-    val pass = r.get("pass").asInt
-    val name = r.get("name").asText
+    * parquet through `Io.atomicParquetArtifact` into a fresh directory
+    * per pass, which the oracle check reads. */
+  def consume(r: JsonNode, df: DataFrame): Option[(Seq[String], Seq[Row])] =
     r.get("sink").asText match {
       case "collect" =>
         val got = df.collect()
         Some((df.columns.toSeq, got.toSeq))
       case "parquet_commit" =>
-        Io.atomicParquetArtifact(spark, s"$work/out/p$pass/$name")(df)
-        None
-      case "parquet" =>
-        df.write.mode("overwrite").parquet(s"$work/out/p$pass/$name")
-        None
-      case "noop" =>
-        df.write.format("noop").mode("overwrite").save()
+        Io.atomicParquetArtifact(spark, s"$work/out/p${r.get("pass").asInt}/${r.get("name").asText}")(df)
         None
     }
-  }
 }
 
 /** Canonical text of a result value, identical to `oracle.py`'s rendering

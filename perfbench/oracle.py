@@ -165,19 +165,23 @@ def check_autoapi(con, plan, rows_file, wrong=()):
     return failed
 
 
-def check_queries(con, oracle_sql, out_dir, names, wrong=()):
-    """Names of registered queries whose parquet output under `out_dir`
-    differs from the oracle SQL's answer (or is missing)."""
-    failed = set()
-    for name in names:
-        path = os.path.join(out_dir, name)
-        sql = oracle_sql.get(name)
-        if sql is None or not os.path.isdir(path):
-            failed.add(name)
+def check_queries(con, oracle_sql, calls, out_dir, wrong=()):
+    """Failed call ids among registered-query calls: the parquet each call
+    committed (`out_dir/p<pass>/<name>`, every pass) must hash like the
+    oracle SQL's answer, which is computed once per query. `wrong` names
+    call ids whose expected hash is deliberately corrupted."""
+    expected, failed = {}, set()
+    for c in calls:
+        name = c["name"]
+        path = os.path.join(out_dir, f"p{c['pass']}", name)
+        if name not in oracle_sql or not os.path.isdir(path):
+            failed.add(c["id"])
             continue
+        if name not in expected:
+            expected[name] = table_hash(con, oracle_sql[name])
+        eh, ek = expected[name]
         gh, gk = table_hash(con, f"SELECT * FROM read_parquet({_q(path + '/*.parquet')})")
-        eh, ek = table_hash(con, sql)
-        int_float = any({gk.get(c), ek.get(c)} == {"i", "f"} for c in gk)
-        if name in wrong or int_float or gh != eh:
-            failed.add(name)
+        int_float = any({gk.get(k), ek.get(k)} == {"i", "f"} for k in gk)
+        if c["id"] in wrong or int_float or gh != eh:
+            failed.add(c["id"])
     return failed

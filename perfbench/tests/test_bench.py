@@ -48,10 +48,19 @@ class SmokeTest(unittest.TestCase):
                 self.assertIn(k, record)
 
     def test_wrong_expected_hash_counts_as_failed(self):
-        _, out = bench("--workload", "autoapi_list", "--seed", "5", "--trace", "0",
-                       "--wrong-hash", "3")
+        record, out = bench("--workload", "autoapi_list", "--seed", "5", "--trace", "0",
+                            "--wrong-hash", "3")
         self.assertFalse(out["correct"])
         self.assertEqual(out["failed"], 1)
+        self.assertEqual(record["failed_calls"], [3])
+
+    def test_wrong_expected_hash_of_a_window_commit_counts_as_failed(self):
+        # passes 0-3 of 8 jobs each: call 29 is a commit of the last window pass
+        record, out = bench("--workload", "etl_batch", "--seed", "5", "--trace", "0",
+                            "--wrong-hash", "29")
+        self.assertFalse(out["correct"])
+        self.assertEqual(out["failed"], 1)
+        self.assertEqual(record["failed_calls"], [29])
 
     def test_traced_counts_repeat_for_a_seed(self):
         with open(os.path.join(ROOT, "BENCHMARK.json")) as f:

@@ -1,4 +1,4 @@
-"""The benchmark's three workloads: each turns a seed into a call plan.
+"""The benchmark's workloads: each turns a seed into a call plan.
 
 A plan is a list of calls (one JSON object each) grouped into passes: pass
 0 is the cold pass that ends set-up, then a fixed number of warm-up passes,
@@ -9,11 +9,10 @@ so every run and every commit times the same calls after the same warm-up.
 import random
 
 # (scale factor, warm-up passes, window passes at --seconds 20); a window
-# pass takes about 1.4 s, 7 s and 15 s on 4 cores
+# pass takes about 1.4 s and 4.2 s on 4 cores
 PASSES = {
     "autoapi_list": (0.1, 2, 13),
-    "etl_batch": (0.05, 1, 2),
-    "llm_pipeline": (0.1, 1, 2),
+    "etl_batch": (0.02, 2, 5),
 }
 
 
@@ -23,11 +22,8 @@ def window_passes(workload, seconds):
 AUTOAPI_SHAPES = ["filterEq", "filterRange", "searchParsed", "orderPage",
                   "orderPageEnvelope", "groupOptions", "recoverLinks", "recent"]
 
-ETL_QUERIES = ["etl_jsonl_e2e", "etl_dedup_merge", "etl_sanitize", "etl_rename_normalize",
+ETL_QUERIES = ["etl_pipeline_e2e", "etl_dedup_merge", "etl_sanitize", "etl_rename_normalize",
                "etl_quarantine", "merge_upsert", "etl_scd2", "sink_kv_batches"]
-
-LLM_QUERIES = ["training_data_e2e", "text_pipeline_e2e", "mm_pipeline_e2e",
-               "dedup_minhash", "sim_knn_join", "graph_components"]
 
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -101,10 +97,8 @@ def plan(workload, seed, sf, seconds, traced, warmup=None, window=None):
                               **autoapi_request(shape, rng, sf)})
                 calls[-1].update(pass_=pass_no, phase=phase)
         else:
-            etl = workload == "etl_batch"
-            for name in ETL_QUERIES if etl else LLM_QUERIES:
-                sink = "parquet_commit" if etl else "parquet" if pass_no == 0 else "noop"
-                calls.append({"shape": "query", "name": name, "sink": sink,
+            for name in ETL_QUERIES:
+                calls.append({"shape": "query", "name": name, "sink": "parquet_commit",
                               "pass_": pass_no, "phase": phase})
     for i, c in enumerate(calls):
         c["id"] = i
