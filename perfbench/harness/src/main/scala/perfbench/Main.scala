@@ -35,7 +35,7 @@ object Main {
   }
 
   final case class CallRec(id: Int, pass: Int, phase: String, name: String,
-                           durNs: Long, ok: Boolean, error: String)
+                           durNs: Long, cpuNs: Long, ok: Boolean, error: String)
   final case class PassRec(pass: Int, phase: String, traced: Boolean, wallNs: Long,
                            cpuNs: Long, jitMs: Long, gcMs: Long)
 
@@ -111,6 +111,7 @@ object Main {
         val name = r.get("name").asText
         val callSpan = Trace.begin("call", id)
         val cg0 = Trace.compiles
+        val callCpu0 = cpuNs
         val t0 = System.nanoTime()
         val (ok, err, result) =
           try {
@@ -124,9 +125,10 @@ object Main {
             case NonFatal(e) => (false, e.toString.take(500), None)
           }
         val dur = System.nanoTime() - t0
+        val callCpuNs = cpuNs - callCpu0
         callSpan.codegen = Trace.compiles - cg0
         Trace.end(callSpan)
-        calls += CallRec(id, pass, phase, name, dur, ok, err)
+        calls += CallRec(id, pass, phase, name, dur, callCpuNs, ok, err)
         if (tracePass) live += spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
         result.foreach { case (cols, rs) =>
           rows += jmap("id" -> id, "cols" -> cols.asJava,
@@ -169,7 +171,8 @@ object Main {
       "cold_end_ms" -> coldEndMs,
       "record" -> record,
       "calls" -> calls.map(c => jmap("id" -> c.id, "pass" -> c.pass, "phase" -> c.phase,
-        "name" -> c.name, "dur_ns" -> c.durNs, "ok" -> c.ok, "error" -> c.error)).asJava,
+        "name" -> c.name, "dur_ns" -> c.durNs, "cpu_ns" -> c.cpuNs,
+        "ok" -> c.ok, "error" -> c.error)).asJava,
       "passes" -> passes.map(p => jmap("pass" -> p.pass, "phase" -> p.phase,
         "traced" -> p.traced, "wall_ns" -> p.wallNs, "cpu_ns" -> p.cpuNs,
         "jit_ms" -> p.jitMs, "gc_ms" -> p.gcMs)).asJava,

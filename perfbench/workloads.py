@@ -9,10 +9,10 @@ so every run and every commit times the same calls after the same warm-up.
 import random
 
 # (scale factor, warm-up passes, window passes at --seconds 20); a window
-# pass takes about 1.4 s and 4.2 s on 4 cores
+# pass takes about 1.5 s and 5.3 s on 4 cores
 PASSES = {
     "autoapi_list": (0.1, 2, 13),
-    "etl_batch": (0.02, 2, 5),
+    "etl_batch": (0.02, 1, 4),
 }
 
 
