@@ -80,7 +80,11 @@ object GraftSession {
       // driver with UNBOUNDED codegen variety should lower it via
       // SPARK_GRAFT_CONF (spark.sql.codegen.cache.maxEntries=N; static
       // conf, takes effect on a fresh JVM) and size driver metaspace
-      // with that headroom in mind.
+      // with that headroom in mind. Request values do not count towards
+      // that variety: graft.functions.ParamLiterals keeps filter bounds
+      // and projected constants out of the generated source, so the
+      // cache holds query SHAPES and a request with new values reuses
+      // its shape's compiled class.
       .config("spark.sql.codegen.cache.maxEntries", "20000")
       // ObjectHashAggregate (collect_set/collect_list/percentile/sketches)
       // falls back to SORT-BASED aggregation once its hash map passes 128

@@ -153,7 +153,7 @@ object SparkEntry {
     * has been consumed by then, so this bounds cached-block growth to one
     * invocation's worth across a long session (see CacheScope docs).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     families.iterator.map(_._1).reduce(_ ++ _).map { case (name, f) =>
       name -> ((s: SparkSession, d: String) => {
         CacheScope.sweep(); answerSort(name, f(s, d))
@@ -162,6 +162,6 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     families.iterator.map(_._2).reduce(_ ++ _)
 }

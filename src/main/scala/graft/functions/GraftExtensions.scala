@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * sessions built via `GraftSession` (and the Verify/Bench mains) register
   * `md5_prefix_long(str, offset, seed)` into the function registry, so the
   * expression is reachable from `spark.sql(...)` text as well as from the
-  * typed helpers below.
+  * typed helpers below. It also installs [[ParamLiterals]], which keeps
+  * request values out of generated code.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.{litInt, litString, requireArity}
@@ -277,6 +278,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         requireArity("luhn_valid", children, 1)
         LuhnValid(children.head)
       }))
+    ext.injectColumnar(_ => ParamLiteralRule)
   }
 }
 

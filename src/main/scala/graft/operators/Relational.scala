@@ -95,10 +95,12 @@ object Relational {
   }
 
   /** The full list-endpoint result envelope: the page plus `total`/`pages`
-    * (generateApi.ts:193-200 returns them with every page). Two cheap scans,
-    * not one expensive one: the count against a columnar source is answered
-    * from parquet footer metadata (no data read), and the page itself is a
-    * TakeOrderedAndProject — so the envelope costs barely more than the page.
+    * (generateApi.ts:193-200 returns them with every page). Two scans: the
+    * count is its own job, which reads only the columns `df`'s filters
+    * need (parquet column pruning; Spark's V1 parquet source has no
+    * footer-only count), and the page itself is a TakeOrderedAndProject.
+    * `total`/`pages` reach the page as projected literals, which
+    * `ParamLiterals` keeps out of the generated code.
     */
   def orderPageEnvelope(df: DataFrame, orderBy: String, asc: Boolean, tiebreak: String,
                         page: Int, itemsPerPage: Int): DataFrame = {

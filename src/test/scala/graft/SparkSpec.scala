@@ -7,23 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * test JVM), sf0.001 data for speed.
   */
 object SparkSpec {
+  // built like every production session (GraftSession.builder: extensions,
+  // codegen cache, timezone, GRAFT_MASTER); only spec-local settings here
   lazy val spark: SparkSession = {
-    // GRAFT_MASTER=local-cluster[2,16,4096] runs this same suite through
-    // real executor processes (serialized closures/expressions/exchanges)
-    val master = GraftSession.effectiveMaster("local[4]")
-    val b0 = SparkSession.builder()
-      .master(master)
+    val s = GraftSession.builder("local[4]", shufflePartitions = 4)
       .appName("graft-test")
-      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    val b = if (master.startsWith("local-cluster")) GraftSession.clusterConfigs(b0) else b0
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
