@@ -109,6 +109,21 @@ object GraftSession {
     if (m.startsWith("local-cluster")) clusterConfigs(withEnv) else withEnv
   }
 
+  /** Stops `spark`; under local-cluster it then deletes the executor
+    * work dir of THIS application. The in-process workers put it under
+    * `$SPARK_HOME/work` (SPARK_WORKER_DIR is not honored there), named
+    * after the application id — siblings belong to other applications,
+    * possibly still running, and are left alone.
+    */
+  def stop(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val (appId, master) = (sc.applicationId, sc.master)
+    spark.stop()
+    if (master.startsWith("local-cluster"))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(new java.io.File(sys.env.getOrElse("SPARK_HOME", "."), "work"), appId))
+  }
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -63,7 +63,9 @@ object SparkEntry {
     *
     * Only the trailing presentation sort is touched either way: sorts
     * feeding limits (TakeOrdered), windows, or anything below the root
-    * keep their scale-right shapes.
+    * keep their scale-right shapes. Sinks strip it again through
+    * [[graft.sources.Io.unordered]]: a committed artifact has no row
+    * order, so only dumps and collects pay for it.
     */
   private def answerSort(name: String, df: DataFrame): DataFrame =
     df.queryExecution.logical match {

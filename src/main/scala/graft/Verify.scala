@@ -72,17 +72,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/failures.json"),
       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    // local-cluster executor work dirs land in /opt/spark/work
-    // (SPARK_WORKER_DIR is not honored there) — sweep OUR app's litter
-    // only: standalone names each work dir after the application id, and
-    // deleting siblings would destroy a concurrently-running app's dirs
-    val appId = spark.sparkContext.applicationId
-    spark.stop()
-    if (master.startsWith("local-cluster")) {
-      Option(new java.io.File("/opt/spark/work").listFiles()).toSeq.flatten
-        .filter(_.getName == appId)
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    }
+    GraftSession.stop(spark)
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} queries failed: ${failures.keys.mkString(", ")}")
     }

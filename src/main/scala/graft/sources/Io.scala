@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
 import graft.Tables
 
@@ -18,22 +20,41 @@ import graft.Tables
   * partition column never touches other directories' files). JSON/CSV
   * readers take an explicit schema so ingest never pays the
   * infer-pass-over-everything cost at scale.
+  *
+  * Every sink commits UNORDERED ([[unordered]]): a written file set has
+  * no row order a reader may rely on, so a trailing presentation sort
+  * would only buy a sampling job and a full shuffle of the output.
   */
 object Io {
+
+  /** `df` without its trailing presentation sort. Matches both shapes
+    * `SparkEntry.answerSort` leaves at the logical root: the global
+    * range `Sort` (corpus-grain queries) and the one-task local `Sort`
+    * over `Repartition(1)` (answer-sized ones). Any other plan comes
+    * back as is — a sort under a limit, a window or a bare
+    * `sortWithinPartitions` is not presentation and stays.
+    */
+  private[graft] def unordered(df: DataFrame): DataFrame =
+    df.queryExecution.logical match {
+      case Sort(_, true, child, _) => GraftBridge.ofRows(df.sparkSession, child)
+      case Sort(_, false, Repartition(1, true, child), _) =>
+        GraftBridge.ofRows(df.sparkSession, child)
+      case _ => df
+    }
 
   /** JSON-lines reader (one JSON object per line, the S3 batch layout). */
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
   def writeJsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
+    unordered(df).write.mode("overwrite").json(path)
 
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true): DataFrame =
     spark.read.schema(schema).option("header", header.toString).csv(path)
 
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
-    df.write.mode("overwrite").option("header", header.toString).csv(path)
+    unordered(df).write.mode("overwrite").option("header", header.toString).csv(path)
 
   /** ORC round-trip — the second columnar format a lakehouse ingests from
     * (Hive-era feeds). Same pushdown/pruning contract as parquet via
@@ -43,13 +64,13 @@ object Io {
     spark.read.orc(path)
 
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
+    unordered(df).write.mode("overwrite").orc(path)
 
   /** Hive-style partitioned parquet layout: one directory per partition
     * value -> readers get partition pruning for free.
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+    unordered(df).write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   /** Partition BACKFILL: overwrite ONLY the partitions present in `df`,
     * leaving every other partition untouched — the daily-reprocessing
@@ -62,7 +83,7 @@ object Io {
     */
   def overwritePartitions(df: DataFrame, path: String,
                           partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
+    unordered(df).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path)
 
@@ -92,22 +113,9 @@ object Io {
     * shuffle once at ingest, not per query.
     */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
+    unordered(df).write.mode("overwrite").format("parquet")
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
-  /** Durable-index commit protocol: a parquet artifact is served ONLY if
-    * fully committed. A bare existence check is not a protocol — a build
-    * that crashed mid-write leaves the directory present and every later
-    * session would serve a partial (or empty) index. Here the build lands
-    * in a private temp directory first and is RENAMED into place (atomic
-    * on one filesystem — the same flip the CDC sink's `_latest` pointer
-    * uses), and the reader trusts a path only when Spark's `_SUCCESS`
-    * commit marker is inside it. A half-written directory (present, no
-    * marker) is swept and rebuilt instead of being trusted. If a
-    * concurrent builder wins the rename race, its committed artifact is
-    * served and ours is discarded — both answer identically, because
-    * artifacts are deterministic functions of (input path, parameters).
-    */
   /** Order-free CONTENT fingerprint for persisted-artifact path keying:
     * row count + the sum of per-row crc32 over the '|'-joined key
     * columns (sum, not xor — with xor a content swap between two rows
@@ -124,13 +132,28 @@ object Io {
     s"${r.getLong(0)}x${r.getLong(1)}"
   }
 
+  /** Durable-index commit protocol: a parquet artifact is served ONLY if
+    * fully committed. A bare existence check is not a protocol — a build
+    * that crashed mid-write leaves the directory present and every later
+    * session would serve a partial (or empty) index. Here the build lands
+    * in a private temp directory first and is RENAMED into place (atomic
+    * on one filesystem — the same flip the CDC sink's `_latest` pointer
+    * uses), and the reader trusts a path only when Spark's `_SUCCESS`
+    * commit marker is inside it. A half-written directory (present, no
+    * marker) is swept and rebuilt instead of being trusted. If a
+    * concurrent builder wins the rename race, its committed artifact is
+    * served and ours is discarded — both answer identically, because
+    * artifacts are deterministic functions of (input path, parameters).
+    * The commit drops a trailing presentation sort ([[unordered]]):
+    * a committed artifact has no row order.
+    */
   def atomicParquetArtifact(spark: SparkSession, path: String)
                            (build: => DataFrame): DataFrame = {
     val dir = new java.io.File(path)
     if (!new java.io.File(dir, "_SUCCESS").exists()) {
       val tmp = new java.io.File(dir.getParentFile,
         dir.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-      build.write.mode("overwrite").parquet(tmp.getAbsolutePath)
+      unordered(build).write.mode("overwrite").parquet(tmp.getAbsolutePath)
       if (dir.exists()) org.apache.commons.io.FileUtils.deleteQuietly(dir)
       if (!tmp.renameTo(dir))
         org.apache.commons.io.FileUtils.deleteQuietly(tmp)

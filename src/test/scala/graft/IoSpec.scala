@@ -107,6 +107,34 @@ class IoSpec extends SparkSpec {
     assert(litter.isEmpty, litter.mkString(","))
   }
 
+  test("unordered strips both presentation sorts, and the commit keeps every row") {
+    import graft.sources.Io
+    // etl_sanitize is corpus-grain (range sort); q1_agg is answer-sized
+    // (answerSort's one-task local sort over Repartition(1))
+    Seq("etl_sanitize" -> "rangepartitioning", "q1_agg" -> "SinglePartition").foreach {
+      case (q, exchange) =>
+        val sorted = run(q)
+        assert(plan(sorted).contains(exchange), s"$q:\n${plan(sorted).take(1500)}")
+        val bare = Io.unordered(sorted)
+        Seq("rangepartitioning", "SinglePartition").foreach { e =>
+          assert(!plan(bare).contains(e), s"$q keeps $e:\n${plan(bare).take(1500)}")
+        }
+        val path = s"${Io.scratch}/unordered_$q"
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+        val got = Io.atomicParquetArtifact(spark, path)(sorted)
+        assert(!got.isEmpty && got.exceptAll(sorted).isEmpty && sorted.exceptAll(got).isEmpty, q)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
+  }
+
+  test("unordered leaves sorts that are not presentation as they are") {
+    val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_totalprice")
+    Seq(o.orderBy(col("o_totalprice").desc).limit(5),
+      o.sortWithinPartitions("o_orderkey"), o).foreach { df =>
+      assert(graft.sources.Io.unordered(df) eq df, df.queryExecution.logical.toString)
+    }
+  }
+
   test("overwritePartitions backfills ONE partition, leaves the rest untouched") {
     val s = spark
     import s.implicits._

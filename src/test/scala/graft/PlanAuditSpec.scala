@@ -193,6 +193,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(page.contains("TakeOrderedAndProject"), page.take(1500))
   }
 
+  test("the dumped result keeps its presentation sort (only Io sinks drop it)") {
+    // Verify dumps `coalesce(1)` of the registered frame, and the driver
+    // may hash that dump row by row: the corpus-grain range sort and the
+    // answer-sized one-task local sort both survive into its plan.
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val dedup = run("etl_dedup_merge")
+    assert(plan(dedup.coalesce(1)).contains("rangepartitioning"),
+      plan(dedup.coalesce(1)).take(1500))
+    val e2e = run("etl_pipeline_e2e")
+    e2e.queryExecution.optimizedPlan match {
+      case Sort(_, global, _, _) => assert(!global, "etl_pipeline_e2e: range sort")
+      case p => fail(s"etl_pipeline_e2e lost its trailing sort:\n$p")
+    }
+    assert(plan(e2e.coalesce(1)).contains("SinglePartition"),
+      plan(e2e.coalesce(1)).take(1500))
+  }
+
   test("ANN re-rank joins broadcast the shortlist, never shuffle the corpus") {
     Seq("sim_pq_ann", "sim_ivfpq_ann", "sim_ivfpq_res_ann", "sim_lsh_ann").foreach { q =>
       val p = plan(run(q))

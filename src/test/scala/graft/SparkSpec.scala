@@ -19,9 +19,10 @@ object SparkSpec {
     // shutdown hooks inside one Hadoop hook (priority
     // FileSystem.SHUTDOWN_HOOK_PRIORITY + 30), where a local-cluster
     // worker kills its executors before SparkContext's hook stops the
-    // application; one priority higher, this stop comes first.
+    // application; one priority higher, this stop comes first. The stop
+    // also sweeps the session's own local-cluster work dir.
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      () => s.stop(), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 31)
+      () => GraftSession.stop(s), org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 31)
     s
   }
   val sfDir = "/root/testdata/sf0.001"
