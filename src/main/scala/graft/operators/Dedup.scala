@@ -4,6 +4,8 @@ import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 
 /** Near-duplicate detection for LLM training-data pipelines: MinHash + LSH
@@ -1098,8 +1100,27 @@ object Dedup {
     val fp = graft.sources.Io.contentFingerprint(
       Tables.documents(s, d).select("doc_id", "text"),
       Seq(col("doc_id").cast("string"), coalesce(col("text"), lit("~null~"))))
-    "/tmp/graft_io/dedup_components/" +
-      s"$d|3|8|2|$fp".replaceAll("[^A-Za-z0-9.]", "_")
+    graft.sources.Io.artifactPath("dedup_components", s"$d|3|8|2|$fp")
+  }
+
+  /** The persisted bloom sketch's on-disk key: the SAME constants the
+    * probe uses PLUS a content fingerprint of the bench side (order-free
+    * SUM of per-row crc32 over '|'-separated id|text with an explicit
+    * null marker — xor would let a content swap between two rows cancel
+    * exactly — plus the row count): a parameter edit OR a regenerated
+    * benchmark at the same path re-keys the artifact instead of serving
+    * a stale sketch — stale here would silently break the screen's
+    * one-sided-error contract (bloom_hits >= exact_hits), not just return
+    * old answers. The fingerprint pass is bench-sized, not corpus-sized.
+    */
+  private[graft] def bloomArtifactPath(bench: DataFrame, d: String): String = {
+    val fpRow = bench.agg(
+      count(lit(1)).as("n"),
+      coalesce(expr(
+        "sum(crc32(cast(concat_ws('|', cast(doc_id as string), coalesce(text, chr(1))) as binary)))"),
+        lit(0L)).as("x")).head()
+    graft.sources.Io.artifactPath("decon_bloom",
+      s"$d|$bloomN|$bloomBits|$bloomHashes|${fpRow.getLong(0)}x${fpRow.getLong(1)}")
   }
 
   def componentsOf(s: SparkSession, d: String): DataFrame = {
@@ -1148,264 +1169,6 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------- queries
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_minhash" -> ((s, d) =>
-      minhashPairs(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", n = 3, k = 8, rowsPerBand = 2)
-        .orderBy("id_a", "id_b")),
-
-    // the banding config's quality audit: LSH recall/precision vs
-    // exact-Jaccard ground truth on a deterministic probe sample; the
-    // candidate side is the SAME shared session pair index the dedup
-    // queries run on (pairsOf) — auditing the exact artifact in use
-    "dedup_lsh_eval" -> ((s, d) =>
-      lshEval(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
-        probeMod = 16, dfCap = 64, threshold = 0.5,
-        prebuiltReps = Some(repsOf(s, d)),
-        prebuiltPairs = Some(pairsOf(s, d)))),
-
-    // character-level verify over the same shared LSH candidate index
-    "dedup_edit_verify" -> ((s, d) =>
-      editVerifyOnPairs(pairsOf(s, d).select("id_a", "id_b"),
-        Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", maxDist = 64)),
-
-    // ingest increment (doc_id % 10 == 0) vs existing corpus (the rest);
-    // signatures pulled from the shared session index by content hash
-    "dedup_incremental" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      incrementalPairs(
-        corpus = docs.filter(col("doc_id") % 10 =!= 0),
-        batch = docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
-        prebuiltSigs = Some(sigsByTextOf(s, d)))
-        .orderBy("batch_id", "corpus_id")
-    }),
-
-    // dedup scoped per source: pairs never cross the source boundary;
-    // per-scope reps join the shared signature index by content hash
-    "dedup_scoped" -> ((s, d) =>
-      minhashPairsScoped(Tables.documents(s, d).select("doc_id", "text", "source"),
-        "doc_id", "text", scope = "source", n = 3, k = 8, rowsPerBand = 2,
-        prebuiltSigs = Some(sigsByTextOf(s, d)))
-        .orderBy("source", "id_a", "id_b")),
-
-    // verify metrics run over the SHARED session pairs index (pairsOf);
-    // dedup_minhash above remains the raw per-run-priced chain
-    "dedup_ngram_jaccard" -> ((s, d) =>
-      ngramJaccardOnPairs(pairsOf(s, d).select("id_a", "id_b"),
-        Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", n = 3, threshold = 0.5)
-        .orderBy("id_a", "id_b")),
-
-    "dedup_simhash" -> ((s, d) =>
-      simhashPairs(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", n = 3, maxHamming = 3)
-        .orderBy("id_a", "id_b")),
-
-    // near-dup pairs -> dedup groups: components over the minhash pair
-    // graph; cluster = the min member (the keeper). The exact-dedup
-    // pre-pass runs ONCE (checkpointed) and feeds both the node set and
-    // the pair generation.
-    "dedup_components" -> ((s, d) =>
-      componentsOf(s, d).orderBy("doc_id")),
-
-    // the component index's PERSISTENCE lifecycle (the sim_ivfpq_persisted
-    // contract for the dedup family): the labelling written once as a
-    // parquet artifact (atomic temp-dir + rename commit, served only
-    // behind a _SUCCESS marker — Io.atomicParquetArtifact), read back and
-    // served — identical answers to the in-session index, so the SAME
-    // oracle; the read-back scan is two narrow columns
-    "dedup_components_persisted" -> ((s, d) => {
-      graft.sources.Io.atomicParquetArtifact(s, componentsArtifactPath(s, d))(
-          componentsOf(s, d))
-        .orderBy("doc_id")
-    }),
-
-    // quality-aware keeper policy: each near-dup cluster keeps its
-    // highest-quality member instead of the min id
-    "dedup_keep_best" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      keepBest(componentsOf(s, d),
-        TextOps.quality(docs, "text").select("doc_id", "quality_score"),
-        "doc_id", "quality_score")
-        .orderBy("doc_id")
-    }),
-
-    // the whole near-dedup pass composed: exact dedup -> minhash pairs ->
-    // components -> keep each cluster's min doc (with its exact-copy
-    // count riding along). Output = the clean corpus.
-    "dedup_pipeline_e2e" -> ((s, d) =>
-      repsOf(s, d).join(componentsOf(s, d), "doc_id")
-        .filter(col("doc_id") === col("cluster"))
-        .select("doc_id", "n_dupes")
-        .orderBy("doc_id")),
-
-    // training-mix composition: deterministic weighted keep per source
-    "mix_sources" -> ((s, d) =>
-      mixSources(Tables.documents(s, d).select("doc_id", "source"),
-        sourceCol = "source", idCol = "doc_id",
-        rates = Map("src0" -> 0.9, "src1" -> 0.1), defaultRate = 0.5)
-        .orderBy("doc_id")),
-
-    // the dedup run's summary report: how big are the near-dup clusters?
-    // (cluster DOC size -> number of clusters). Everything corpus-sized
-    // is already spent building components; the histogram itself is two
-    // tiny aggs over |reps| rows.
-    "dedup_size_hist" -> ((s, d) =>
-      clusterSizesOf(s, d)
-        .select("cluster", "cluster_docs").distinct()
-        .groupBy("cluster_docs").agg(count(lit(1)).as("n_clusters"))
-        .orderBy("cluster_docs")),
-
-    // probabilistic near-dup downweighting: expected one copy per cluster
-    "sample_soft_dedup" -> ((s, d) =>
-      softDedupByCluster(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", prebuilt = Some(clusterSizesOf(s, d)))
-        .orderBy("doc_id")),
-
-    // cluster-granular split: near-dups never straddle train/test
-    "sample_leakage_split" -> ((s, d) =>
-      leakageSafeSplit(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", "text", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-        prebuilt = Some(clusterSizesOf(s, d)))
-        .orderBy("doc_id")),
-
-    // fractional epochs: src0 contributes 2.3 epochs, src1 exactly 1,
-    // everything else 0.5 — the upsample knob of a training mix
-    "sample_upsample" -> ((s, d) => {
-      val w = when(col("source") === "src0", 2.3)
-        .when(col("source") === "src1", 1.0)
-        .otherwise(0.5)
-      upsampleWeighted(Tables.documents(s, d).select("doc_id", "source"),
-        "doc_id", w)
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")
-    }),
-
-    // per-row weighted keep: upsample long docs (weight = n_chars/2000, capped)
-    "sample_weighted" -> ((s, d) =>
-      sampleWeighted(Tables.documents(s, d).select("doc_id", "source", "n_chars"),
-        idCol = "doc_id", weight = least(col("n_chars") / lit(2000.0), lit(1.0)))
-        .orderBy("doc_id")),
-
-    // temperature-flattened multilingual mix (α = 0.5): head languages
-    // downsampled toward the smallest language's share
-    "mix_temperature" -> ((s, d) =>
-      mixTemperatureHalf(Tables.documents(s, d).select("doc_id", "lang"),
-        sourceCol = "lang", idCol = "doc_id")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")),
-
-    // epoch/budget planning table for a 60/30/10 mix over a 10M-token
-    // budget with a 4-epoch repetition cap
-    "mix_token_budget" -> ((s, d) =>
-      mixTokenBudget(Tables.documents(s, d).select("source", "text"),
-        sourceCol = "source", textCol = "text",
-        weightsPct = Seq(("src0", 60L), ("src1", 30L), ("src2", 10L)),
-        budgetTokens = 10000000L, epochCap = 4.0)
-        .orderBy("source")),
-
-    // the same planner denominated in TRUE tokenizer tokens: per-doc BPE
-    // counts (session-artifact merge table) roll up to per-source
-    // availability before the identical budget arithmetic
-    "mix_token_budget_bpe" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val perDoc = graft.operators.TextOps.bpeEncode(
-        docs.select("doc_id", "text"), "doc_id", "text",
-        graft.operators.TextOps.mergesFor(s, d))
-      val avail = docs.select("doc_id", "source").join(perDoc, Seq("doc_id"))
-        .groupBy(col("source")).agg(sum("bpe_tokens").as("avail_tokens"))
-      mixTokenBudgetOf(avail,
-        weightsPct = Seq(("src0", 60L), ("src1", 30L), ("src2", 10L)),
-        budgetTokens = 10000000L, epochCap = 4.0)
-        .orderBy("source")
-    }),
-
-    // verbatim-phrase contamination: probe = first 5 tokens of each
-    // benchmark doc (the first 20 docs), scanned against the whole corpus
-    "decon_exact" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      exactContamination(docs, docs.filter(col("doc_id") < 20),
-        "doc_id", "text", k = 5)
-        .orderBy("doc_id", "bench_id")
-    }),
-
-    // "benchmark" = the first 20 docs; training corpus = everything
-    "decon_overlap" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      contaminationPairs(docs, docs.filter(col("doc_id") < 20),
-        "doc_id", "text", n = 3, threshold = 0.2)
-        .orderBy("doc_id", "bench_id")
-    }),
-
-    // NEAR-dup decontamination — the paraphrase-level complement of the
-    // exact-overlap decon above, and the LSH scale path: the benchmark
-    // rides as the broadcast "batch" side of incrementalPairs, so the
-    // corpus never shuffles; output = corpus docs suspiciously close to
-    // any benchmark doc
-    "decon_minhash" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      incrementalPairs(
-        corpus = docs.filter(col("doc_id") >= 20),
-        batch = docs.filter(col("doc_id") < 20),
-        "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
-        prebuiltSigs = Some(sigsByTextOf(s, d)))
-        .select(col("batch_id").as("bench_id"), col("corpus_id"), col("est_sim"))
-        .orderBy("bench_id", "corpus_id")
-    }),
-
-    // broadcast-sketch contamination screen, graded in-query against the
-    // exact join (bloom_fp = the screen's measured false-positive surplus)
-    "decon_bloom_screen" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      bloomContamination(
-        train = docs.filter(col("doc_id") >= 20),
-        bench = docs.filter(col("doc_id") < 20),
-        "doc_id", "text", n = bloomN, numBits = bloomBits, numHashes = bloomHashes)
-        .orderBy("doc_id")
-    }),
-
-    // the bloom sketch's PERSISTENCE lifecycle (benchmarks change rarely;
-    // the screen reruns per ingest batch): the word table committed once
-    // as an atomic parquet artifact and probed from the read-back —
-    // identical answers, so the SAME oracle as the in-session build
-    "decon_bloom_persisted" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val bench = docs.filter(col("doc_id") < 20)
-      // path keyed by the SAME constants the probe uses PLUS a content
-      // fingerprint of the bench side (order-free SUM of per-row crc32
-      // over '|'-separated id|text with an explicit null marker — xor
-      // would let a content swap between two rows cancel exactly — plus
-      // the row count): a parameter edit OR a regenerated benchmark
-      // at the same path re-keys the artifact instead of serving a stale
-      // sketch — stale here would silently break the screen's one-sided
-      // -error contract (bloom_hits >= exact_hits), not just return old
-      // answers. The fingerprint pass is bench-sized, not corpus-sized.
-      val fpRow = bench.agg(
-        count(lit(1)).as("n"),
-        coalesce(expr(
-          "sum(crc32(cast(concat_ws('|', cast(doc_id as string), coalesce(text, chr(1))) as binary)))"),
-          lit(0L)).as("x")).head()
-      val path = "/tmp/graft_io/decon_bloom/" +
-        s"$d|$bloomN|$bloomBits|$bloomHashes|${fpRow.getLong(0)}x${fpRow.getLong(1)}"
-          .replaceAll("[^A-Za-z0-9.]", "_")
-      val words = Relational.collectBloomWords(
-        graft.sources.Io.atomicParquetArtifact(s, path)(
-          Relational.bloomWordsDf(
-            explodeShingles(bench, "doc_id", "text", bloomN)
-              .select(col("sh").as("s")).distinct(),
-            "s", bloomBits, bloomHashes)),
-        bloomBits)
-      bloomContamination(
-        train = docs.filter(col("doc_id") >= 20), bench = bench,
-        "doc_id", "text", n = bloomN, numBits = bloomBits,
-        numHashes = bloomHashes, prebuiltWords = Some(words))
-        .orderBy("doc_id")
-    })
-  )
 
   /** Bloom-screen parameters, pinned once for BOTH decon_bloom queries,
     * the persisted artifact's path key, and the generated oracle. */
@@ -1537,108 +1300,347 @@ object Dedup {
   private lazy val keepBestOracle: String =
     s"""WITH RECURSIVE $compChainCtes, ${TextOps.sqlQualityCtes("documents")}, sc AS (SELECT comp.id AS doc_id, comp.cluster, qq.quality_score FROM comp JOIN qq ON qq.doc_id = comp.id), best AS (SELECT cluster, doc_id AS keep_id FROM (SELECT cluster, doc_id, row_number() OVER (PARTITION BY cluster ORDER BY quality_score DESC, doc_id ASC) AS rn FROM sc) WHERE rn = 1) SELECT sc.doc_id, sc.cluster, sc.quality_score, b.keep_id, sc.doc_id = b.keep_id AS kept FROM sc JOIN best b USING (cluster) ORDER BY sc.doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "dedup_minhash" ->
+  val registry: Seq[Query] = Seq(
+    Query("dedup_minhash", Corpus,
       s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, $estExpr AS est_sim FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id ORDER BY id_a, id_b""",
+      (s, d) =>
+        minhashPairs(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", n = 3, k = 8, rowsPerBand = 2)
+          .orderBy("id_a", "id_b")),
 
-    // the minhash pair chain, texts joined back, full levenshtein with
-    // the bound as a post-filter (DuckDB has no early-exit threshold
-    // arg). ASCII-corpus caveat: DuckDB's levenshtein counts UTF-8
-    // BYTES while Spark's counts codepoints — identical on this corpus
-    // (pure ASCII, like the mm_chunks byte/char-slice note), divergent
-    // on multi-byte text; a multilingual oracle would need both sides
-    // normalized to one unit first
-    "dedup_edit_verify" ->
+    // the banding config's quality audit: LSH recall/precision vs
+    // exact-Jaccard ground truth on a deterministic probe sample; the
+    // candidate side is the SAME shared session pair index the dedup
+    // queries run on (pairsOf) — auditing the exact artifact in use
+    Query("dedup_lsh_eval", Answer,
+      {
+        val jac = graft.operators.Stable.sqlRatioRounded(
+          "len(list_intersect(x.sh, y.sh))", "len(list_distinct(list_concat(x.sh, y.sh)))", 4)
+        s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, probes AS (SELECT doc_id FROM reps WHERE ${sqlDraw("doc_id")} % 16 = 0), dfok AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 64), shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN dfok USING (s)), psh AS (SELECT shr.doc_id AS probe_id, shr.s FROM shr JOIN probes ON shr.doc_id = probes.doc_id), rpc AS (SELECT p.probe_id, r.doc_id, count(*) AS shared FROM psh p JOIN shr r ON p.s = r.s AND p.probe_id != r.doc_id GROUP BY 1, 2), nsz AS (SELECT doc_id, len(sh) AS nsh FROM shs), nrz AS (SELECT doc_id, count(*) AS nshr FROM shr GROUP BY doc_id), szs AS (SELECT n.doc_id, n.nsh, n.nsh - r.nshr AS ncom FROM nsz n JOIN nrz r USING (doc_id)), rp AS (SELECT DISTINCT least(rpc.probe_id, rpc.doc_id) AS id_a, greatest(rpc.probe_id, rpc.doc_id) AS id_b FROM rpc JOIN szs a ON rpc.probe_id = a.doc_id JOIN szs b ON rpc.doc_id = b.doc_id WHERE (rpc.shared + least(a.ncom, b.ncom)) * 3 >= a.nsh + b.nsh), tr AS (SELECT rp.id_a, rp.id_b FROM rp JOIN shs x ON rp.id_a = x.doc_id JOIN shs y ON rp.id_b = y.doc_id WHERE $jac >= 0.5), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), candp AS (SELECT id_a, id_b FROM cand WHERE id_a IN (SELECT doc_id FROM probes) OR id_b IN (SELECT doc_id FROM probes)), hit AS (SELECT t.id_a FROM tr t JOIN candp c ON t.id_a = c.id_a AND t.id_b = c.id_b), exz AS (SELECT n.doc_id FROM nsz n LEFT JOIN nrz r USING (doc_id) WHERE n.doc_id IN (SELECT doc_id FROM probes) AND (n.nsh - coalesce(r.nshr, 0)) * 10000 >= 5000 * n.nsh), m AS (SELECT (SELECT count(*) FROM probes) AS n_probes, (SELECT count(*) FROM tr) AS n_truth, (SELECT count(*) FROM candp) AS n_cand, (SELECT count(*) FROM hit) AS n_hit, (SELECT count(*) FROM exz) AS n_exposed) SELECT n_probes, n_truth, n_cand, n_hit, CASE WHEN n_truth > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_hit", "n_truth", 4)} END AS recall, CASE WHEN n_cand > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_hit", "n_cand", 4)} END AS precision, n_exposed, CASE WHEN n_probes > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_exposed", "n_probes", 4)} END AS exposure_bound FROM m"""
+      },
+      (s, d) =>
+        lshEval(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
+          probeMod = 16, dfCap = 64, threshold = 0.5,
+          prebuiltReps = Some(repsOf(s, d)),
+          prebuiltPairs = Some(pairsOf(s, d)))),
+
+    // character-level verify over the same shared LSH candidate index
+    Query("dedup_edit_verify", Corpus,
+      // the minhash pair chain, texts joined back, full levenshtein with
+      // the bound as a post-filter (DuckDB has no early-exit threshold
+      // arg). ASCII-corpus caveat: DuckDB's levenshtein counts UTF-8
+      // BYTES while Spark's counts codepoints — identical on this corpus
+      // (pure ASCII, like the mm_chunks byte/char-slice note), divergent
+      // on multi-byte text; a multilingual oracle would need both sides
+      // normalized to one unit first
       s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), lv AS (SELECT id_a, id_b, levenshtein(da.text, db.text) AS lev, greatest(length(da.text), length(db.text)) AS ml FROM prs JOIN documents da ON prs.id_a = da.doc_id JOIN documents db ON prs.id_b = db.doc_id) SELECT id_a, id_b, lev::BIGINT AS edit_dist, ${Stable.sqlRatioRounded("ml - lev", "ml", 4)} AS edit_sim FROM lv WHERE lev <= 64 ORDER BY id_a, id_b""",
+      (s, d) =>
+        editVerifyOnPairs(pairsOf(s, d).select("id_a", "id_b"),
+          Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", maxDist = 64)),
 
-    // two independent signature chains (per-side exact-dedup reps), only
-    // the batch buckets capped — mirrors incrementalPairs exactly
-    "dedup_incremental" ->
+    // ingest increment (doc_id % 10 == 0) vs existing corpus (the rest);
+    // signatures pulled from the shared session index by content hash
+    Query("dedup_incremental", Corpus,
+      // two independent signature chains (per-side exact-dedup reps), only
+      // the batch buckets capped — mirrors incrementalPairs exactly
       s"""WITH bsrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id % 10 = 0 GROUP BY text), csrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id % 10 != 0 GROUP BY text), ${sqlSigChain("b", "bsrc")}, ${sqlSigChain("c", "csrc")}, bbkc AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY band_key ORDER BY doc_id) AS _rn FROM bbk) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.doc_id AS batch_id, b.doc_id AS corpus_id, $estExpr AS est_sim FROM bbkc a JOIN cbk b ON a.band_key = b.band_key ORDER BY batch_id, corpus_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        incrementalPairs(
+          corpus = docs.filter(col("doc_id") % 10 =!= 0),
+          batch = docs.filter(col("doc_id") % 10 === 0),
+          "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
+          prebuiltSigs = Some(sigsByTextOf(s, d)))
+          .orderBy("batch_id", "corpus_id")
+      }),
 
-    // the incremental chain with benchmark/corpus predicates
-    "decon_minhash" ->
-      s"""WITH bsrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id < 20 GROUP BY text), csrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id >= 20 GROUP BY text), ${sqlSigChain("b", "bsrc")}, ${sqlSigChain("c", "csrc")}, bbkc AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY band_key ORDER BY doc_id) AS _rn FROM bbk) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.doc_id AS bench_id, b.doc_id AS corpus_id, $estExpr AS est_sim FROM bbkc a JOIN cbk b ON a.band_key = b.band_key ORDER BY bench_id, corpus_id""",
-    // recompute each shingle's 4 bit positions and test membership in the
-    // bench side's position SET — sparse-set semantics of the same bitmap,
-    // so bloom_hit matches the Scala bit tests bit-for-bit
-    "decon_bloom_screen" -> bloomScreenOracle,
-    // the read-back artifact must answer identically — same oracle
-    "decon_bloom_persisted" -> bloomScreenOracle,
-    // scope rides the band key: reps per (source, text), buckets and cap
-    // per source-prefixed band key — pairs cannot cross sources
-    "dedup_scoped" ->
+    // dedup scoped per source: pairs never cross the source boundary;
+    // per-scope reps join the shared signature index by content hash
+    Query("dedup_scoped", Corpus,
+      // scope rides the band key: reps per (source, text), buckets and cap
+      // per source-prefixed band key — pairs cannot cross sources
       s"""WITH reps AS (SELECT source, min(doc_id) AS doc_id, text FROM documents GROUP BY source, text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, bks AS (SELECT b.doc_id, ${(0 until 8).map(i => s"b.mh$i").mkString(", ")}, r.source, r.source || '|' || b.band_key AS sband FROM bk b JOIN reps r USING (doc_id)), bkcs AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY sband ORDER BY doc_id) AS _rn FROM bks) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.source AS source, a.doc_id AS id_a, b.doc_id AS id_b, $estExpr AS est_sim FROM bkcs a JOIN bkcs b ON a.sband = b.sband AND a.doc_id < b.doc_id ORDER BY a.source, id_a, id_b""",
+      (s, d) =>
+        minhashPairsScoped(Tables.documents(s, d).select("doc_id", "text", "source"),
+          "doc_id", "text", scope = "source", n = 3, k = 8, rowsPerBand = 2,
+          prebuiltSigs = Some(sigsByTextOf(s, d)))
+          .orderBy("source", "id_a", "id_b")),
 
-    "dedup_ngram_jaccard" -> {
-      val jac = graft.operators.Stable.sqlRatioRounded(
-        "len(list_intersect(x.sh, y.sh))", "len(list_distinct(list_concat(x.sh, y.sh)))", 4)
-      s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id) SELECT c.id_a, c.id_b, $jac AS jaccard FROM cand c JOIN shs x ON c.id_a = x.doc_id JOIN shs y ON c.id_b = y.doc_id WHERE $jac >= 0.5 ORDER BY id_a, id_b"""
-    },
-    "dedup_lsh_eval" -> {
-      val jac = graft.operators.Stable.sqlRatioRounded(
-        "len(list_intersect(x.sh, y.sh))", "len(list_distinct(list_concat(x.sh, y.sh)))", 4)
-      s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, probes AS (SELECT doc_id FROM reps WHERE ${sqlDraw("doc_id")} % 16 = 0), dfok AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 64), shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN dfok USING (s)), psh AS (SELECT shr.doc_id AS probe_id, shr.s FROM shr JOIN probes ON shr.doc_id = probes.doc_id), rpc AS (SELECT p.probe_id, r.doc_id, count(*) AS shared FROM psh p JOIN shr r ON p.s = r.s AND p.probe_id != r.doc_id GROUP BY 1, 2), nsz AS (SELECT doc_id, len(sh) AS nsh FROM shs), nrz AS (SELECT doc_id, count(*) AS nshr FROM shr GROUP BY doc_id), szs AS (SELECT n.doc_id, n.nsh, n.nsh - r.nshr AS ncom FROM nsz n JOIN nrz r USING (doc_id)), rp AS (SELECT DISTINCT least(rpc.probe_id, rpc.doc_id) AS id_a, greatest(rpc.probe_id, rpc.doc_id) AS id_b FROM rpc JOIN szs a ON rpc.probe_id = a.doc_id JOIN szs b ON rpc.doc_id = b.doc_id WHERE (rpc.shared + least(a.ncom, b.ncom)) * 3 >= a.nsh + b.nsh), tr AS (SELECT rp.id_a, rp.id_b FROM rp JOIN shs x ON rp.id_a = x.doc_id JOIN shs y ON rp.id_b = y.doc_id WHERE $jac >= 0.5), cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), candp AS (SELECT id_a, id_b FROM cand WHERE id_a IN (SELECT doc_id FROM probes) OR id_b IN (SELECT doc_id FROM probes)), hit AS (SELECT t.id_a FROM tr t JOIN candp c ON t.id_a = c.id_a AND t.id_b = c.id_b), exz AS (SELECT n.doc_id FROM nsz n LEFT JOIN nrz r USING (doc_id) WHERE n.doc_id IN (SELECT doc_id FROM probes) AND (n.nsh - coalesce(r.nshr, 0)) * 10000 >= 5000 * n.nsh), m AS (SELECT (SELECT count(*) FROM probes) AS n_probes, (SELECT count(*) FROM tr) AS n_truth, (SELECT count(*) FROM candp) AS n_cand, (SELECT count(*) FROM hit) AS n_hit, (SELECT count(*) FROM exz) AS n_exposed) SELECT n_probes, n_truth, n_cand, n_hit, CASE WHEN n_truth > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_hit", "n_truth", 4)} END AS recall, CASE WHEN n_cand > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_hit", "n_cand", 4)} END AS precision, n_exposed, CASE WHEN n_probes > 0 THEN ${graft.operators.Stable.sqlRatioRounded("n_exposed", "n_probes", 4)} END AS exposure_bound FROM m"""
-    },
+    // verify metrics run over the SHARED session pairs index (pairsOf);
+    // dedup_minhash above remains the raw per-run-priced chain
+    Query("dedup_ngram_jaccard", Corpus,
+      {
+        val jac = graft.operators.Stable.sqlRatioRounded(
+          "len(list_intersect(x.sh, y.sh))", "len(list_distinct(list_concat(x.sh, y.sh)))", 4)
+        s"""WITH $repsCte, $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id) SELECT c.id_a, c.id_b, $jac AS jaccard FROM cand c JOIN shs x ON c.id_a = x.doc_id JOIN shs y ON c.id_b = y.doc_id WHERE $jac >= 0.5 ORDER BY id_a, id_b"""
+      },
+      (s, d) =>
+        ngramJaccardOnPairs(pairsOf(s, d).select("id_a", "id_b"),
+          Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", n = 3, threshold = 0.5)
+          .orderBy("id_a", "id_b")),
 
-    // same tiny count agg + sqrt rate + md5 draw, stated relationally;
-    // the NUL-sentinel coalesce mirrors mixTemperatureHalf so NULL
-    // langs group (and survive) identically in both engines
-    "mix_temperature" ->
-      s"""WITH cnt AS (SELECT coalesce(lang, chr(1) || 'null') AS lang_k, count(*) AS n FROM documents GROUP BY 1), mn AS (SELECT min(n) AS nmin FROM cnt), rate AS (SELECT lang_k, sqrt(nmin::DOUBLE / n::DOUBLE) AS r FROM cnt CROSS JOIN mn) SELECT d.doc_id, d.lang FROM documents d JOIN rate ON coalesce(d.lang, chr(1) || 'null') = rate.lang_k WHERE $drawSql < r * 65536 ORDER BY doc_id""",
-    "decon_exact" ->
-      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents WHERE doc_id < 20), ph AS (SELECT doc_id AS bench_id, array_to_string(t[1:5], ' ') AS phrase FROM tk WHERE len(t) >= 5) SELECT d.doc_id, p.bench_id FROM documents d CROSS JOIN ph p WHERE d.doc_id != p.bench_id AND strpos(regexp_replace(d.text, '\s+', ' ', 'g'), p.phrase) > 0 ORDER BY d.doc_id, p.bench_id""",
-    "decon_overlap" -> {
-      val frac = graft.operators.Stable.sqlRatioRounded("sv.shared", "bz.bench_sh", 4)
-      s"""WITH ${tkCteFrom("documents")}, $shListCte, $shCte, bsh AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20), bz AS (SELECT doc_id AS bench_id, len(sh) AS bench_sh FROM shs WHERE doc_id < 20), sh2 AS (SELECT t.doc_id, b.bench_id, count(*) AS shared FROM sh t JOIN bsh b ON t.s = b.s AND t.doc_id != b.bench_id GROUP BY t.doc_id, b.bench_id) SELECT sv.doc_id, sv.bench_id, sv.shared, $frac AS overlap_frac FROM sh2 sv JOIN bz ON sv.bench_id = bz.bench_id WHERE $frac >= 0.2 ORDER BY sv.doc_id, sv.bench_id"""
-    },
-    // keep each cluster's min member with its exact-copy count: the same
-    // reach fixpoint, filtered to self-labelled nodes, joined to the
-    // per-content counts
-    "dedup_pipeline_e2e" ->
+    Query("dedup_simhash", Corpus,
+      s"""WITH $repsCte, $tkCte, $shListCte, $shCte, hv AS (SELECT doc_id, $nibV AS v FROM sh), bits AS (SELECT doc_id, $sumCols FROM hv GROUP BY doc_id), simh AS (SELECT doc_id, ($hExpr)::BIGINT AS h FROM bits), blocks AS (SELECT doc_id, h, b, (h >> (8 * b)) & 255 AS blk FROM simh CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) bands), blkc AS (SELECT doc_id, h, b, blk FROM (SELECT *, row_number() OVER (PARTITION BY b, blk ORDER BY doc_id) AS _rn FROM blocks) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, bit_count(xor(a.h, b.h))::BIGINT AS hamming FROM blkc a JOIN blkc b ON a.b = b.b AND a.blk = b.blk AND a.doc_id < b.doc_id WHERE bit_count(xor(a.h, b.h)) <= 3 ORDER BY id_a, id_b""",
+      (s, d) =>
+        simhashPairs(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", n = 3, maxHamming = 3)
+          .orderBy("id_a", "id_b")),
+
+    // near-dup pairs -> dedup groups: components over the minhash pair
+    // graph; cluster = the min member (the keeper). The exact-dedup
+    // pre-pass runs ONCE (checkpointed) and feeds both the node set and
+    // the pair generation.
+    Query("dedup_components", Corpus,
+      // the recursive CTE reaches the same unique min-label fixpoint the
+      // Spark propagation loop converges to
+      componentsOracle,
+      (s, d) =>
+        componentsOf(s, d).orderBy("doc_id")),
+
+    // the component index's PERSISTENCE lifecycle (the sim_ivfpq_persisted
+    // contract for the dedup family): the labelling written once as a
+    // parquet artifact (atomic temp-dir + rename commit, served only
+    // behind a _SUCCESS marker — Io.atomicParquetArtifact), read back and
+    // served — identical answers to the in-session index, so the SAME
+    // oracle; the read-back scan is two narrow columns
+    Query("dedup_components_persisted", Corpus,
+      componentsOracle,
+      (s, d) => {
+        graft.sources.Io.atomicParquetArtifact(s, componentsArtifactPath(s, d))(
+            componentsOf(s, d))
+          .orderBy("doc_id")
+      }),
+
+    // quality-aware keeper policy: each near-dup cluster keeps its
+    // highest-quality member instead of the min id
+    Query("dedup_keep_best", Corpus,
+      keepBestOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        keepBest(componentsOf(s, d),
+          TextOps.quality(docs, "text").select("doc_id", "quality_score"),
+          "doc_id", "quality_score")
+          .orderBy("doc_id")
+      }),
+
+    // the whole near-dedup pass composed: exact dedup -> minhash pairs ->
+    // components -> keep each cluster's min doc (with its exact-copy
+    // count riding along). Output = the clean corpus.
+    Query("dedup_pipeline_e2e", Corpus,
+      // keep each cluster's min member with its exact-copy count: the same
+      // reach fixpoint, filtered to self-labelled nodes, joined to the
+      // per-content counts
       s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, count(*) AS n_dupes, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id) SELECT r.doc_id, r.n_dupes FROM reps r JOIN comp c ON r.doc_id = c.id WHERE c.cluster = r.doc_id ORDER BY r.doc_id""",
-    // per-source token sums + integer-arithmetic targets + Stable epochs
-    // LEFT JOIN from weights → avail so the headline contract (a
-    // configured source absent from the corpus surfaces with avail 0 /
-    // NULL epochs / over_cap true) is oracle-encoded end-to-end
-    "mix_token_budget" ->
-      raw"""WITH avail AS (SELECT source, sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS avail_tokens FROM documents GROUP BY source), w(source, weight_pct) AS (VALUES ('src0', 60), ('src1', 30), ('src2', 10)), t AS (SELECT w.source, w.weight_pct::BIGINT AS weight_pct, coalesce(a.avail_tokens, 0)::BIGINT AS avail_tokens, ((10000000 * w.weight_pct) // 100)::BIGINT AS target_tokens FROM w LEFT JOIN avail a ON a.source = w.source) SELECT source, weight_pct, avail_tokens, target_tokens, CASE WHEN avail_tokens = 0 THEN NULL ELSE ${graft.operators.Stable.sqlRatioRounded("target_tokens", "avail_tokens", 4)} END AS epochs, target_tokens > avail_tokens * 4.0 AS over_cap FROM t ORDER BY source""",
-    // identical arithmetic over the BPE-denominated availability: the
-    // per-doc encode replay rolls up through the documents' source column
-    "mix_token_budget_bpe" ->
-      s"""WITH ${graft.operators.TextOps.bpePerDocCtes(graft.operators.TextOps.bpeMergeK)}, avail AS (SELECT d.source, sum(b.bpe_tokens)::BIGINT AS avail_tokens FROM documents d JOIN bpd b USING (doc_id) GROUP BY d.source), w(source, weight_pct) AS (VALUES ('src0', 60), ('src1', 30), ('src2', 10)), t AS (SELECT w.source, w.weight_pct::BIGINT AS weight_pct, coalesce(a.avail_tokens, 0)::BIGINT AS avail_tokens, ((10000000 * w.weight_pct) // 100)::BIGINT AS target_tokens FROM w LEFT JOIN avail a ON a.source = w.source) SELECT source, weight_pct, avail_tokens, target_tokens, CASE WHEN avail_tokens = 0 THEN NULL ELSE ${graft.operators.Stable.sqlRatioRounded("target_tokens", "avail_tokens", 4)} END AS epochs, target_tokens > avail_tokens * 4.0 AS over_cap FROM t ORDER BY source""",
+      (s, d) =>
+        repsOf(s, d).join(componentsOf(s, d), "doc_id")
+          .filter(col("doc_id") === col("cluster"))
+          .select("doc_id", "n_dupes")
+          .orderBy("doc_id")),
 
-    // deterministic weighted mix: 4-nibble md5 draw under rate*65536
-    "mix_sources" ->
+    // training-mix composition: deterministic weighted keep per source
+    Query("mix_sources", Corpus,
+      // deterministic weighted mix: 4-nibble md5 draw under rate*65536
       s"""SELECT doc_id, source FROM documents WHERE $drawSql < (CASE WHEN source = 'src0' THEN 0.9 WHEN source = 'src1' THEN 0.1 ELSE 0.5 END) * 65536 ORDER BY doc_id""",
-    "sample_weighted" ->
-      s"""SELECT doc_id, source, n_chars FROM documents WHERE $drawSql < least(n_chars / 2000.0, 1.0) * 65536 ORDER BY doc_id""",
-    "dedup_size_hist" ->
-      s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, count(*) AS n_dupes, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT c.cluster, sum(r.n_dupes)::BIGINT AS cluster_docs FROM reps r JOIN comp c ON r.doc_id = c.id GROUP BY c.cluster) SELECT cluster_docs, count(*) AS n_clusters FROM sizes GROUP BY cluster_docs ORDER BY cluster_docs""",
-    // the dedup_components recursive chain (reps carrying exact-copy
-    // counts) + cluster doc sizes + the WIDE (32-bit) md5 draw under 1/size
-    // same floor/fraction split: whole epochs explode, the fractional
-    // copy rides the md5 draw
-    "sample_upsample" ->
-      s"""WITH w AS (SELECT doc_id, source, CASE WHEN source = 'src0' THEN 2.3 WHEN source = 'src1' THEN 1.0 ELSE 0.5 END AS wt FROM documents), c AS (SELECT doc_id, source, floor(wt)::BIGINT + (CASE WHEN $drawSql < (wt - floor(wt)) * 65536 THEN 1 ELSE 0 END) AS copies FROM w) SELECT doc_id, source, unnest(generate_series(1, copies)) AS epoch FROM c WHERE copies >= 1 ORDER BY doc_id, epoch""",
-    "sample_soft_dedup" ->
-      s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, count(*) AS n_dupes, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT c.cluster, sum(r.n_dupes)::BIGINT AS cluster_docs FROM reps r JOIN comp c ON r.doc_id = c.id GROUP BY c.cluster), m AS (SELECT d.doc_id, c.cluster, s.cluster_docs FROM documents d JOIN reps r ON d.text = r.text JOIN comp c ON r.doc_id = c.id JOIN sizes s ON c.cluster = s.cluster) SELECT doc_id, cluster, cluster_docs FROM m WHERE ${sqlDraw32("doc_id")} < (1.0 / cluster_docs) * 4294967296 ORDER BY doc_id""",
-    // the soft-dedup mapping chain, split drawn on the CLUSTER id (the
-    // 4-nibble 16-bit draw sample_hash_split uses, over cluster::VARCHAR)
-    "sample_leakage_split" -> {
-      val draw = (1 to 4).map(j =>
-        s"((strpos('0123456789abcdef', substr(md5(cluster::VARCHAR), $j, 1)) - 1)::BIGINT * ${1L << (4 * (4 - j))})")
-        .mkString("(", " + ", ")")
-      s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), m AS (SELECT d.doc_id, c.cluster FROM documents d JOIN reps r ON d.text = r.text JOIN comp c ON r.doc_id = c.id) SELECT doc_id, cluster, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split FROM m ORDER BY doc_id"""
-    },
+      (s, d) =>
+        mixSources(Tables.documents(s, d).select("doc_id", "source"),
+          sourceCol = "source", idCol = "doc_id",
+          rates = Map("src0" -> 0.9, "src1" -> 0.1), defaultRate = 0.5)
+          .orderBy("doc_id")),
 
-    // the recursive CTE reaches the same unique min-label fixpoint the
-    // Spark propagation loop converges to
-    "dedup_components" -> componentsOracle,
-    "dedup_keep_best" -> keepBestOracle,
-    // the persisted artifact must answer identically — same oracle
-    "dedup_components_persisted" -> componentsOracle,
-    "dedup_simhash" ->
-      s"""WITH $repsCte, $tkCte, $shListCte, $shCte, hv AS (SELECT doc_id, $nibV AS v FROM sh), bits AS (SELECT doc_id, $sumCols FROM hv GROUP BY doc_id), simh AS (SELECT doc_id, ($hExpr)::BIGINT AS h FROM bits), blocks AS (SELECT doc_id, h, b, (h >> (8 * b)) & 255 AS blk FROM simh CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) bands), blkc AS (SELECT doc_id, h, b, blk FROM (SELECT *, row_number() OVER (PARTITION BY b, blk ORDER BY doc_id) AS _rn FROM blocks) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, bit_count(xor(a.h, b.h))::BIGINT AS hamming FROM blkc a JOIN blkc b ON a.b = b.b AND a.blk = b.blk AND a.doc_id < b.doc_id WHERE bit_count(xor(a.h, b.h)) <= 3 ORDER BY id_a, id_b"""
+    // the dedup run's summary report: how big are the near-dup clusters?
+    // (cluster DOC size -> number of clusters). Everything corpus-sized
+    // is already spent building components; the histogram itself is two
+    // tiny aggs over |reps| rows.
+    Query("dedup_size_hist", Corpus,
+      s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, count(*) AS n_dupes, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT c.cluster, sum(r.n_dupes)::BIGINT AS cluster_docs FROM reps r JOIN comp c ON r.doc_id = c.id GROUP BY c.cluster) SELECT cluster_docs, count(*) AS n_clusters FROM sizes GROUP BY cluster_docs ORDER BY cluster_docs""",
+      (s, d) =>
+        clusterSizesOf(s, d)
+          .select("cluster", "cluster_docs").distinct()
+          .groupBy("cluster_docs").agg(count(lit(1)).as("n_clusters"))
+          .orderBy("cluster_docs")),
+
+    // probabilistic near-dup downweighting: expected one copy per cluster
+    Query("sample_soft_dedup", Corpus,
+      s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, count(*) AS n_dupes, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT c.cluster, sum(r.n_dupes)::BIGINT AS cluster_docs FROM reps r JOIN comp c ON r.doc_id = c.id GROUP BY c.cluster), m AS (SELECT d.doc_id, c.cluster, s.cluster_docs FROM documents d JOIN reps r ON d.text = r.text JOIN comp c ON r.doc_id = c.id JOIN sizes s ON c.cluster = s.cluster) SELECT doc_id, cluster, cluster_docs FROM m WHERE ${sqlDraw32("doc_id")} < (1.0 / cluster_docs) * 4294967296 ORDER BY doc_id""",
+      (s, d) =>
+        softDedupByCluster(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", prebuilt = Some(clusterSizesOf(s, d)))
+          .orderBy("doc_id")),
+
+    // cluster-granular split: near-dups never straddle train/test
+    Query("sample_leakage_split", Corpus,
+      // the soft-dedup mapping chain, split drawn on the CLUSTER id (the
+      // 4-nibble 16-bit draw sample_hash_split uses, over cluster::VARCHAR)
+      {
+        val draw = (1 to 4).map(j =>
+          s"((strpos('0123456789abcdef', substr(md5(cluster::VARCHAR), $j, 1)) - 1)::BIGINT * ${1L << (4 * (4 - j))})")
+          .mkString("(", " + ", ")")
+        s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text), $tkCte, $shListCte, $shCte, $sigCte, $bkCte, $bkcCte, prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM bkc a JOIN bkc b ON a.band_key = b.band_key AND a.doc_id < b.doc_id), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT doc_id, doc_id FROM reps UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), m AS (SELECT d.doc_id, c.cluster FROM documents d JOIN reps r ON d.text = r.text JOIN comp c ON r.doc_id = c.id) SELECT doc_id, cluster, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split FROM m ORDER BY doc_id"""
+      },
+      (s, d) =>
+        leakageSafeSplit(Tables.documents(s, d).select("doc_id", "text"),
+          "doc_id", "text", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
+          prebuilt = Some(clusterSizesOf(s, d)))
+          .orderBy("doc_id")),
+
+    // fractional epochs: src0 contributes 2.3 epochs, src1 exactly 1,
+    // everything else 0.5 — the upsample knob of a training mix
+    Query("sample_upsample", Corpus,
+      // the dedup_components recursive chain (reps carrying exact-copy
+      // counts) + cluster doc sizes + the WIDE (32-bit) md5 draw under 1/size
+      // same floor/fraction split: whole epochs explode, the fractional
+      // copy rides the md5 draw
+      s"""WITH w AS (SELECT doc_id, source, CASE WHEN source = 'src0' THEN 2.3 WHEN source = 'src1' THEN 1.0 ELSE 0.5 END AS wt FROM documents), c AS (SELECT doc_id, source, floor(wt)::BIGINT + (CASE WHEN $drawSql < (wt - floor(wt)) * 65536 THEN 1 ELSE 0 END) AS copies FROM w) SELECT doc_id, source, unnest(generate_series(1, copies)) AS epoch FROM c WHERE copies >= 1 ORDER BY doc_id, epoch""",
+      (s, d) => {
+        val w = when(col("source") === "src0", 2.3)
+          .when(col("source") === "src1", 1.0)
+          .otherwise(0.5)
+        upsampleWeighted(Tables.documents(s, d).select("doc_id", "source"),
+          "doc_id", w)
+          .select("doc_id", "source", "epoch")
+          .orderBy("doc_id", "epoch")
+      }),
+
+    // per-row weighted keep: upsample long docs (weight = n_chars/2000, capped)
+    Query("sample_weighted", Corpus,
+      s"""SELECT doc_id, source, n_chars FROM documents WHERE $drawSql < least(n_chars / 2000.0, 1.0) * 65536 ORDER BY doc_id""",
+      (s, d) =>
+        sampleWeighted(Tables.documents(s, d).select("doc_id", "source", "n_chars"),
+          idCol = "doc_id", weight = least(col("n_chars") / lit(2000.0), lit(1.0)))
+          .orderBy("doc_id")),
+
+    // temperature-flattened multilingual mix (α = 0.5): head languages
+    // downsampled toward the smallest language's share
+    Query("mix_temperature", Corpus,
+      // same tiny count agg + sqrt rate + md5 draw, stated relationally;
+      // the NUL-sentinel coalesce mirrors mixTemperatureHalf so NULL
+      // langs group (and survive) identically in both engines
+      s"""WITH cnt AS (SELECT coalesce(lang, chr(1) || 'null') AS lang_k, count(*) AS n FROM documents GROUP BY 1), mn AS (SELECT min(n) AS nmin FROM cnt), rate AS (SELECT lang_k, sqrt(nmin::DOUBLE / n::DOUBLE) AS r FROM cnt CROSS JOIN mn) SELECT d.doc_id, d.lang FROM documents d JOIN rate ON coalesce(d.lang, chr(1) || 'null') = rate.lang_k WHERE $drawSql < r * 65536 ORDER BY doc_id""",
+      (s, d) =>
+        mixTemperatureHalf(Tables.documents(s, d).select("doc_id", "lang"),
+          sourceCol = "lang", idCol = "doc_id")
+          .select("doc_id", "lang")
+          .orderBy("doc_id")),
+
+    // epoch/budget planning table for a 60/30/10 mix over a 10M-token
+    // budget with a 4-epoch repetition cap
+    Query("mix_token_budget", Answer,
+      // per-source token sums + integer-arithmetic targets + Stable epochs
+      // LEFT JOIN from weights → avail so the headline contract (a
+      // configured source absent from the corpus surfaces with avail 0 /
+      // NULL epochs / over_cap true) is oracle-encoded end-to-end
+      raw"""WITH avail AS (SELECT source, sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS avail_tokens FROM documents GROUP BY source), w(source, weight_pct) AS (VALUES ('src0', 60), ('src1', 30), ('src2', 10)), t AS (SELECT w.source, w.weight_pct::BIGINT AS weight_pct, coalesce(a.avail_tokens, 0)::BIGINT AS avail_tokens, ((10000000 * w.weight_pct) // 100)::BIGINT AS target_tokens FROM w LEFT JOIN avail a ON a.source = w.source) SELECT source, weight_pct, avail_tokens, target_tokens, CASE WHEN avail_tokens = 0 THEN NULL ELSE ${graft.operators.Stable.sqlRatioRounded("target_tokens", "avail_tokens", 4)} END AS epochs, target_tokens > avail_tokens * 4.0 AS over_cap FROM t ORDER BY source""",
+      (s, d) =>
+        mixTokenBudget(Tables.documents(s, d).select("source", "text"),
+          sourceCol = "source", textCol = "text",
+          weightsPct = Seq(("src0", 60L), ("src1", 30L), ("src2", 10L)),
+          budgetTokens = 10000000L, epochCap = 4.0)
+          .orderBy("source")),
+
+    // the same planner denominated in TRUE tokenizer tokens: per-doc BPE
+    // counts (session-artifact merge table) roll up to per-source
+    // availability before the identical budget arithmetic
+    Query("mix_token_budget_bpe", Answer,
+      // identical arithmetic over the BPE-denominated availability: the
+      // per-doc encode replay rolls up through the documents' source column
+      s"""WITH ${graft.operators.TextOps.bpePerDocCtes(graft.operators.TextOps.bpeMergeK)}, avail AS (SELECT d.source, sum(b.bpe_tokens)::BIGINT AS avail_tokens FROM documents d JOIN bpd b USING (doc_id) GROUP BY d.source), w(source, weight_pct) AS (VALUES ('src0', 60), ('src1', 30), ('src2', 10)), t AS (SELECT w.source, w.weight_pct::BIGINT AS weight_pct, coalesce(a.avail_tokens, 0)::BIGINT AS avail_tokens, ((10000000 * w.weight_pct) // 100)::BIGINT AS target_tokens FROM w LEFT JOIN avail a ON a.source = w.source) SELECT source, weight_pct, avail_tokens, target_tokens, CASE WHEN avail_tokens = 0 THEN NULL ELSE ${graft.operators.Stable.sqlRatioRounded("target_tokens", "avail_tokens", 4)} END AS epochs, target_tokens > avail_tokens * 4.0 AS over_cap FROM t ORDER BY source""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val perDoc = graft.operators.TextOps.bpeEncode(
+          docs.select("doc_id", "text"), "doc_id", "text",
+          graft.operators.TextOps.mergesFor(s, d))
+        val avail = docs.select("doc_id", "source").join(perDoc, Seq("doc_id"))
+          .groupBy(col("source")).agg(sum("bpe_tokens").as("avail_tokens"))
+        mixTokenBudgetOf(avail,
+          weightsPct = Seq(("src0", 60L), ("src1", 30L), ("src2", 10L)),
+          budgetTokens = 10000000L, epochCap = 4.0)
+          .orderBy("source")
+      }),
+
+    // verbatim-phrase contamination: probe = first 5 tokens of each
+    // benchmark doc (the first 20 docs), scanned against the whole corpus
+    Query("decon_exact", Answer,
+      raw"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), t -> t != '') AS t FROM documents WHERE doc_id < 20), ph AS (SELECT doc_id AS bench_id, array_to_string(t[1:5], ' ') AS phrase FROM tk WHERE len(t) >= 5) SELECT d.doc_id, p.bench_id FROM documents d CROSS JOIN ph p WHERE d.doc_id != p.bench_id AND strpos(regexp_replace(d.text, '\s+', ' ', 'g'), p.phrase) > 0 ORDER BY d.doc_id, p.bench_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        exactContamination(docs, docs.filter(col("doc_id") < 20),
+          "doc_id", "text", k = 5)
+          .orderBy("doc_id", "bench_id")
+      }),
+
+    // "benchmark" = the first 20 docs; training corpus = everything
+    Query("decon_overlap", Answer,
+      {
+        val frac = graft.operators.Stable.sqlRatioRounded("sv.shared", "bz.bench_sh", 4)
+        s"""WITH ${tkCteFrom("documents")}, $shListCte, $shCte, bsh AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 20), bz AS (SELECT doc_id AS bench_id, len(sh) AS bench_sh FROM shs WHERE doc_id < 20), sh2 AS (SELECT t.doc_id, b.bench_id, count(*) AS shared FROM sh t JOIN bsh b ON t.s = b.s AND t.doc_id != b.bench_id GROUP BY t.doc_id, b.bench_id) SELECT sv.doc_id, sv.bench_id, sv.shared, $frac AS overlap_frac FROM sh2 sv JOIN bz ON sv.bench_id = bz.bench_id WHERE $frac >= 0.2 ORDER BY sv.doc_id, sv.bench_id"""
+      },
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        contaminationPairs(docs, docs.filter(col("doc_id") < 20),
+          "doc_id", "text", n = 3, threshold = 0.2)
+          .orderBy("doc_id", "bench_id")
+      }),
+
+    // NEAR-dup decontamination — the paraphrase-level complement of the
+    // exact-overlap decon above, and the LSH scale path: the benchmark
+    // rides as the broadcast "batch" side of incrementalPairs, so the
+    // corpus never shuffles; output = corpus docs suspiciously close to
+    // any benchmark doc
+    Query("decon_minhash", Corpus,
+      // the incremental chain with benchmark/corpus predicates
+      s"""WITH bsrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id < 20 GROUP BY text), csrc AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id >= 20 GROUP BY text), ${sqlSigChain("b", "bsrc")}, ${sqlSigChain("c", "csrc")}, bbkc AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY band_key ORDER BY doc_id) AS _rn FROM bbk) WHERE _rn <= $defaultBucketCap) SELECT DISTINCT a.doc_id AS bench_id, b.doc_id AS corpus_id, $estExpr AS est_sim FROM bbkc a JOIN cbk b ON a.band_key = b.band_key ORDER BY bench_id, corpus_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        incrementalPairs(
+          corpus = docs.filter(col("doc_id") >= 20),
+          batch = docs.filter(col("doc_id") < 20),
+          "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
+          prebuiltSigs = Some(sigsByTextOf(s, d)))
+          .select(col("batch_id").as("bench_id"), col("corpus_id"), col("est_sim"))
+          .orderBy("bench_id", "corpus_id")
+      }),
+
+    // broadcast-sketch contamination screen, graded in-query against the
+    // exact join (bloom_fp = the screen's measured false-positive surplus)
+    Query("decon_bloom_screen", Corpus,
+      // recompute each shingle's 4 bit positions and test membership in the
+      // bench side's position SET — sparse-set semantics of the same bitmap,
+      // so bloom_hit matches the Scala bit tests bit-for-bit
+      bloomScreenOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        bloomContamination(
+          train = docs.filter(col("doc_id") >= 20),
+          bench = docs.filter(col("doc_id") < 20),
+          "doc_id", "text", n = bloomN, numBits = bloomBits, numHashes = bloomHashes)
+          .orderBy("doc_id")
+      }),
+
+    // the bloom sketch's PERSISTENCE lifecycle (benchmarks change rarely;
+    // the screen reruns per ingest batch): the word table committed once
+    // as an atomic parquet artifact and probed from the read-back —
+    // identical answers, so the SAME oracle as the in-session build
+    Query("decon_bloom_persisted", Corpus,
+      bloomScreenOracle,
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        val bench = docs.filter(col("doc_id") < 20)
+        val path = bloomArtifactPath(bench, d)
+        val words = Relational.collectBloomWords(
+          graft.sources.Io.atomicParquetArtifact(s, path)(
+            Relational.bloomWordsDf(
+              explodeShingles(bench, "doc_id", "text", bloomN)
+                .select(col("sh").as("s")).distinct(),
+              "s", bloomBits, bloomHashes)),
+          bloomBits)
+        bloomContamination(
+          train = docs.filter(col("doc_id") >= 20), bench = bench,
+          "doc_id", "text", n = bloomN, numBits = bloomBits,
+          numHashes = bloomHashes, prebuiltWords = Some(words))
+          .orderBy("doc_id")
+      })
   )
 }

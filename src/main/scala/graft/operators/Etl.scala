@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 
 /** ETL transforms: Spark-first re-expression of the reference's custom ETL
@@ -434,247 +436,90 @@ object Etl {
 
   // ---------------------------------------------------------------- queries
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_dedup_merge" -> ((s, d) =>
-      dedupMerge(Tables.lineitem(s, d), key = "l_orderkey", orderCol = "l_linenumber",
-        scalarCols = Seq("l_suppkey", "l_quantity", "l_returnflag"), setCol = "l_partkey")
-        .orderBy("l_orderkey")),
+  val registry: Seq[Query] = Seq(
+    Query("etl_dedup_merge", Corpus,
+      // row_number window mirrors Spark's min(struct(...)) composite order
+      // exactly (arg_min can't take a composite key in DuckDB); NULLS FIRST
+      // matches Spark's struct comparison (nulls sort first ascending) where
+      // DuckDB's window default is NULLS LAST
+      """WITH ranked AS (SELECT l_orderkey, l_suppkey, l_quantity, l_returnflag, row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber NULLS FIRST, l_suppkey NULLS FIRST, l_quantity NULLS FIRST, l_returnflag NULLS FIRST, l_partkey NULLS FIRST) AS rn FROM lineitem), sets AS (SELECT l_orderkey, array_to_string(list_sort(list(DISTINCT l_partkey)), ',') AS l_partkey_set FROM lineitem GROUP BY l_orderkey) SELECT r.l_orderkey, r.l_suppkey, r.l_quantity, r.l_returnflag, s.l_partkey_set FROM ranked r JOIN sets s USING (l_orderkey) WHERE r.rn = 1 ORDER BY r.l_orderkey""",
+      (s, d) =>
+        dedupMerge(Tables.lineitem(s, d), key = "l_orderkey", orderCol = "l_linenumber",
+          scalarCols = Seq("l_suppkey", "l_quantity", "l_returnflag"), setCol = "l_partkey")
+          .orderBy("l_orderkey")),
 
-    "etl_sanitize" -> ((s, d) =>
-      sanitize(Tables.documents(s, d).select("doc_id", "lang", "source"),
-        Map("lang" -> "und", "source" -> "unknown"))
-        .orderBy("doc_id")),
+    Query("etl_sanitize", Corpus,
+      """SELECT doc_id, coalesce(nullif(trim(lang), ''), 'und') AS lang, coalesce(nullif(trim(source), ''), 'unknown') AS source FROM documents ORDER BY doc_id""",
+      (s, d) =>
+        sanitize(Tables.documents(s, d).select("doc_id", "lang", "source"),
+          Map("lang" -> "und", "source" -> "unknown"))
+          .orderBy("doc_id")),
 
     // rule-validation split: price cap + priority rule; bad rows carry
     // their failed-rule list instead of killing the batch
-    "etl_quarantine" -> ((s, d) =>
-      validateRules(
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice", "o_orderpriority"),
-        Seq(
-          "price_le_300k" -> (col("o_totalprice") <= 300000.0),
-          "priority_known" -> col("o_orderpriority").isInCollection(
-            Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")),
-          "not_low_value" -> (col("o_totalprice") >= 1000.0)))
-        .orderBy("o_orderkey")),
+    Query("etl_quarantine", Corpus,
+      """SELECT o_orderkey, o_totalprice, o_orderpriority, coalesce(array_to_string(list_filter([CASE WHEN NOT coalesce(o_totalprice <= 300000.0, FALSE) THEN 'price_le_300k' END, CASE WHEN NOT coalesce(o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW'), FALSE) THEN 'priority_known' END, CASE WHEN NOT coalesce(o_totalprice >= 1000.0, FALSE) THEN 'not_low_value' END], x -> x IS NOT NULL), ','), '') AS failed_rules, coalesce(array_to_string(list_filter([CASE WHEN NOT coalesce(o_totalprice <= 300000.0, FALSE) THEN 'price_le_300k' END, CASE WHEN NOT coalesce(o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW'), FALSE) THEN 'priority_known' END, CASE WHEN NOT coalesce(o_totalprice >= 1000.0, FALSE) THEN 'not_low_value' END], x -> x IS NOT NULL), ','), '') = '' AS is_valid FROM orders ORDER BY o_orderkey""",
+      (s, d) =>
+        validateRules(
+          Tables.orders(s, d).select("o_orderkey", "o_totalprice", "o_orderpriority"),
+          Seq(
+            "price_le_300k" -> (col("o_totalprice") <= 300000.0),
+            "priority_known" -> col("o_orderpriority").isInCollection(
+              Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")),
+            "not_low_value" -> (col("o_totalprice") >= 1000.0)))
+          .orderBy("o_orderkey")),
 
     // materialized per-type aggregate maintained with a delta batch: the
     // base (first ~half of the month) folds with the rest at index+delta
     // cost; the result equals the full rebuild the oracle computes
-    "etl_agg_maintain" -> ((s, d) => {
-      val ev = Tables.events(s, d).select("event_type", "ts", "value")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      val base = aggOf(ev.filter(col("ts") < cutoff), "event_type", "value")
-      aggMaintain(base, ev.filter(col("ts") >= cutoff), "event_type", "value")
-        .select(col("event_type"), col("n"),
-          round(col("sum_v"), 2).cast("double").as("sum_value"))
-        .orderBy("event_type")
-    }),
+    Query("etl_agg_maintain", Answer,
+      // the oracle IS the invariant: a from-scratch rebuild over all rows
+      // must equal the incrementally-maintained aggregate
+      """SELECT event_type, count(*) AS n, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) => {
+        val ev = Tables.events(s, d).select("event_type", "ts", "value")
+        val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
+        val base = aggOf(ev.filter(col("ts") < cutoff), "event_type", "value")
+        aggMaintain(base, ev.filter(col("ts") >= cutoff), "event_type", "value")
+          .select(col("event_type"), col("n"),
+            round(col("sum_v"), 2).cast("double").as("sum_value"))
+          .orderBy("event_type")
+      }),
 
     // orphan counts per FK relationship; events.user_id -> customer is the
     // deliberately-unconstrained edge (event users need no account)
-    "etl_fk_integrity" -> ((s, d) =>
-      fkIntegrity(Seq(
-        ("orders_customer", Tables.orders(s, d), "o_custkey",
-          Tables.customer(s, d), "c_custkey"),
-        ("lineitem_orders", Tables.lineitem(s, d), "l_orderkey",
-          Tables.orders(s, d), "o_orderkey"),
-        ("lineitem_part", Tables.lineitem(s, d), "l_partkey",
-          Tables.part(s, d), "p_partkey"),
-        ("customer_nation", Tables.customer(s, d), "c_nationkey",
-          Tables.nation(s, d), "n_nationkey"),
-        ("events_customer", Tables.events(s, d), "user_id",
-          Tables.customer(s, d), "c_custkey")))
-        .orderBy("relationship")),
+    Query("etl_fk_integrity", Answer,
+      {
+        def branch(name: String, fact: String, fk: String, dim: String, pk: String) =
+          s"""SELECT '$name' AS relationship, count(*) AS n_orphans FROM $fact f WHERE f.$fk IS NOT NULL AND NOT EXISTS (SELECT 1 FROM $dim d WHERE d.$pk = f.$fk)"""
+        Seq(
+          branch("orders_customer", "orders", "o_custkey", "customer", "c_custkey"),
+          branch("lineitem_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+          branch("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
+          branch("customer_nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+          branch("events_customer", "events", "user_id", "customer", "c_custkey")
+        ).mkString("", " UNION ALL ", " ORDER BY relationship")
+      },
+      (s, d) =>
+        fkIntegrity(Seq(
+          ("orders_customer", Tables.orders(s, d), "o_custkey",
+            Tables.customer(s, d), "c_custkey"),
+          ("lineitem_orders", Tables.lineitem(s, d), "l_orderkey",
+            Tables.orders(s, d), "o_orderkey"),
+          ("lineitem_part", Tables.lineitem(s, d), "l_partkey",
+            Tables.part(s, d), "p_partkey"),
+          ("customer_nation", Tables.customer(s, d), "c_nationkey",
+            Tables.nation(s, d), "n_nationkey"),
+          ("events_customer", Tables.events(s, d), "user_id",
+            Tables.customer(s, d), "c_custkey")))
+          .orderBy("relationship")),
 
     // declarative data-quality expectations (the dbt-test /
     // Great-Expectations surface, and the batch image of the
     // reference's ProtoModel field validations): one agg pass per
     // table evaluates every row-level rule, plus key-uniqueness rows —
     // an answer-sized report at any corpus size
-    "etl_expectations" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val li = Tables.lineitem(s, d)
-      val c = Tables.customer(s, d)
-      val parts = Seq(
-        expectations(o, "orders", Seq(
-          "o_custkey_not_null" -> col("o_custkey").isNull,
-          "o_totalprice_range" -> !col("o_totalprice").between(0.0, 1e7),
-          "o_orderstatus_accepted" -> !col("o_orderstatus").isin("O", "F", "P"),
-          "o_orderpriority_tier12" -> !col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-          "o_orderdate_bounds" ->
-            !col("o_orderdate").between(lit("1992-01-01").cast("timestamp"),
-              lit("1998-12-31").cast("timestamp")))),
-        expectations(li, "lineitem", Seq(
-          "l_quantity_range" -> !col("l_quantity").between(1.0, 50.0),
-          "l_discount_max5pct" -> (col("l_discount") > 0.05),
-          "l_returnflag_accepted" -> !col("l_returnflag").isin("A", "N", "R"))),
-        expectations(c, "customer", Seq(
-          "c_acctbal_not_null" -> col("c_acctbal").isNull,
-          "c_mktsegment_accepted" -> !col("c_mktsegment").isin(
-            "AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"))),
-        uniqueExpectation(o, "orders", "o_orderkey"),
-        uniqueExpectation(c, "customer", "c_custkey"))
-      parts.reduce(_.unionAll(_))
-        .withColumn("pass", col("violations") === 0L)
-        .orderBy("tbl", "rule")
-    }),
-
-    // deterministic pseudonymization (GDPR-style): natural keys replaced
-    // by keyed-hash surrogate tokens on EVERY table that carries them,
-    // so referential integrity survives without the identity — proven
-    // here by joining orders to customers purely through the tokens.
-    // The pepper is a fixed literal (a deployment passes a secret); the
-    // token is a pure projection, so at 100 TB this is scan-fused and
-    // the join shape is unchanged from the natural-key plan. The token
-    // keeps the FULL 128-bit md5 (r12 verdict): a 64-bit truncation
-    // reaches ~50% birthday-collision odds at 5e9 keys, which would
-    // silently MERGE two customers through the surrogate join. Caveat
-    // (by design of keyed hashing, not a defect): a leaked pepper makes
-    // a sequential-int keyspace enumerable — rotating the pepper or an
-    // HMAC with a managed secret is the deployment-side control.
-    "etl_pseudonymize" -> ((s, d) => {
-      def token(c: Column): Column =
-        md5(concat(lit("pepper|"), c.cast("string")))
-      val cust = Tables.customer(s, d)
-        .select(token(col("c_custkey")).as("cust_token"), col("c_mktsegment"))
-      val ords = Tables.orders(s, d)
-        .select(token(col("o_custkey")).as("cust_token"), col("o_totalprice"))
-      ords.join(cust, "cust_token")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          countDistinct(col("cust_token")).as("n_customers"),
-          Stable.sumRounded(col("o_totalprice"), 2).as("sum_val"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // one-pass profile of orders: nulls / exact distincts / extrema per column
-    "data_profile" -> ((s, d) =>
-      profileTable(Tables.orders(s, d))
-        .orderBy("col_name")),
-
-    // z-order layout report over events (user_id × event time): 64
-    // z-files, per-file bbox vs the global area
-    "data_zorder_layout" -> ((s, d) =>
-      zorderLayout(Tables.events(s, d),
-        col("user_id"), unix_micros(col("ts")), bits = 8, fileBits = 6)
-        .orderBy("file_id")),
-
-    // heavy-hitter report on the events join key
-    "data_skew_report" -> ((s, d) =>
-      skewReport(Tables.events(s, d), "user_id", topK = 20)),
-
-    // compaction bins over the documents inventory (source = partition,
-    // n_chars = file bytes): next-fit prefix-sum binning at 4 KiB
-    "etl_compaction_plan" -> ((s, d) =>
-      compactionPlan(Tables.documents(s, d), "source", "doc_id", "n_chars",
-        targetBytes = 4096L)
-        .orderBy("part", "bin")),
-
-    "etl_rename_normalize" -> ((s, d) =>
-      renameNormalize(
-        Tables.events(s, d).select("event_id", "user_id", "event_type"),
-        renames = Map("user_id" -> "clientId"),
-        statusCol = "event_type",
-        domain = Seq("click", "view", "purchase"),
-        remap = Map("error" -> "pending"),
-        fallback = "in-progress")
-        .orderBy("event_id")),
-
-    "etl_jsonlines" -> ((s, d) =>
-      parseJsonColumn(
-        Tables.events(s, d).select("event_id", "event_type", "props"),
-        "props",
-        StructType(Seq(org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType))))
-        .orderBy("event_id")),
-
-    // The reference's mutation path as a batch: base snapshot + a change
-    // batch of updates (%7: doubled price, status U), deletes (%13) and
-    // inserts (%11: new keys), compacted keep-latest. A key hit by both
-    // an update (v1) and a delete (v2) ends up deleted.
-    "merge_upsert" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val base = o.withColumn("version", lit(0L)).withColumn("deleted", lit(false))
-      val updates = o.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_orderstatus", lit("U"))
-        .withColumn("o_totalprice", col("o_totalprice") * 2) // *2: exact in ieee754
-        .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
-      val deletes = o.filter(col("o_orderkey") % 13 === 0)
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(true))
-      val inserts = o.filter(col("o_orderkey") % 11 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-        .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
-      mergeUpsert(base, updates.unionByName(deletes).unionByName(inserts),
-        key = "o_orderkey", version = "version", deleted = "deleted")
-        .orderBy("o_orderkey")
-    }),
-
-    // snapshot v2 = v1 minus short docs, every 7th doc normalized, plus
-    // 10 new arrivals — exercising removed/changed/added in one diff
-    "etl_snapshot_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val v1 = docs.select("doc_id", "text")
-      val v2 = docs.filter(col("n_chars") >= 50)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, upper(col("text")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") < 10)
-          .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      snapshotDiff(v1, v2, "doc_id", "text").orderBy("doc_id")
-    }),
-
-    // the merge_upsert change stream kept as SCD2 history: every version
-    // becomes a validity interval, tombstones included (a deleted row's
-    // current interval records the deletion)
-    "etl_scd2" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val base = o.withColumn("version", lit(0L)).withColumn("deleted", lit(false))
-      val updates = o.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_orderstatus", lit("U"))
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-        .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
-      val deletes = o.filter(col("o_orderkey") % 13 === 0)
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(true))
-      val inserts = o.filter(col("o_orderkey") % 11 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-        .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
-      scd2(base.unionByName(updates).unionByName(deletes).unionByName(inserts),
-        key = "o_orderkey", version = "version")
-        .orderBy("o_orderkey", "version")
-    }),
-
-    // The reference's ETL pipeline end-to-end (apis/etl.ts): JSON-lines
-    // batch ingest -> per-entity transform -> dedup-merge -> KV batch
-    // write shape. One declarative plan, one oracle row.
-    "etl_pipeline_e2e" -> ((s, d) => {
-      val scratch = "/tmp/graft_io/jsonl_e2e"
-      val src = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
-      graft.sources.Io.writeJsonLines(src, scratch)
-      val ingested = graft.sources.Io.readJsonLines(s, scratch, StructType(src.schema.fields))
-      val normed = renameNormalize(ingested,
-        renames = Map("user_id" -> "clientId"), statusCol = "event_type",
-        domain = Seq("click", "view", "purchase"),
-        remap = Map("error" -> "pending"), fallback = "in-progress")
-      val merged = dedupMerge(normed, key = "clientId", orderCol = "event_id",
-        scalarCols = Seq("value"), setCol = "event_type")
-      graft.sources.Io.kvBatches(merged,
-        key = pmod(col("clientId"), lit(20)),
-        payload = to_json(struct(col("clientId"), col("value"), col("event_type_set"))),
-        batchSize = 25)
-        .orderBy("pk", "batch_seq")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "etl_pseudonymize" ->
-      """WITH c AS (SELECT md5('pepper|' || CAST(c_custkey AS VARCHAR)) AS cust_token, c_mktsegment FROM customer),
-        |o AS (SELECT md5('pepper|' || CAST(o_custkey AS VARCHAR)) AS cust_token, o_totalprice FROM orders)
-        |SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o.cust_token)::BIGINT AS n_customers,
-        |  round(sum(CAST(o_totalprice AS DECIMAL(20,6))), 2)::DOUBLE AS sum_val
-        |FROM o JOIN c USING (cust_token) GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "etl_expectations" ->
+    Query("etl_expectations", Answer,
       """WITH r AS (
         |  SELECT 'orders' AS tbl, 'o_custkey_not_null' AS rule, count(*) AS n_rows,
         |         sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)::BIGINT AS violations FROM orders
@@ -702,93 +547,245 @@ object Etl {
         |         (count(*) - count(DISTINCT c_custkey))::BIGINT FROM customer)
         |SELECT tbl, rule, n_rows, violations, violations = 0 AS pass
         |FROM r ORDER BY tbl, rule""".stripMargin,
-    // the same v1/v2 construction and hash-compare, stated relationally
-    "etl_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, md5(text) AS old_hash FROM documents), v2 AS (SELECT doc_id, md5(CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END) AS new_hash FROM documents WHERE n_chars >= 50 UNION ALL SELECT doc_id + 1000000 AS doc_id, md5(text) AS new_hash FROM documents WHERE doc_id < 10) SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id, CASE WHEN v1.doc_id IS NULL THEN 'added' WHEN v2.doc_id IS NULL THEN 'removed' ELSE 'changed' END AS status, v1.old_hash, v2.new_hash FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id WHERE v1.doc_id IS NULL OR v2.doc_id IS NULL OR v1.old_hash != v2.new_hash ORDER BY doc_id""",
-    // the oracle IS the invariant: a from-scratch rebuild over all rows
-    // must equal the incrementally-maintained aggregate
-    "etl_agg_maintain" ->
-      """SELECT event_type, count(*) AS n, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) => {
+        val o = Tables.orders(s, d)
+        val li = Tables.lineitem(s, d)
+        val c = Tables.customer(s, d)
+        val parts = Seq(
+          expectations(o, "orders", Seq(
+            "o_custkey_not_null" -> col("o_custkey").isNull,
+            "o_totalprice_range" -> !col("o_totalprice").between(0.0, 1e7),
+            "o_orderstatus_accepted" -> !col("o_orderstatus").isin("O", "F", "P"),
+            "o_orderpriority_tier12" -> !col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
+            "o_orderdate_bounds" ->
+              !col("o_orderdate").between(lit("1992-01-01").cast("timestamp"),
+                lit("1998-12-31").cast("timestamp")))),
+          expectations(li, "lineitem", Seq(
+            "l_quantity_range" -> !col("l_quantity").between(1.0, 50.0),
+            "l_discount_max5pct" -> (col("l_discount") > 0.05),
+            "l_returnflag_accepted" -> !col("l_returnflag").isin("A", "N", "R"))),
+          expectations(c, "customer", Seq(
+            "c_acctbal_not_null" -> col("c_acctbal").isNull,
+            "c_mktsegment_accepted" -> !col("c_mktsegment").isin(
+              "AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"))),
+          uniqueExpectation(o, "orders", "o_orderkey"),
+          uniqueExpectation(c, "customer", "c_custkey"))
+        parts.reduce(_.unionAll(_))
+          .withColumn("pass", col("violations") === 0L)
+          .orderBy("tbl", "rule")
+      }),
 
-    "etl_fk_integrity" -> {
-      def branch(name: String, fact: String, fk: String, dim: String, pk: String) =
-        s"""SELECT '$name' AS relationship, count(*) AS n_orphans FROM $fact f WHERE f.$fk IS NOT NULL AND NOT EXISTS (SELECT 1 FROM $dim d WHERE d.$pk = f.$fk)"""
-      Seq(
-        branch("orders_customer", "orders", "o_custkey", "customer", "c_custkey"),
-        branch("lineitem_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        branch("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
-        branch("customer_nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        branch("events_customer", "events", "user_id", "customer", "c_custkey")
-      ).mkString("", " UNION ALL ", " ORDER BY relationship")
-    },
+    // deterministic pseudonymization (GDPR-style): natural keys replaced
+    // by keyed-hash surrogate tokens on EVERY table that carries them,
+    // so referential integrity survives without the identity — proven
+    // here by joining orders to customers purely through the tokens.
+    // The pepper is a fixed literal (a deployment passes a secret); the
+    // token is a pure projection, so at 100 TB this is scan-fused and
+    // the join shape is unchanged from the natural-key plan. The token
+    // keeps the FULL 128-bit md5 (r12 verdict): a 64-bit truncation
+    // reaches ~50% birthday-collision odds at 5e9 keys, which would
+    // silently MERGE two customers through the surrogate join. Caveat
+    // (by design of keyed hashing, not a defect): a leaked pepper makes
+    // a sequential-int keyspace enumerable — rotating the pepper or an
+    // HMAC with a managed secret is the deployment-side control.
+    Query("etl_pseudonymize", Answer,
+      """WITH c AS (SELECT md5('pepper|' || CAST(c_custkey AS VARCHAR)) AS cust_token, c_mktsegment FROM customer),
+        |o AS (SELECT md5('pepper|' || CAST(o_custkey AS VARCHAR)) AS cust_token, o_totalprice FROM orders)
+        |SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o.cust_token)::BIGINT AS n_customers,
+        |  round(sum(CAST(o_totalprice AS DECIMAL(20,6))), 2)::DOUBLE AS sum_val
+        |FROM o JOIN c USING (cust_token) GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+      (s, d) => {
+        def token(c: Column): Column =
+          md5(concat(lit("pepper|"), c.cast("string")))
+        val cust = Tables.customer(s, d)
+          .select(token(col("c_custkey")).as("cust_token"), col("c_mktsegment"))
+        val ords = Tables.orders(s, d)
+          .select(token(col("o_custkey")).as("cust_token"), col("o_totalprice"))
+        ords.join(cust, "cust_token")
+          .groupBy("c_mktsegment")
+          .agg(count(lit(1)).as("n_orders"),
+            countDistinct(col("cust_token")).as("n_customers"),
+            Stable.sumRounded(col("o_totalprice"), 2).as("sum_val"))
+          .orderBy("c_mktsegment")
+      }),
 
-    // one UNION ALL branch per column, each the same aggregate the Spark
-    // side computes inside its single Expand pass
-    "data_profile" -> {
-      def branch(c: String, minMax: String => String) =
-        s"""SELECT '$c' AS col_name, count(*) - count($c) AS n_nulls, count(DISTINCT $c) AS n_distinct, ${minMax(s"min($c)")} AS min_val, ${minMax(s"max($c)")} AS max_val FROM orders"""
-      val vch = (e: String) => s"$e::VARCHAR"
-      val dec = (e: String) => s"$e::DECIMAL(18,2)::VARCHAR"
-      val tsf = (e: String) => s"strftime($e, '%Y-%m-%d %H:%M:%S')"
-      Seq(
-        branch("o_orderkey", vch), branch("o_custkey", vch),
-        branch("o_orderstatus", vch), branch("o_totalprice", dec),
-        branch("o_orderdate", tsf), branch("o_orderpriority", vch)
-      ).mkString("", " UNION ALL ", " ORDER BY col_name")
-    },
+    // one-pass profile of orders: nulls / exact distincts / extrema per column
+    Query("data_profile", Answer,
+      // one UNION ALL branch per column, each the same aggregate the Spark
+      // side computes inside its single Expand pass
+      {
+        def branch(c: String, minMax: String => String) =
+          s"""SELECT '$c' AS col_name, count(*) - count($c) AS n_nulls, count(DISTINCT $c) AS n_distinct, ${minMax(s"min($c)")} AS min_val, ${minMax(s"max($c)")} AS max_val FROM orders"""
+        val vch = (e: String) => s"$e::VARCHAR"
+        val dec = (e: String) => s"$e::DECIMAL(18,2)::VARCHAR"
+        val tsf = (e: String) => s"strftime($e, '%Y-%m-%d %H:%M:%S')"
+        Seq(
+          branch("o_orderkey", vch), branch("o_custkey", vch),
+          branch("o_orderstatus", vch), branch("o_totalprice", dec),
+          branch("o_orderdate", tsf), branch("o_orderpriority", vch)
+        ).mkString("", " UNION ALL ", " ORDER BY col_name")
+      },
+      (s, d) =>
+        profileTable(Tables.orders(s, d))
+          .orderBy("col_name")),
 
-    // same fixed-width bucket + Morton interleave in integer arithmetic
-    // (// on non-negative operands == Spark's div); bbox ratio via the
-    // shared half-up int-ratio quantizer
-    "data_zorder_layout" -> {
-      val zkey = (0 until 8).map(i =>
-        s"((ba // ${1L << i}) % 2) * ${1L << (2 * i + 1)} + ((bb // ${1L << i}) % 2) * ${1L << (2 * i)}")
-        .mkString(" + ")
-      val frac = Stable.sqlRatioRounded(
-        "(bamax - bamin + 1) * (bbmax - bbmin + 1)", s"${256L * 256L}", 6)
-      s"""WITH src AS (SELECT user_id AS a, epoch_us(ts) AS b FROM events), mm AS (SELECT min(a) AS amin, max(a) AS amax, min(b) AS bmin, max(b) AS bmax FROM src), bk AS (SELECT a, b, ((a - amin) * 256) // (amax - amin + 1) AS ba, ((b - bmin) * 256) // (bmax - bmin + 1) AS bb FROM src CROSS JOIN mm), z AS (SELECT a, b, ba, bb, ($zkey) // ${1L << 10} AS file_id FROM bk), g AS (SELECT file_id, count(*)::BIGINT AS n_rows, min(a) AS a_min, max(a) AS a_max, min(b) AS b_min, max(b) AS b_max, min(ba) AS bamin, max(ba) AS bamax, min(bb) AS bbmin, max(bb) AS bbmax FROM z GROUP BY file_id) SELECT file_id, n_rows, a_min, a_max, b_min, b_max, $frac AS bbox_frac FROM g ORDER BY file_id NULLS FIRST"""
-    },
+    // z-order layout report over events (user_id × event time): 64
+    // z-files, per-file bbox vs the global area
+    Query("data_zorder_layout", Answer,
+      // same fixed-width bucket + Morton interleave in integer arithmetic
+      // (// on non-negative operands == Spark's div); bbox ratio via the
+      // shared half-up int-ratio quantizer
+      {
+        val zkey = (0 until 8).map(i =>
+          s"((ba // ${1L << i}) % 2) * ${1L << (2 * i + 1)} + ((bb // ${1L << i}) % 2) * ${1L << (2 * i)}")
+          .mkString(" + ")
+        val frac = Stable.sqlRatioRounded(
+          "(bamax - bamin + 1) * (bbmax - bbmin + 1)", s"${256L * 256L}", 6)
+        s"""WITH src AS (SELECT user_id AS a, epoch_us(ts) AS b FROM events), mm AS (SELECT min(a) AS amin, max(a) AS amax, min(b) AS bmin, max(b) AS bmax FROM src), bk AS (SELECT a, b, ((a - amin) * 256) // (amax - amin + 1) AS ba, ((b - bmin) * 256) // (bmax - bmin + 1) AS bb FROM src CROSS JOIN mm), z AS (SELECT a, b, ba, bb, ($zkey) // ${1L << 10} AS file_id FROM bk), g AS (SELECT file_id, count(*)::BIGINT AS n_rows, min(a) AS a_min, max(a) AS a_max, min(b) AS b_min, max(b) AS b_max, min(ba) AS bamin, max(ba) AS bamax, min(bb) AS bbmin, max(bb) AS bbmax FROM z GROUP BY file_id) SELECT file_id, n_rows, a_min, a_max, b_min, b_max, $frac AS bbox_frac FROM g ORDER BY file_id NULLS FIRST"""
+      },
+      (s, d) =>
+        zorderLayout(Tables.events(s, d),
+          col("user_id"), unix_micros(col("ts")), bits = 8, fileBits = 6)
+          .orderBy("file_id")),
 
-    "etl_compaction_plan" ->
+    // heavy-hitter report on the events join key
+    Query("data_skew_report", Answer,
+      {
+        val share = Stable.sqlRatioRounded("cnt", "total", 4)
+        val xavg = Stable.sqlRatioRounded("cnt * n_keys", "total", 2)
+        // NULLS FIRST on the key tiebreak: Spark's asc is nulls-first where
+        // DuckDB defaults nulls-last, and a NULL join key is exactly the
+        // skew pathology this report exists to surface
+        s"""WITH c AS (SELECT user_id, count(*)::BIGINT AS cnt FROM events GROUP BY user_id), t AS (SELECT sum(cnt)::BIGINT AS total, count(*)::BIGINT AS n_keys FROM c) SELECT user_id, cnt, $share AS share, $xavg AS x_avg FROM c CROSS JOIN t ORDER BY cnt DESC, user_id ASC NULLS FIRST LIMIT 20"""
+      },
+      (s, d) =>
+        skewReport(Tables.events(s, d), "user_id", topK = 20)),
+
+    // compaction bins over the documents inventory (source = partition,
+    // n_chars = file bytes): next-fit prefix-sum binning at 4 KiB
+    Query("etl_compaction_plan", Corpus,
       """WITH f AS (SELECT source AS part, doc_id AS fid, CAST(n_chars AS BIGINT) AS bytes FROM documents),
         |c AS (SELECT part, fid, bytes, sum(bytes) OVER (PARTITION BY part ORDER BY fid) - bytes AS prior_bytes FROM f),
         |b AS (SELECT part, CAST(prior_bytes // 4096 AS BIGINT) AS bin, fid, bytes FROM c)
         |SELECT part, bin, count(*)::BIGINT AS n_files, sum(bytes)::BIGINT AS bytes, min(fid) AS first_file, max(fid) AS last_file
         |FROM b GROUP BY part, bin ORDER BY part, bin""".stripMargin,
+      (s, d) =>
+        compactionPlan(Tables.documents(s, d), "source", "doc_id", "n_chars",
+          targetBytes = 4096L)
+          .orderBy("part", "bin")),
 
-    "data_skew_report" -> {
-      val share = Stable.sqlRatioRounded("cnt", "total", 4)
-      val xavg = Stable.sqlRatioRounded("cnt * n_keys", "total", 2)
-      // NULLS FIRST on the key tiebreak: Spark's asc is nulls-first where
-      // DuckDB defaults nulls-last, and a NULL join key is exactly the
-      // skew pathology this report exists to surface
-      s"""WITH c AS (SELECT user_id, count(*)::BIGINT AS cnt FROM events GROUP BY user_id), t AS (SELECT sum(cnt)::BIGINT AS total, count(*)::BIGINT AS n_keys FROM c) SELECT user_id, cnt, $share AS share, $xavg AS x_avg FROM c CROSS JOIN t ORDER BY cnt DESC, user_id ASC NULLS FIRST LIMIT 20"""
-    },
-
-    // row_number window mirrors Spark's min(struct(...)) composite order
-    // exactly (arg_min can't take a composite key in DuckDB); NULLS FIRST
-    // matches Spark's struct comparison (nulls sort first ascending) where
-    // DuckDB's window default is NULLS LAST
-    "etl_dedup_merge" ->
-      """WITH ranked AS (SELECT l_orderkey, l_suppkey, l_quantity, l_returnflag, row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber NULLS FIRST, l_suppkey NULLS FIRST, l_quantity NULLS FIRST, l_returnflag NULLS FIRST, l_partkey NULLS FIRST) AS rn FROM lineitem), sets AS (SELECT l_orderkey, array_to_string(list_sort(list(DISTINCT l_partkey)), ',') AS l_partkey_set FROM lineitem GROUP BY l_orderkey) SELECT r.l_orderkey, r.l_suppkey, r.l_quantity, r.l_returnflag, s.l_partkey_set FROM ranked r JOIN sets s USING (l_orderkey) WHERE r.rn = 1 ORDER BY r.l_orderkey""",
-    "etl_sanitize" ->
-      """SELECT doc_id, coalesce(nullif(trim(lang), ''), 'und') AS lang, coalesce(nullif(trim(source), ''), 'unknown') AS source FROM documents ORDER BY doc_id""",
-    "etl_quarantine" ->
-      """SELECT o_orderkey, o_totalprice, o_orderpriority, coalesce(array_to_string(list_filter([CASE WHEN NOT coalesce(o_totalprice <= 300000.0, FALSE) THEN 'price_le_300k' END, CASE WHEN NOT coalesce(o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW'), FALSE) THEN 'priority_known' END, CASE WHEN NOT coalesce(o_totalprice >= 1000.0, FALSE) THEN 'not_low_value' END], x -> x IS NOT NULL), ','), '') AS failed_rules, coalesce(array_to_string(list_filter([CASE WHEN NOT coalesce(o_totalprice <= 300000.0, FALSE) THEN 'price_le_300k' END, CASE WHEN NOT coalesce(o_orderpriority IN ('1-URGENT', '2-HIGH', '3-MEDIUM', '4-NOT SPECIFIED', '5-LOW'), FALSE) THEN 'priority_known' END, CASE WHEN NOT coalesce(o_totalprice >= 1000.0, FALSE) THEN 'not_low_value' END], x -> x IS NOT NULL), ','), '') = '' AS is_valid FROM orders ORDER BY o_orderkey""",
-    "etl_rename_normalize" ->
+    Query("etl_rename_normalize", Corpus,
       """SELECT event_id, user_id AS clientId, CASE WHEN event_type IN ('click','view','purchase') THEN event_type WHEN event_type = 'error' THEN 'pending' ELSE 'in-progress' END AS event_type FROM events ORDER BY event_id""",
-    "etl_jsonlines" ->
+      (s, d) =>
+        renameNormalize(
+          Tables.events(s, d).select("event_id", "user_id", "event_type"),
+          renames = Map("user_id" -> "clientId"),
+          statusCol = "event_type",
+          domain = Seq("click", "view", "purchase"),
+          remap = Map("error" -> "pending"),
+          fallback = "in-progress")
+          .orderBy("event_id")),
+
+    Query("etl_jsonlines", Corpus,
       """SELECT event_id, event_type, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events ORDER BY event_id""",
-    // positional UNION ALL: columns in (key, custkey, status, price,
-    // version, deleted) order everywhere; window order mirrors Spark's
-    // (version DESC, deleted DESC = tombstone-wins, rest ASC NULLS FIRST)
-    "merge_upsert" ->
+      (s, d) =>
+        parseJsonColumn(
+          Tables.events(s, d).select("event_id", "event_type", "props"),
+          "props",
+          StructType(Seq(org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.LongType))))
+          .orderBy("event_id")),
+
+    // The reference's mutation path as a batch: base snapshot + a change
+    // batch of updates (%7: doubled price, status U), deletes (%13) and
+    // inserts (%11: new keys), compacted keep-latest. A key hit by both
+    // an update (v1) and a delete (v2) ends up deleted.
+    Query("merge_upsert", Corpus,
+      // positional UNION ALL: columns in (key, custkey, status, price,
+      // version, deleted) order everywhere; window order mirrors Spark's
+      // (version DESC, deleted DESC = tombstone-wins, rest ASC NULLS FIRST)
       """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders), allr AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 0::BIGINT AS version, false AS deleted FROM o UNION ALL SELECT o_orderkey, o_custkey, 'U', o_totalprice * 2, 1::BIGINT, false FROM o WHERE o_orderkey % 7 = 0 UNION ALL SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 2::BIGINT, true FROM o WHERE o_orderkey % 13 = 0 UNION ALL SELECT o_orderkey + 10000000, o_custkey, o_orderstatus, o_totalprice, 1::BIGINT, false FROM o WHERE o_orderkey % 11 = 0), r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY version DESC NULLS LAST, deleted DESC NULLS LAST, o_custkey NULLS FIRST, o_orderstatus NULLS FIRST, o_totalprice NULLS FIRST) AS rn FROM allr) SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, version FROM r WHERE rn = 1 AND NOT deleted ORDER BY o_orderkey""",
-    // same positional UNION ALL as merge_upsert; (key, version) is unique
-    // by construction so the lead() is deterministic without a tiebreak
-    "etl_scd2" ->
+      (s, d) => {
+        val o = Tables.orders(s, d)
+          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        val base = o.withColumn("version", lit(0L)).withColumn("deleted", lit(false))
+        val updates = o.filter(col("o_orderkey") % 7 === 0)
+          .withColumn("o_orderstatus", lit("U"))
+          .withColumn("o_totalprice", col("o_totalprice") * 2) // *2: exact in ieee754
+          .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
+        val deletes = o.filter(col("o_orderkey") % 13 === 0)
+          .withColumn("version", lit(2L)).withColumn("deleted", lit(true))
+        val inserts = o.filter(col("o_orderkey") % 11 === 0)
+          .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+          .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
+        mergeUpsert(base, updates.unionByName(deletes).unionByName(inserts),
+          key = "o_orderkey", version = "version", deleted = "deleted")
+          .orderBy("o_orderkey")
+      }),
+
+    // snapshot v2 = v1 minus short docs, every 7th doc normalized, plus
+    // 10 new arrivals — exercising removed/changed/added in one diff
+    Query("etl_snapshot_diff", Corpus,
+      // the same v1/v2 construction and hash-compare, stated relationally
+      """WITH v1 AS (SELECT doc_id, md5(text) AS old_hash FROM documents), v2 AS (SELECT doc_id, md5(CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END) AS new_hash FROM documents WHERE n_chars >= 50 UNION ALL SELECT doc_id + 1000000 AS doc_id, md5(text) AS new_hash FROM documents WHERE doc_id < 10) SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id, CASE WHEN v1.doc_id IS NULL THEN 'added' WHEN v2.doc_id IS NULL THEN 'removed' ELSE 'changed' END AS status, v1.old_hash, v2.new_hash FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id WHERE v1.doc_id IS NULL OR v2.doc_id IS NULL OR v1.old_hash != v2.new_hash ORDER BY doc_id""",
+      (s, d) => {
+        val docs = Tables.documents(s, d)
+        val v1 = docs.select("doc_id", "text")
+        val v2 = docs.filter(col("n_chars") >= 50)
+          .select(col("doc_id"),
+            when(col("doc_id") % 7 === 0, upper(col("text")))
+              .otherwise(col("text")).as("text"))
+          .unionByName(docs.filter(col("doc_id") < 10)
+            .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+        snapshotDiff(v1, v2, "doc_id", "text").orderBy("doc_id")
+      }),
+
+    // the merge_upsert change stream kept as SCD2 history: every version
+    // becomes a validity interval, tombstones included (a deleted row's
+    // current interval records the deletion)
+    Query("etl_scd2", Corpus,
+      // same positional UNION ALL as merge_upsert; (key, version) is unique
+      // by construction so the lead() is deterministic without a tiebreak
       """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders), allr AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 0::BIGINT AS version, false AS deleted FROM o UNION ALL SELECT o_orderkey, o_custkey, 'U', o_totalprice * 2, 1::BIGINT, false FROM o WHERE o_orderkey % 7 = 0 UNION ALL SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, 2::BIGINT, true FROM o WHERE o_orderkey % 13 = 0 UNION ALL SELECT o_orderkey + 10000000, o_custkey, o_orderstatus, o_totalprice, 1::BIGINT, false FROM o WHERE o_orderkey % 11 = 0) SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, version, deleted, lead(version) OVER (PARTITION BY o_orderkey ORDER BY version) AS valid_to, lead(version) OVER (PARTITION BY o_orderkey ORDER BY version) IS NULL AS is_current FROM allr ORDER BY o_orderkey, version""",
-    "etl_pipeline_e2e" ->
-      """WITH n AS (SELECT event_id, user_id AS clientId, CASE WHEN event_type IN ('click','view','purchase') THEN event_type WHEN event_type = 'error' THEN 'pending' ELSE 'in-progress' END AS event_type, value FROM events), r AS (SELECT clientId, value, row_number() OVER (PARTITION BY clientId ORDER BY event_id NULLS FIRST, value NULLS FIRST, event_type NULLS FIRST) AS rn FROM n), sets AS (SELECT clientId, array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_type_set FROM n GROUP BY clientId), m AS (SELECT r.clientId, r.value, s.event_type_set FROM r JOIN sets s USING (clientId) WHERE rn = 1), p AS (SELECT clientId % 20 AS pk, to_json(struct_pack(clientId := clientId, value := value, event_type_set := event_type_set))::VARCHAR AS payload FROM m), b AS (SELECT pk, payload, (row_number() OVER (PARTITION BY pk ORDER BY payload) - 1) // 25 AS batch_seq FROM p) SELECT pk, batch_seq, count(*) AS n_items, md5(string_agg(payload, chr(10) ORDER BY payload)) AS digest FROM b GROUP BY pk, batch_seq ORDER BY pk, batch_seq"""
+      (s, d) => {
+        val o = Tables.orders(s, d)
+          .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        val base = o.withColumn("version", lit(0L)).withColumn("deleted", lit(false))
+        val updates = o.filter(col("o_orderkey") % 7 === 0)
+          .withColumn("o_orderstatus", lit("U"))
+          .withColumn("o_totalprice", col("o_totalprice") * 2)
+          .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
+        val deletes = o.filter(col("o_orderkey") % 13 === 0)
+          .withColumn("version", lit(2L)).withColumn("deleted", lit(true))
+        val inserts = o.filter(col("o_orderkey") % 11 === 0)
+          .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+          .withColumn("version", lit(1L)).withColumn("deleted", lit(false))
+        scd2(base.unionByName(updates).unionByName(deletes).unionByName(inserts),
+          key = "o_orderkey", version = "version")
+          .orderBy("o_orderkey", "version")
+      }),
+
+    // The reference's ETL pipeline end-to-end (apis/etl.ts): JSON-lines
+    // batch ingest -> per-entity transform -> dedup-merge -> KV batch
+    // write shape. One declarative plan, one oracle row.
+    Query("etl_pipeline_e2e", Answer,
+      """WITH n AS (SELECT event_id, user_id AS clientId, CASE WHEN event_type IN ('click','view','purchase') THEN event_type WHEN event_type = 'error' THEN 'pending' ELSE 'in-progress' END AS event_type, value FROM events), r AS (SELECT clientId, value, row_number() OVER (PARTITION BY clientId ORDER BY event_id NULLS FIRST, value NULLS FIRST, event_type NULLS FIRST) AS rn FROM n), sets AS (SELECT clientId, array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_type_set FROM n GROUP BY clientId), m AS (SELECT r.clientId, r.value, s.event_type_set FROM r JOIN sets s USING (clientId) WHERE rn = 1), p AS (SELECT clientId % 20 AS pk, to_json(struct_pack(clientId := clientId, value := value, event_type_set := event_type_set))::VARCHAR AS payload FROM m), b AS (SELECT pk, payload, (row_number() OVER (PARTITION BY pk ORDER BY payload) - 1) // 25 AS batch_seq FROM p) SELECT pk, batch_seq, count(*) AS n_items, md5(string_agg(payload, chr(10) ORDER BY payload)) AS digest FROM b GROUP BY pk, batch_seq ORDER BY pk, batch_seq""",
+      (s, d) => {
+        val scratch = "/tmp/graft_io/jsonl_e2e"
+        val src = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
+        graft.sources.Io.writeJsonLines(src, scratch)
+        val ingested = graft.sources.Io.readJsonLines(s, scratch, StructType(src.schema.fields))
+        val normed = renameNormalize(ingested,
+          renames = Map("user_id" -> "clientId"), statusCol = "event_type",
+          domain = Seq("click", "view", "purchase"),
+          remap = Map("error" -> "pending"), fallback = "in-progress")
+        val merged = dedupMerge(normed, key = "clientId", orderCol = "event_id",
+          scalarCols = Seq("value"), setCol = "event_type")
+        graft.sources.Io.kvBatches(merged,
+          key = pmod(col("clientId"), lit(20)),
+          payload = to_json(struct(col("clientId"), col("value"), col("event_type_set"))),
+          batchSize = 25)
+          .orderBy("pk", "batch_seq")
+      })
   )
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 
 /** Events / time-series: the reference's append-only event log and the
@@ -876,251 +878,6 @@ object Events {
 
   // ---------------------------------------------------------------- queries
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_heatmap" -> ((s, d) =>
-      heatmap(Tables.events(s, d), "ts", "value")
-        .orderBy("dow", "hod")),
-
-    // DAU + trailing-7-day WAU (exact rolling distinct, ×7 bounded)
-    "events_active_users" -> ((s, d) =>
-      activeUsers(Tables.events(s, d), "user_id", "ts", windowDays = 7)
-        .orderBy("day")),
-
-    // DAU/WAU/MAU + DAU:MAU ratio (the stickiness panel)
-    "events_stickiness" -> ((s, d) =>
-      stickiness(Tables.events(s, d), "user_id", "ts")
-        .orderBy("day")),
-
-    // lifetime-count power-user pyramid (log2 buckets)
-    "events_engagement" -> ((s, d) =>
-      engagement(Tables.events(s, d), "user_id")
-        .orderBy("bucket_lo")),
-
-    // trailing 1-hour RANGE frame per user (rate-limit audit)
-    "events_rolling_1h" -> ((s, d) =>
-      rollingRange(Tables.events(s, d), "event_id", "user_id", "ts", "value",
-        backUs = 3600L * 1000000L)
-        .orderBy("event_id")),
-
-    "events_paths" -> ((s, d) =>
-      topPaths(Tables.events(s, d), "user_id", "event_type", "ts", "event_id",
-        k = 5, top = 50)),
-
-    // sketches graded in-query against exact values: flags + exact
-    // values are the output, so the row is oracle-checkable even though
-    // the sketch values themselves are engine-specific
-    "events_approx_stats" -> ((s, d) =>
-      approxStatsChecked(Tables.events(s, d), "event_type", "user_id", "value")
-        .orderBy("event_type")),
-
-    // week-range distinct users served from the day-grain sketch table
-    // (the raw log appears only in the grading pass)
-    "events_sketch_rollup" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      sketchRollupChecked(sketchDaily(ev, "ts", "event_type", "user_id"),
-        ev, "ts", "event_type", "user_id")
-        .orderBy("week", "event_type")
-    }),
-
-    // INCREMENTAL maintenance of the sketch table (the dedup_incremental /
-    // sim_ivfpq_append pattern for pre-aggregations): days before the cut
-    // are the standing table; the new day-batch is sketched ALONE and
-    // unioned in — register-wise max is associative + idempotent, so the
-    // merged rollup is row-identical to a from-scratch build (same oracle)
-    "events_sketch_maintain" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cut = lit("2024-01-24").cast("date")
-      val standing = sketchDaily(ev.filter(to_date(col("ts")) < cut),
-        "ts", "event_type", "user_id")
-      val batch = sketchDaily(ev.filter(to_date(col("ts")) >= cut),
-        "ts", "event_type", "user_id")
-      sketchRollupChecked(standing.unionByName(batch),
-        ev, "ts", "event_type", "user_id")
-        .orderBy("week", "event_type")
-    }),
-
-    // the EXACT half of the monitoring stats (count / extrema per type) —
-    // oracle-checked, so only approxStats' sketch columns stay spec-bounded.
-    // min/max/count are order-free (no summation portability hazards) and
-    // map-side combinable: one hash agg, one narrow shuffle at any scale.
-    "events_exact_stats" -> ((s, d) =>
-      Tables.events(s, d).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"),
-          min(col("ts")).as("min_ts"),
-          max(col("ts")).as("max_ts"))
-        .orderBy("event_type")),
-
-    "events_distinct_users" -> ((s, d) =>
-      distinctCountPerKey(Tables.events(s, d), "event_type", "user_id", "n_users")
-        .orderBy("event_type")),
-
-    "events_recent" -> ((s, d) =>
-      recent(Tables.events(s, d), col("event_type") === "error" && col("user_id") < 50,
-        "ts", "event_id", 100)
-        .select("event_id", "ts", "user_id", "event_type", "value")),
-
-    "events_window_agg" -> ((s, d) =>
-      windowAgg(Tables.events(s, d), "ts", "hour", Seq("event_type"))
-        .orderBy("window_start", "event_type")),
-
-    // hourly candles per event type: open/high/low/close/volume
-    "events_ohlc" -> ((s, d) =>
-      ohlc(Tables.events(s, d), "ts", "event_id", "value", "hour",
-        Seq("event_type"))
-        .orderBy("bucket", "event_type")),
-
-    // 10-minute windows every 5 minutes: each event lands in 2 windows
-    "events_sliding_window" -> ((s, d) =>
-      slidingWindowAgg(Tables.events(s, d), "ts", durMin = 10, slideMin = 5)
-        .orderBy("w_start")),
-
-    "events_cumulative_users" -> ((s, d) =>
-      cumulativeUsers(Tables.events(s, d), "ts", "user_id")
-        .orderBy("day")),
-
-    "events_sessionize" -> ((s, d) =>
-      sessionStats(Tables.events(s, d), key = "user_id", ts = "ts",
-        gapSec = 3600, tiebreak = "event_id")
-        .orderBy("user_id", "session_seq")),
-
-    // point-in-time lookup: each event sees the user's latest purchase at
-    // or before it. No pre-dedup shuffle needed: asofJoin's (ts, tag,
-    // payload) sort makes same-timestamp right rows resolve to the max
-    // payload struct — exactly the oracle's (event_id DESC, value DESC)
-    // row_number pick.
-    "events_asof_join" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      asofJoin(e.select("event_id", "user_id", "ts"), purchases,
-        key = "user_id", leftTs = "ts", rightTs = "ts",
-        payload = Seq("purchase_id", "purchase_value"))
-        .select("event_id", "user_id", "purchase_id", "purchase_value")
-        .orderBy("event_id")
-    }),
-
-    // interval containment with no equi key: every event falling inside
-    // any of users 0-2's sessions ("incident windows"), via bin equi-join
-    "events_range_join" -> ((s, d) => {
-      val e = Tables.events(s, d)
-      val windows = sessionStats(e.filter(col("user_id") < 3), key = "user_id",
-        ts = "ts", gapSec = 3600, tiebreak = "event_id")
-        .select(col("user_id").as("w_user"), col("session_seq").as("w_seq"),
-          col("session_start"), col("session_end"))
-      rangeJoin(e.select("event_id", "ts"), "ts", windows,
-        "session_start", "session_end", binSeconds = 3600)
-        .select("event_id", "w_user", "w_seq")
-        .orderBy("event_id", "w_user", "w_seq")
-    }),
-
-    // how far each user progressed through view -> click -> purchase,
-    // stages counted only strictly after the previous stage's first hit
-    "events_funnel" -> ((s, d) =>
-      funnel(Tables.events(s, d), user = "user_id", typeCol = "event_type",
-        tsCol = "ts", stages = Seq("view", "click", "purchase"))
-        .select("user_id", "funnel_stage", "ts_view", "ts_click", "ts_purchase")
-        .orderBy("user_id")),
-
-    "events_retention" -> ((s, d) =>
-      retention(Tables.events(s, d), user = "user_id", tsCol = "ts")
-        .orderBy("cohort_day", "day_offset")),
-
-    // incremental twin of events_retention: three OUT-OF-ORDER delta
-    // batches (event_id % 3 — late batches carry earlier days, so
-    // cohort minima genuinely move) fold into the compacted
-    // (days, cohorts) state; the emitted read must equal the oracle's
-    // from-scratch rebuild over ALL events — the aggMaintain contract
-    "events_retention_maintain" -> ((s, d) => {
-      val ev = Tables.events(s, d).select("event_id", "user_id", "ts")
-      def batch(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
-      var st = retentionStateOf(batch(0), "user_id", "ts")
-      (1 to 2).foreach { i =>
-        // each fold references the standing state twice (anti-join +
-        // union) — materialize per round, the components-loop contract
-        st = (graft.CacheScope.register(st._1.localCheckpoint(true)),
-          graft.CacheScope.register(st._2.localCheckpoint(true)))
-        st = retentionMaintain(st._1, st._2, batch(i), "user_id", "ts")
-      }
-      retentionFromState(st._1, st._2, "user_id")
-        .orderBy("cohort_day", "day_offset")
-    }),
-
-    "events_anomaly" -> ((s, d) =>
-      anomalies(Tables.events(s, d).select("event_id", "event_type", "value"),
-        key = "event_type", v = "value", zMax = 2.5)
-        .select("event_id", "event_type", "value", "z")
-        .orderBy("event_id")),
-
-    // daily resample per user with forward fill across silent days
-    "events_gap_fill" -> ((s, d) =>
-      gapFill(Tables.events(s, d), key = "user_id", tsCol = "ts", v = "value",
-        granularity = "day")
-        .select("user_id", "bucket", "value_filled", "filled")
-        .orderBy("user_id", "bucket")),
-
-    "events_transitions" -> ((s, d) =>
-      transitions(Tables.events(s, d), key = "user_id", typeCol = "event_type",
-        tsCol = "ts", tiebreak = "event_id")
-        .orderBy("from_type", "to_type")),
-
-    // the xstate-shape automation replay: declared transition table,
-    // per-user fold in event order → final state + transitions taken
-    "events_state_machine" -> ((s, d) =>
-      stateMachineReplay(Tables.events(s, d), key = "user_id",
-        typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
-        initial = "idle", table = intentMachine)
-        .select("user_id", "n_events", "n_transitions", "final_state")
-        .orderBy("user_id")),
-
-    // the hot-key-safe replay: per-(user, day) transfer-map folds
-    // stitched at chunk grain — identical answer, bounded buffers
-    "events_state_machine_chunked" -> ((s, d) =>
-      stateMachineReplayChunked(Tables.events(s, d), key = "user_id",
-        typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
-        initial = "idle", table = intentMachine)
-        .select("user_id", "n_events", "n_transitions", "final_state")
-        .orderBy("user_id")),
-
-    // which declared rules actually fire, corpus-wide (answer-sized)
-    "events_state_rule_counts" -> ((s, d) =>
-      stateMachineRuleCounts(
-        stateMachineReplay(Tables.events(s, d), key = "user_id",
-          typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
-          initial = "idle", table = intentMachine))
-        .orderBy("from_state", "event_type", "to_state")),
-
-    // per-type value histogram, 10 bins of width 50 (data spans 0..~500)
-    "events_histogram" -> ((s, d) =>
-      histogram(Tables.events(s, d).select("event_type", "value"),
-        key = "event_type", v = "value", width = 50.0, bins = 10)
-        .orderBy("event_type", "bin")),
-
-    // p90 of each user's trailing 10 readings — the live gauge shape
-    "events_rolling_p90" -> ((s, d) =>
-      rollingPercentile(Tables.events(s, d)
-          .select("user_id", "event_id", "ts", "value"),
-        key = "user_id", tsCol = "ts", tiebreak = "event_id",
-        v = "value", frameRows = 10, p = 0.9)
-        .select("event_id", "user_id", "value", "frame_n", "roll_p")
-        .orderBy("event_id")),
-
-    // top-3 trending event types per day
-    "events_windowed_topk" -> ((s, d) =>
-      windowedTopK(Tables.events(s, d), ts = "ts", granularity = "day",
-        typeCol = "event_type", k = 3)
-        .orderBy("bucket", "rank")),
-
-    // every view converting to a purchase within an hour, per user
-    "events_pattern" -> ((s, d) =>
-      patternWithin(Tables.events(s, d), key = "user_id", typeCol = "event_type",
-        tsCol = "ts", tiebreak = "event_id",
-        a = "view", b = "purchase", withinSec = 3600L)
-        .orderBy("user_id", "event_id"))
-  )
-
   /** The [[intentMachine]] as a VALUES relation + the per-user event
     * ordering shared by both state-machine oracles: DuckDB replays the
     * fold as a recursive CTE stepping one event per iteration (depth =
@@ -1132,8 +889,277 @@ object Events {
       |n AS (SELECT user_id, max(rn) AS ne FROM e GROUP BY user_id),
       |tr(fs, et, tos) AS (VALUES ('idle','signup','browsing'), ('idle','view','browsing'), ('browsing','click','engaged'), ('engaged','purchase','converted'), ('converted','view','browsing'), ('browsing','error','idle'), ('engaged','error','idle'), ('converted','error','idle'))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "events_state_machine" ->
+  val registry: Seq[Query] = Seq(
+    Query("events_heatmap", Answer,
+      """SELECT dayofweek(ts)::BIGINT AS dow, hour(ts)::BIGINT AS hod, count(*) AS n, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM events GROUP BY dow, hod ORDER BY dow, hod""",
+      (s, d) =>
+        heatmap(Tables.events(s, d), "ts", "value")
+          .orderBy("dow", "hod")),
+
+    // DAU + trailing-7-day WAU (exact rolling distinct, ×7 bounded)
+    Query("events_active_users", Answer,
+      // same ×7 contribution construction; DATE + integer adds days
+      """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id AS u FROM events), dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day), c AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 7)) AS i))), wau AS (SELECT wday, count(*) AS wau FROM c GROUP BY wday) SELECT day, dau, wau FROM dau JOIN wau ON day = wday ORDER BY day""",
+      (s, d) =>
+        activeUsers(Tables.events(s, d), "user_id", "ts", windowDays = 7)
+          .orderBy("day")),
+
+    // DAU/WAU/MAU + DAU:MAU ratio (the stickiness panel)
+    Query("events_stickiness", Answer,
+      {
+        val ratio = Stable.sqlRatioRounded("dau", "mau", 4)
+        """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id AS u FROM events), dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day), c7 AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 7)) AS i))), wau AS (SELECT wday, count(*) AS wau FROM c7 GROUP BY wday), c28 AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 28)) AS i))), mau AS (SELECT wday, count(*) AS mau FROM c28 GROUP BY wday) SELECT day, dau, wau, mau, """ +
+          ratio +
+          """ AS stickiness FROM dau JOIN wau ON day = wau.wday JOIN mau ON day = mau.wday ORDER BY day"""
+      },
+      (s, d) =>
+        stickiness(Tables.events(s, d), "user_id", "ts")
+          .orderBy("day")),
+
+    // lifetime-count power-user pyramid (log2 buckets)
+    Query("events_engagement", Answer,
+      // 2^floor(log2(n)) = 1 << (significant bits - 1): exact bit
+      // arithmetic, mirroring the CASE chain (bin() has no leading zeros)
+      """WITH pu AS (SELECT user_id, count(*) AS n FROM events GROUP BY user_id), b AS (SELECT (1::BIGINT << (length(bin(n)) - 1))::BIGINT AS bucket_lo, n FROM pu) SELECT bucket_lo, count(*) AS n_users, sum(n)::BIGINT AS total_events FROM b GROUP BY bucket_lo ORDER BY bucket_lo""",
+      (s, d) =>
+        engagement(Tables.events(s, d), "user_id")
+          .orderBy("bucket_lo")),
+
+    // trailing 1-hour RANGE frame per user (rate-limit audit)
+    Query("events_rolling_1h", Corpus,
+      // RANGE frame over epoch micros: tie rows (same ts) are all peers in
+      // both engines, so no tiebreak column is needed or wanted
+      """SELECT event_id, user_id, count(*) OVER w AS n_trail, round(sum(CAST(value AS DECIMAL(20,6))) OVER w, 2)::DOUBLE AS sum_trail FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) ORDER BY event_id""",
+      (s, d) =>
+        rollingRange(Tables.events(s, d), "event_id", "user_id", "ts", "value",
+          backUs = 3600L * 1000000L)
+          .orderBy("event_id")),
+
+    Query("events_paths", Answer,
+      """WITH r AS (SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn FROM events), p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path FROM r WHERE rn <= 5 GROUP BY user_id) SELECT path, count(*) AS n_users FROM p GROUP BY path ORDER BY n_users DESC, path ASC LIMIT 50""",
+      (s, d) =>
+        topPaths(Tables.events(s, d), "user_id", "event_type", "ts", "event_id",
+          k = 5, top = 50)),
+
+    // sketches graded in-query against exact values: flags + exact
+    // values are the output, so the row is oracle-checkable even though
+    // the sketch values themselves are engine-specific
+    Query("events_approx_stats", Answer,
+      // the exact values are recomputed in SQL; the flags assert the
+      // engine-side sketches sat inside their documented bounds — any
+      // sketch drift flips a flag and fails the hash
+      """SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok, TRUE AS p50_ok, TRUE AS p95_ok FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) =>
+        approxStatsChecked(Tables.events(s, d), "event_type", "user_id", "value")
+          .orderBy("event_type")),
+
+    // week-range distinct users served from the day-grain sketch table
+    // (the raw log appears only in the grading pass)
+    Query("events_sketch_rollup", Answer,
+      // exact values recomputed in SQL; users_ok asserts the sketch-union
+      // estimate sat inside its bound (any drift flips the flag → hash fail)
+      """SELECT date_trunc('week', ts)::DATE AS week, event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok FROM events GROUP BY 1, 2 ORDER BY week, event_type""",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        sketchRollupChecked(sketchDaily(ev, "ts", "event_type", "user_id"),
+          ev, "ts", "event_type", "user_id")
+          .orderBy("week", "event_type")
+      }),
+
+    // INCREMENTAL maintenance of the sketch table (the dedup_incremental /
+    // sim_ivfpq_append pattern for pre-aggregations): days before the cut
+    // are the standing table; the new day-batch is sketched ALONE and
+    // unioned in — register-wise max is associative + idempotent, so the
+    // merged rollup is row-identical to a from-scratch build (same oracle)
+    Query("events_sketch_maintain", Answer,
+      // incremental merge must be row-identical to the from-scratch build
+      """SELECT date_trunc('week', ts)::DATE AS week, event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok FROM events GROUP BY 1, 2 ORDER BY week, event_type""",
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        val cut = lit("2024-01-24").cast("date")
+        val standing = sketchDaily(ev.filter(to_date(col("ts")) < cut),
+          "ts", "event_type", "user_id")
+        val batch = sketchDaily(ev.filter(to_date(col("ts")) >= cut),
+          "ts", "event_type", "user_id")
+        sketchRollupChecked(standing.unionByName(batch),
+          ev, "ts", "event_type", "user_id")
+          .orderBy("week", "event_type")
+      }),
+
+    // the EXACT half of the monitoring stats (count / extrema per type) —
+    // oracle-checked, so only approxStats' sketch columns stay spec-bounded.
+    // min/max/count are order-free (no summation portability hazards) and
+    // map-side combinable: one hash agg, one narrow shuffle at any scale.
+    Query("events_exact_stats", Answer,
+      """SELECT event_type, count(*) AS n_events, min(value) AS min_value, max(value) AS max_value, min(ts) AS min_ts, max(ts) AS max_ts FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) =>
+        Tables.events(s, d).groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"),
+            min(col("value")).as("min_value"),
+            max(col("value")).as("max_value"),
+            min(col("ts")).as("min_ts"),
+            max(col("ts")).as("max_ts"))
+          .orderBy("event_type")),
+
+    Query("events_distinct_users", Answer,
+      """SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY event_type ORDER BY event_type""",
+      (s, d) =>
+        distinctCountPerKey(Tables.events(s, d), "event_type", "user_id", "n_users")
+          .orderBy("event_type")),
+
+    Query("events_recent", Answer,
+      """SELECT event_id, ts, user_id, event_type, value FROM events WHERE event_type = 'error' AND user_id < 50 ORDER BY ts DESC, event_id ASC LIMIT 100""",
+      (s, d) =>
+        recent(Tables.events(s, d), col("event_type") === "error" && col("user_id") < 50,
+          "ts", "event_id", 100)
+          .select("event_id", "ts", "user_id", "event_type", "value")),
+
+    Query("events_window_agg", Corpus,
+      s"""SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value, ${Stable.sqlAvgRounded("value", 4)} AS avg_value FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
+      (s, d) =>
+        windowAgg(Tables.events(s, d), "ts", "hour", Seq("event_type"))
+          .orderBy("window_start", "event_type")),
+
+    // hourly candles per event type: open/high/low/close/volume
+    Query("events_ohlc", Corpus,
+      // open/close via row_number over the same (ts, event_id) order the
+      // Spark struct-min/max encodes; (ts, event_id) unique → deterministic
+      """WITH b AS (SELECT date_trunc('hour', ts) AS bucket, event_type, ts, event_id, value FROM events), o AS (SELECT bucket, event_type, value AS open FROM (SELECT *, row_number() OVER (PARTITION BY bucket, event_type ORDER BY ts, event_id) AS rn FROM b) WHERE rn = 1), c AS (SELECT bucket, event_type, value AS close FROM (SELECT *, row_number() OVER (PARTITION BY bucket, event_type ORDER BY ts DESC, event_id DESC) AS rn FROM b) WHERE rn = 1), g AS (SELECT bucket, event_type, max(value) AS high, min(value) AS low, count(*)::BIGINT AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM b GROUP BY bucket, event_type) SELECT g.bucket, g.event_type, o.open, g.high, g.low, c.close, g.n_events, g.sum_value FROM g JOIN o USING (bucket, event_type) JOIN c USING (bucket, event_type) ORDER BY bucket, event_type""",
+      (s, d) =>
+        ohlc(Tables.events(s, d), "ts", "event_id", "value", "hour",
+          Seq("event_type"))
+          .orderBy("bucket", "event_type")),
+
+    // 10-minute windows every 5 minutes: each event lands in 2 windows
+    Query("events_sliding_window", Corpus,
+      // each event expands to its two covering window starts, then a plain agg
+      """WITH x AS (SELECT unnest([time_bucket(INTERVAL '5 minutes', ts), time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS w_start, value FROM events) SELECT w_start, w_start + INTERVAL '10 minutes' AS w_end, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM x GROUP BY w_start ORDER BY w_start""",
+      (s, d) =>
+        slidingWindowAgg(Tables.events(s, d), "ts", durMin = 10, slideMin = 5)
+          .orderBy("w_start")),
+
+    Query("events_cumulative_users", Answer,
+      """WITH f AS (SELECT user_id, min(date_trunc('day', ts)) AS day FROM events GROUP BY user_id), d AS (SELECT day, count(*) AS new_users FROM f GROUP BY day) SELECT day, new_users, CAST(sum(new_users) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users FROM d ORDER BY day""",
+      (s, d) =>
+        cumulativeUsers(Tables.events(s, d), "ts", "user_id")
+          .orderBy("day")),
+
+    Query("events_sessionize", Corpus,
+      """WITH flagged AS (SELECT user_id, ts, event_id, value, CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 3600000000 THEN 1 ELSE 0 END AS is_new FROM (SELECT user_id, ts, event_id, value, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)), sess AS (SELECT user_id, ts, value, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq FROM flagged) SELECT user_id, session_seq, min(ts) AS session_start, max(ts) AS session_end, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM sess GROUP BY user_id, session_seq ORDER BY user_id, session_seq""",
+      (s, d) =>
+        sessionStats(Tables.events(s, d), key = "user_id", ts = "ts",
+          gapSec = 3600, tiebreak = "event_id")
+          .orderBy("user_id", "session_seq")),
+
+    // point-in-time lookup: each event sees the user's latest purchase at
+    // or before it. No pre-dedup shuffle needed: asofJoin's (ts, tag,
+    // payload) sort makes same-timestamp right rows resolve to the max
+    // payload struct — exactly the oracle's (event_id DESC, value DESC)
+    // row_number pick.
+    Query("events_asof_join", Corpus,
+      // right side deduped per (user, ts) with the same whole-row max rule
+      // Spark's max(struct(event_id, value)) applies, so ASOF is unambiguous
+      """WITH r AS (SELECT user_id, ts, event_id AS purchase_id, value AS purchase_value FROM (SELECT *, row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC, value DESC) AS rn FROM events WHERE event_type = 'purchase') WHERE rn = 1), l AS (SELECT event_id, user_id, ts FROM events) SELECT l.event_id, l.user_id, r.purchase_id, r.purchase_value FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts ORDER BY l.event_id""",
+      (s, d) => {
+        val e = Tables.events(s, d)
+        val purchases = e.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("ts"),
+            col("event_id").as("purchase_id"), col("value").as("purchase_value"))
+        asofJoin(e.select("event_id", "user_id", "ts"), purchases,
+          key = "user_id", leftTs = "ts", rightTs = "ts",
+          payload = Seq("purchase_id", "purchase_value"))
+          .select("event_id", "user_id", "purchase_id", "purchase_value")
+          .orderBy("event_id")
+      }),
+
+    // interval containment with no equi key: every event falling inside
+    // any of users 0-2's sessions ("incident windows"), via bin equi-join
+    Query("events_range_join", Corpus,
+      """WITH f AS (SELECT user_id, ts, event_id, CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 3600000000 THEN 1 ELSE 0 END AS is_new FROM (SELECT user_id, ts, event_id, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events WHERE user_id < 3)), sx AS (SELECT user_id, ts, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq FROM f), w AS (SELECT user_id AS w_user, session_seq AS w_seq, min(ts) AS session_start, max(ts) AS session_end FROM sx GROUP BY 1, 2) SELECT e.event_id, w.w_user, w.w_seq FROM events e JOIN w ON e.ts >= w.session_start AND e.ts <= w.session_end ORDER BY e.event_id, w.w_user, w.w_seq""",
+      (s, d) => {
+        val e = Tables.events(s, d)
+        val windows = sessionStats(e.filter(col("user_id") < 3), key = "user_id",
+          ts = "ts", gapSec = 3600, tiebreak = "event_id")
+          .select(col("user_id").as("w_user"), col("session_seq").as("w_seq"),
+            col("session_start"), col("session_end"))
+        rangeJoin(e.select("event_id", "ts"), "ts", windows,
+          "session_start", "session_end", binSeconds = 3600)
+          .select("event_id", "w_user", "w_seq")
+          .orderBy("event_id", "w_user", "w_seq")
+      }),
+
+    // how far each user progressed through view -> click -> purchase,
+    // stages counted only strictly after the previous stage's first hit
+    Query("events_funnel", Corpus,
+      // identical chained-window shape: each stage's first-hit min can
+      // reference the previous stage's column (unbounded frames, no ordering)
+      """WITH w1 AS (SELECT user_id, event_type, ts, min(CASE WHEN event_type = 'view' THEN ts END) OVER (PARTITION BY user_id) AS ts_view FROM events), w2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND ts > ts_view THEN ts END) OVER (PARTITION BY user_id) AS ts_click FROM w1), w3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > ts_click THEN ts END) OVER (PARTITION BY user_id) AS ts_purchase FROM w2) SELECT DISTINCT user_id, (1 + (ts_click IS NOT NULL)::BIGINT + (ts_purchase IS NOT NULL)::BIGINT) AS funnel_stage, ts_view, ts_click, ts_purchase FROM w3 WHERE ts_view IS NOT NULL ORDER BY user_id""",
+      (s, d) =>
+        funnel(Tables.events(s, d), user = "user_id", typeCol = "event_type",
+          tsCol = "ts", stages = Seq("view", "click", "purchase"))
+          .select("user_id", "funnel_stage", "ts_view", "ts_click", "ts_purchase")
+          .orderBy("user_id")),
+
+    Query("events_retention", Answer,
+      """WITH days AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events), cohorts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id) SELECT cohort_day, date_diff('day', cohort_day, day)::BIGINT AS day_offset, count(*) AS n_users FROM days JOIN cohorts USING (user_id) GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""",
+      (s, d) =>
+        retention(Tables.events(s, d), user = "user_id", tsCol = "ts")
+          .orderBy("cohort_day", "day_offset")),
+
+    // incremental twin of events_retention: three OUT-OF-ORDER delta
+    // batches (event_id % 3 — late batches carry earlier days, so
+    // cohort minima genuinely move) fold into the compacted
+    // (days, cohorts) state; the emitted read must equal the oracle's
+    // from-scratch rebuild over ALL events — the aggMaintain contract
+    Query("events_retention_maintain", Answer,
+      // the oracle IS the invariant (the aggMaintain precedent): a
+      // from-scratch rebuild over ALL events must equal the state folded
+      // incrementally from the three out-of-order delta batches
+      """WITH days AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events), cohorts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id) SELECT cohort_day, date_diff('day', cohort_day, day)::BIGINT AS day_offset, count(*) AS n_users FROM days JOIN cohorts USING (user_id) GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""",
+      (s, d) => {
+        val ev = Tables.events(s, d).select("event_id", "user_id", "ts")
+        def batch(i: Int) = ev.filter(pmod(col("event_id"), lit(3)) === i)
+        var st = retentionStateOf(batch(0), "user_id", "ts")
+        (1 to 2).foreach { i =>
+          // each fold references the standing state twice (anti-join +
+          // union) — materialize per round, the components-loop contract
+          st = (graft.CacheScope.register(st._1.localCheckpoint(true)),
+            graft.CacheScope.register(st._2.localCheckpoint(true)))
+          st = retentionMaintain(st._1, st._2, batch(i), "user_id", "ts")
+        }
+        retentionFromState(st._1, st._2, "user_id")
+          .orderBy("cohort_day", "day_offset")
+      }),
+
+    Query("events_anomaly", Corpus,
+      s"""WITH st AS (SELECT event_type, ${Stable.sqlAvgRounded("value", 4)} AS m, ${Stable.sqlStddevRounded("value", 4)} AS sd FROM events GROUP BY event_type) SELECT event_id, e.event_type, value, round((value - m) / sd, 4) AS z FROM events e JOIN st USING (event_type) WHERE sd > 0 AND abs((value - m) / sd) > 2.5 ORDER BY event_id""",
+      (s, d) =>
+        anomalies(Tables.events(s, d).select("event_id", "event_type", "value"),
+          key = "event_type", v = "value", zMax = 2.5)
+          .select("event_id", "event_type", "value", "z")
+          .orderBy("event_id")),
+
+    // daily resample per user with forward fill across silent days
+    Query("events_gap_fill", Corpus,
+      // same shape: bucketed obs -> per-key span -> generate_series grid ->
+      // left join -> IGNORE NULLS carry (Spark's last(ignoreNulls) twin)
+      s"""WITH obs AS (SELECT user_id, date_trunc('day', ts) AS bucket, ${Stable.sqlAvgRounded("value", 4)} AS obs_value FROM events GROUP BY user_id, date_trunc('day', ts)), span AS (SELECT user_id, min(bucket) AS a, max(bucket) AS b FROM obs GROUP BY user_id), grid AS (SELECT user_id, unnest(generate_series(a, b, INTERVAL 1 DAY)) AS bucket FROM span), j AS (SELECT g.user_id, g.bucket, o.obs_value FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.bucket = o.bucket) SELECT user_id, bucket, last_value(obs_value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled, (obs_value IS NULL) AS filled FROM j ORDER BY user_id, bucket""",
+      (s, d) =>
+        gapFill(Tables.events(s, d), key = "user_id", tsCol = "ts", v = "value",
+          granularity = "day")
+          .select("user_id", "bucket", "value_filled", "filled")
+          .orderBy("user_id", "bucket")),
+
+    Query("events_transitions", Answer,
+      """WITH t AS (SELECT event_type, lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type FROM events) SELECT event_type AS from_type, next_type AS to_type, count(*) AS n_transitions FROM t WHERE next_type IS NOT NULL GROUP BY from_type, to_type ORDER BY from_type, to_type""",
+      (s, d) =>
+        transitions(Tables.events(s, d), key = "user_id", typeCol = "event_type",
+          tsCol = "ts", tiebreak = "event_id")
+          .orderBy("from_type", "to_type")),
+
+    // the xstate-shape automation replay: declared transition table,
+    // per-user fold in event order → final state + transitions taken
+    Query("events_state_machine", Corpus,
       (s"WITH RECURSIVE $smCtes, " +
         """step(user_id, rn, st, ntr) AS (
           |  SELECT user_id, 0::BIGINT, 'idle', 0::BIGINT FROM n
@@ -1145,10 +1171,18 @@ object Events {
           |SELECT s.user_id AS user_id, n.ne AS n_events, s.ntr AS n_transitions, s.st AS final_state
           |FROM step s JOIN n ON s.user_id = n.user_id AND s.rn = n.ne
           |ORDER BY s.user_id""".stripMargin),
+      (s, d) =>
+        stateMachineReplay(Tables.events(s, d), key = "user_id",
+          typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
+          initial = "idle", table = intentMachine)
+          .select("user_id", "n_events", "n_transitions", "final_state")
+          .orderBy("user_id")),
 
-    // the chunked replay computes the IDENTICAL answer by construction
-    // (a state machine's fold is associative over chunks) — one oracle
-    "events_state_machine_chunked" ->
+    // the hot-key-safe replay: per-(user, day) transfer-map folds
+    // stitched at chunk grain — identical answer, bounded buffers
+    Query("events_state_machine_chunked", Corpus,
+      // the chunked replay computes the IDENTICAL answer by construction
+      // (a state machine's fold is associative over chunks) — one oracle
       (s"WITH RECURSIVE $smCtes, " +
         """step(user_id, rn, st, ntr) AS (
           |  SELECT user_id, 0::BIGINT, 'idle', 0::BIGINT FROM n
@@ -1160,8 +1194,15 @@ object Events {
           |SELECT s.user_id AS user_id, n.ne AS n_events, s.ntr AS n_transitions, s.st AS final_state
           |FROM step s JOIN n ON s.user_id = n.user_id AND s.rn = n.ne
           |ORDER BY s.user_id""".stripMargin),
+      (s, d) =>
+        stateMachineReplayChunked(Tables.events(s, d), key = "user_id",
+          typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
+          initial = "idle", table = intentMachine)
+          .select("user_id", "n_events", "n_transitions", "final_state")
+          .orderBy("user_id")),
 
-    "events_state_rule_counts" ->
+    // which declared rules actually fire, corpus-wide (answer-sized)
+    Query("events_state_rule_counts", Answer,
       (s"WITH RECURSIVE $smCtes, " +
         """step(user_id, rn, st, tf, te, tt) AS (
           |  SELECT user_id, 0::BIGINT, 'idle', NULL::VARCHAR, NULL::VARCHAR, NULL::VARCHAR FROM n
@@ -1175,95 +1216,51 @@ object Events {
           |SELECT tf AS from_state, te AS event_type, tt AS to_state, count(*) AS n_fired
           |FROM step WHERE tt IS NOT NULL
           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
-    "events_heatmap" ->
-      """SELECT dayofweek(ts)::BIGINT AS dow, hour(ts)::BIGINT AS hod, count(*) AS n, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM events GROUP BY dow, hod ORDER BY dow, hod""",
-    // 2^floor(log2(n)) = 1 << (significant bits - 1): exact bit
-    // arithmetic, mirroring the CASE chain (bin() has no leading zeros)
-    "events_engagement" ->
-      """WITH pu AS (SELECT user_id, count(*) AS n FROM events GROUP BY user_id), b AS (SELECT (1::BIGINT << (length(bin(n)) - 1))::BIGINT AS bucket_lo, n FROM pu) SELECT bucket_lo, count(*) AS n_users, sum(n)::BIGINT AS total_events FROM b GROUP BY bucket_lo ORDER BY bucket_lo""",
-    "events_stickiness" -> {
-      val ratio = Stable.sqlRatioRounded("dau", "mau", 4)
-      """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id AS u FROM events), dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day), c7 AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 7)) AS i))), wau AS (SELECT wday, count(*) AS wau FROM c7 GROUP BY wday), c28 AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 28)) AS i))), mau AS (SELECT wday, count(*) AS mau FROM c28 GROUP BY wday) SELECT day, dau, wau, mau, """ +
-        ratio +
-        """ AS stickiness FROM dau JOIN wau ON day = wau.wday JOIN mau ON day = mau.wday ORDER BY day"""
-    },
-    // same ×7 contribution construction; DATE + integer adds days
-    "events_active_users" ->
-      """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id AS u FROM events), dau AS (SELECT day, count(*) AS dau FROM ud GROUP BY day), c AS (SELECT DISTINCT wday, u FROM (SELECT day + i::INT AS wday, u FROM ud, (SELECT unnest(range(0, 7)) AS i))), wau AS (SELECT wday, count(*) AS wau FROM c GROUP BY wday) SELECT day, dau, wau FROM dau JOIN wau ON day = wday ORDER BY day""",
-    // RANGE frame over epoch micros: tie rows (same ts) are all peers in
-    // both engines, so no tiebreak column is needed or wanted
-    "events_rolling_1h" ->
-      """SELECT event_id, user_id, count(*) OVER w AS n_trail, round(sum(CAST(value AS DECIMAL(20,6))) OVER w, 2)::DOUBLE AS sum_trail FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) ORDER BY event_id""",
-    "events_paths" ->
-      """WITH r AS (SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn FROM events), p AS (SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path FROM r WHERE rn <= 5 GROUP BY user_id) SELECT path, count(*) AS n_users FROM p GROUP BY path ORDER BY n_users DESC, path ASC LIMIT 50""",
-    // floor(double/width) is the same IEEE op both engines; counts exact
-    "events_histogram" ->
-      """SELECT event_type, CAST(least(greatest(floor(value / 50.0), 0), 9) AS BIGINT) AS bin, count(*) AS n FROM events GROUP BY event_type, bin ORDER BY event_type, bin""",
-    "events_exact_stats" ->
-      """SELECT event_type, count(*) AS n_events, min(value) AS min_value, max(value) AS max_value, min(ts) AS min_ts, max(ts) AS max_ts FROM events GROUP BY event_type ORDER BY event_type""",
-    // the exact values are recomputed in SQL; the flags assert the
-    // engine-side sketches sat inside their documented bounds — any
-    // sketch drift flips a flag and fails the hash
-    "events_approx_stats" ->
-      """SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok, TRUE AS p50_ok, TRUE AS p95_ok FROM events GROUP BY event_type ORDER BY event_type""",
-    // exact values recomputed in SQL; users_ok asserts the sketch-union
-    // estimate sat inside its bound (any drift flips the flag → hash fail)
-    "events_sketch_rollup" ->
-      """SELECT date_trunc('week', ts)::DATE AS week, event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok FROM events GROUP BY 1, 2 ORDER BY week, event_type""",
-    // incremental merge must be row-identical to the from-scratch build
-    "events_sketch_maintain" ->
-      """SELECT date_trunc('week', ts)::DATE AS week, event_type, count(DISTINCT user_id)::BIGINT AS exact_users, count(*)::BIGINT AS n_events, TRUE AS users_ok FROM events GROUP BY 1, 2 ORDER BY week, event_type""",
-    "events_distinct_users" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users FROM events GROUP BY event_type ORDER BY event_type""",
-    "events_recent" ->
-      """SELECT event_id, ts, user_id, event_type, value FROM events WHERE event_type = 'error' AND user_id < 50 ORDER BY ts DESC, event_id ASC LIMIT 100""",
-    "events_window_agg" ->
-      s"""SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value, ${Stable.sqlAvgRounded("value", 4)} AS avg_value FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
-    // open/close via row_number over the same (ts, event_id) order the
-    // Spark struct-min/max encodes; (ts, event_id) unique → deterministic
-    "events_ohlc" ->
-      """WITH b AS (SELECT date_trunc('hour', ts) AS bucket, event_type, ts, event_id, value FROM events), o AS (SELECT bucket, event_type, value AS open FROM (SELECT *, row_number() OVER (PARTITION BY bucket, event_type ORDER BY ts, event_id) AS rn FROM b) WHERE rn = 1), c AS (SELECT bucket, event_type, value AS close FROM (SELECT *, row_number() OVER (PARTITION BY bucket, event_type ORDER BY ts DESC, event_id DESC) AS rn FROM b) WHERE rn = 1), g AS (SELECT bucket, event_type, max(value) AS high, min(value) AS low, count(*)::BIGINT AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM b GROUP BY bucket, event_type) SELECT g.bucket, g.event_type, o.open, g.high, g.low, c.close, g.n_events, g.sum_value FROM g JOIN o USING (bucket, event_type) JOIN c USING (bucket, event_type) ORDER BY bucket, event_type""",
-    // each event expands to its two covering window starts, then a plain agg
-    "events_sliding_window" ->
-      """WITH x AS (SELECT unnest([time_bucket(INTERVAL '5 minutes', ts), time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes']) AS w_start, value FROM events) SELECT w_start, w_start + INTERVAL '10 minutes' AS w_end, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM x GROUP BY w_start ORDER BY w_start""",
-    "events_cumulative_users" ->
-      """WITH f AS (SELECT user_id, min(date_trunc('day', ts)) AS day FROM events GROUP BY user_id), d AS (SELECT day, count(*) AS new_users FROM f GROUP BY day) SELECT day, new_users, CAST(sum(new_users) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users FROM d ORDER BY day""",
-    "events_sessionize" ->
-      """WITH flagged AS (SELECT user_id, ts, event_id, value, CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 3600000000 THEN 1 ELSE 0 END AS is_new FROM (SELECT user_id, ts, event_id, value, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events)), sess AS (SELECT user_id, ts, value, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq FROM flagged) SELECT user_id, session_seq, min(ts) AS session_start, max(ts) AS session_end, count(*) AS n_events, round(sum(CAST(value AS DECIMAL(20,6))), 2)::DOUBLE AS sum_value FROM sess GROUP BY user_id, session_seq ORDER BY user_id, session_seq""",
-    // right side deduped per (user, ts) with the same whole-row max rule
-    // Spark's max(struct(event_id, value)) applies, so ASOF is unambiguous
-    "events_asof_join" ->
-      """WITH r AS (SELECT user_id, ts, event_id AS purchase_id, value AS purchase_value FROM (SELECT *, row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC, value DESC) AS rn FROM events WHERE event_type = 'purchase') WHERE rn = 1), l AS (SELECT event_id, user_id, ts FROM events) SELECT l.event_id, l.user_id, r.purchase_id, r.purchase_value FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts ORDER BY l.event_id""",
-    "events_range_join" ->
-      """WITH f AS (SELECT user_id, ts, event_id, CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 3600000000 THEN 1 ELSE 0 END AS is_new FROM (SELECT user_id, ts, event_id, lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events WHERE user_id < 3)), sx AS (SELECT user_id, ts, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq FROM f), w AS (SELECT user_id AS w_user, session_seq AS w_seq, min(ts) AS session_start, max(ts) AS session_end FROM sx GROUP BY 1, 2) SELECT e.event_id, w.w_user, w.w_seq FROM events e JOIN w ON e.ts >= w.session_start AND e.ts <= w.session_end ORDER BY e.event_id, w.w_user, w.w_seq""",
-    "events_retention" ->
-      """WITH days AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events), cohorts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id) SELECT cohort_day, date_diff('day', cohort_day, day)::BIGINT AS day_offset, count(*) AS n_users FROM days JOIN cohorts USING (user_id) GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""",
+      (s, d) =>
+        stateMachineRuleCounts(
+          stateMachineReplay(Tables.events(s, d), key = "user_id",
+            typeCol = "event_type", tsCol = "ts", tiebreak = "event_id",
+            initial = "idle", table = intentMachine))
+          .orderBy("from_state", "event_type", "to_state")),
 
-    // the oracle IS the invariant (the aggMaintain precedent): a
-    // from-scratch rebuild over ALL events must equal the state folded
-    // incrementally from the three out-of-order delta batches
-    "events_retention_maintain" ->
-      """WITH days AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events), cohorts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id) SELECT cohort_day, date_diff('day', cohort_day, day)::BIGINT AS day_offset, count(*) AS n_users FROM days JOIN cohorts USING (user_id) GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""",
-    "events_anomaly" ->
-      s"""WITH st AS (SELECT event_type, ${Stable.sqlAvgRounded("value", 4)} AS m, ${Stable.sqlStddevRounded("value", 4)} AS sd FROM events GROUP BY event_type) SELECT event_id, e.event_type, value, round((value - m) / sd, 4) AS z FROM events e JOIN st USING (event_type) WHERE sd > 0 AND abs((value - m) / sd) > 2.5 ORDER BY event_id""",
-    // same shape: bucketed obs -> per-key span -> generate_series grid ->
-    // left join -> IGNORE NULLS carry (Spark's last(ignoreNulls) twin)
-    "events_gap_fill" ->
-      s"""WITH obs AS (SELECT user_id, date_trunc('day', ts) AS bucket, ${Stable.sqlAvgRounded("value", 4)} AS obs_value FROM events GROUP BY user_id, date_trunc('day', ts)), span AS (SELECT user_id, min(bucket) AS a, max(bucket) AS b FROM obs GROUP BY user_id), grid AS (SELECT user_id, unnest(generate_series(a, b, INTERVAL 1 DAY)) AS bucket FROM span), j AS (SELECT g.user_id, g.bucket, o.obs_value FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.bucket = o.bucket) SELECT user_id, bucket, last_value(obs_value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled, (obs_value IS NULL) AS filled FROM j ORDER BY user_id, bucket""",
-    "events_transitions" ->
-      """WITH t AS (SELECT event_type, lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type FROM events) SELECT event_type AS from_type, next_type AS to_type, count(*) AS n_transitions FROM t WHERE next_type IS NOT NULL GROUP BY from_type, to_type ORDER BY from_type, to_type""",
-    // DuckDB's list() over the same rows frame, NULLs filtered like
-    // Spark's collect_list, list_sort, same pinned rank, NULL on empty
-    "events_rolling_p90" ->
+    // per-type value histogram, 10 bins of width 50 (data spans 0..~500)
+    Query("events_histogram", Answer,
+      // floor(double/width) is the same IEEE op both engines; counts exact
+      """SELECT event_type, CAST(least(greatest(floor(value / 50.0), 0), 9) AS BIGINT) AS bin, count(*) AS n FROM events GROUP BY event_type, bin ORDER BY event_type, bin""",
+      (s, d) =>
+        histogram(Tables.events(s, d).select("event_type", "value"),
+          key = "event_type", v = "value", width = 50.0, bins = 10)
+          .orderBy("event_type", "bin")),
+
+    // p90 of each user's trailing 10 readings — the live gauge shape
+    Query("events_rolling_p90", Corpus,
+      // DuckDB's list() over the same rows frame, NULLs filtered like
+      // Spark's collect_list, list_sort, same pinned rank, NULL on empty
       """WITH f AS (SELECT event_id, user_id, value, list_sort(list_filter(list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 9 PRECEDING AND CURRENT ROW), x -> x IS NOT NULL)) AS fr FROM events) SELECT event_id, user_id, value, len(fr)::BIGINT AS frame_n, CASE WHEN len(fr) = 0 THEN NULL ELSE fr[ceil(0.9 * len(fr))::INT] END AS roll_p FROM f ORDER BY event_id""",
-    "events_windowed_topk" ->
+      (s, d) =>
+        rollingPercentile(Tables.events(s, d)
+            .select("user_id", "event_id", "ts", "value"),
+          key = "user_id", tsCol = "ts", tiebreak = "event_id",
+          v = "value", frameRows = 10, p = 0.9)
+          .select("event_id", "user_id", "value", "frame_n", "roll_p")
+          .orderBy("event_id")),
+
+    // top-3 trending event types per day
+    Query("events_windowed_topk", Answer,
       """WITH c AS (SELECT date_trunc('day', ts) AS bucket, event_type, count(*) AS n FROM events GROUP BY bucket, event_type), r AS (SELECT bucket, event_type, n, row_number() OVER (PARTITION BY bucket ORDER BY n DESC, event_type ASC) AS rank FROM c) SELECT bucket, event_type, n, rank FROM r WHERE rank <= 3 ORDER BY bucket, rank""",
-    // same strictly-following conditional-min window; gaps as exact μs
-    "events_pattern" ->
+      (s, d) =>
+        windowedTopK(Tables.events(s, d), ts = "ts", granularity = "day",
+          typeCol = "event_type", k = 3)
+          .orderBy("bucket", "rank")),
+
+    // every view converting to a purchase within an hour, per user
+    Query("events_pattern", Corpus,
+      // same strictly-following conditional-min window; gaps as exact μs
       """WITH x AS (SELECT user_id, event_id, ts, event_type, min(CASE WHEN event_type = 'purchase' THEN ts END) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS b_ts FROM events) SELECT user_id, event_id, ts AS a_ts, b_ts, epoch_us(b_ts) - epoch_us(ts) AS gap_us FROM x WHERE event_type = 'view' AND b_ts IS NOT NULL AND epoch_us(b_ts) - epoch_us(ts) <= 3600000000 ORDER BY user_id, event_id""",
-    // identical chained-window shape: each stage's first-hit min can
-    // reference the previous stage's column (unbounded frames, no ordering)
-    "events_funnel" ->
-      """WITH w1 AS (SELECT user_id, event_type, ts, min(CASE WHEN event_type = 'view' THEN ts END) OVER (PARTITION BY user_id) AS ts_view FROM events), w2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND ts > ts_view THEN ts END) OVER (PARTITION BY user_id) AS ts_click FROM w1), w3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > ts_click THEN ts END) OVER (PARTITION BY user_id) AS ts_purchase FROM w2) SELECT DISTINCT user_id, (1 + (ts_click IS NOT NULL)::BIGINT + (ts_purchase IS NOT NULL)::BIGINT) AS funnel_stage, ts_view, ts_click, ts_purchase FROM w3 WHERE ts_view IS NOT NULL ORDER BY user_id"""
+      (s, d) =>
+        patternWithin(Tables.events(s, d), key = "user_id", typeCol = "event_type",
+          tsCol = "ts", tiebreak = "event_id",
+          a = "view", b = "purchase", withinSec = 3600L)
+          .orderBy("user_id", "event_id"))
   )
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Grain.Corpus
+import graft.Query
 import graft.Tables
 
 /** Flow data operators: the reference's visual-flow node vocabulary
@@ -113,116 +115,113 @@ object Flow {
 
   // ---------------------------------------------------------------- queries
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "flow_map" -> ((s, d) =>
-      mapRows(Tables.events(s, d).select("event_id", "event_type", "value"),
-        Seq("value_x2" -> round(col("value") * 2, 2),
-            "kind" -> upper(col("event_type"))))
-        .orderBy("event_id")),
-
-    "flow_filter" -> ((s, d) =>
-      filterRows(Tables.events(s, d).select("event_id", "user_id", "event_type", "value"),
-        col("event_type") === "purchase" && col("value") > 50.0)
-        .orderBy("event_id")),
-
-    "flow_split" -> ((s, d) =>
-      splitExplode(Tables.documents(s, d).filter(col("doc_id") < 100),
-        "text", " ", Seq("doc_id"))
-        .orderBy("doc_id", "pos")),
-
-    "flow_join" -> ((s, d) =>
-      joinList(Tables.documents(s, d).select("doc_id", "text"), "text", " ", "|", "joined")
-        .select("doc_id", "joined")
-        .orderBy("doc_id")),
-
-    "flow_switch" -> ((s, d) =>
-      switchRoute(Tables.events(s, d).select("event_id", "event_type", "value"),
-        on = "event_type",
-        routes = Seq(
-          (col("event_type") === "error") -> "alerts",
-          (col("event_type") === "purchase" && col("value") > 100.0) -> "billing-large",
-          (col("event_type") === "purchase") -> "billing"),
-        default = "activity", as = "route")
-        .orderBy("event_id")),
-
-    "flow_in_range" -> ((s, d) =>
-      inRange(Tables.events(s, d).select("event_id", "value"), "value", 10.0, 100.0, "in_range")
-        .orderBy("event_id")),
-
-    "flow_edge_detector" -> ((s, d) =>
-      edges(Tables.events(s, d).select("event_id", "user_id", "ts", "value"),
-        key = "user_id", ts = "ts", tiebreak = "event_id", v = "value",
-        threshold = 100.0)
-        .select("event_id", "user_id", "value", "rising", "falling")
-        .orderBy("event_id")),
-
-    "flow_push" -> ((s, d) =>
-      push(Tables.documents(s, d).select("doc_id", "text"),
-        slice(split(col("text"), " "), 1, 3), lit("EOS"), "pushed")
-        .select(col("doc_id"), array_join(col("pushed"), "|").as("pushed"))
-        .orderBy("doc_id")),
-
-    "flow_add_object_key" -> ((s, d) =>
-      addObjectKey(
-        Tables.events(s, d).select(col("event_id"),
-          struct(col("event_type"), col("value")).as("obj")),
-        "obj", "large", col("obj.value") > 50.0)
-        .select(col("event_id"), col("obj.event_type").as("event_type"),
-          col("obj.value").as("value"), col("obj.large").as("large"))
-        .orderBy("event_id")),
-
-    "flow_to_json" -> ((s, d) =>
-      toJsonStr(Tables.events(s, d).select("event_id", "event_type", "value"),
-        Seq("event_id", "event_type", "value"), "js")
-        .select("event_id", "js")
-        .orderBy("event_id")),
-
-    "flow_json_parse" -> ((s, d) =>
-      jsonParse(Tables.events(s, d).select("event_id", "props"), "props",
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType))))
-        .select(col("event_id"), col("k"), (col("k") * 2).as("k2"))
-        .orderBy("event_id")),
-
-    "flow_foreach" -> ((s, d) =>
-      forEachElem(Tables.documents(s, d).select("doc_id", "text"),
-        slice(split(col("text"), " "), 1, 5), t => upper(t), "upped")
-        .select(col("doc_id"), array_join(col("upped"), " ").as("upped"))
-        .orderBy("doc_id")),
-
-    "flow_rewire" -> ((s, d) =>
-      rewire(Tables.events(s, d).select("event_id", "user_id", "value"),
-        Map("user_id" -> "actor", "value" -> "metric"))
-        .orderBy("event_id"))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "flow_map" ->
+  val registry: Seq[Query] = Seq(
+    Query("flow_map", Corpus,
       """SELECT event_id, event_type, value, round(value * 2, 2) AS value_x2, upper(event_type) AS kind FROM events ORDER BY event_id""",
-    "flow_filter" ->
+      (s, d) =>
+        mapRows(Tables.events(s, d).select("event_id", "event_type", "value"),
+          Seq("value_x2" -> round(col("value") * 2, 2),
+              "kind" -> upper(col("event_type"))))
+          .orderBy("event_id")),
+
+    Query("flow_filter", Corpus,
       """SELECT event_id, user_id, event_type, value FROM events WHERE event_type = 'purchase' AND value > 50.0 ORDER BY event_id""",
-    "flow_split" ->
+      (s, d) =>
+        filterRows(Tables.events(s, d).select("event_id", "user_id", "event_type", "value"),
+          col("event_type") === "purchase" && col("value") > 50.0)
+          .orderBy("event_id")),
+
+    Query("flow_split", Corpus,
       """SELECT doc_id, unnest(range(0, len(string_split(text, ' ')))) AS pos, unnest(string_split(text, ' ')) AS token FROM documents WHERE doc_id < 100 ORDER BY doc_id, pos""",
-    "flow_join" ->
+      (s, d) =>
+        splitExplode(Tables.documents(s, d).filter(col("doc_id") < 100),
+          "text", " ", Seq("doc_id"))
+          .orderBy("doc_id", "pos")),
+
+    Query("flow_join", Corpus,
       """SELECT doc_id, array_to_string(string_split(text, ' '), '|') AS joined FROM documents ORDER BY doc_id""",
-    "flow_switch" ->
+      (s, d) =>
+        joinList(Tables.documents(s, d).select("doc_id", "text"), "text", " ", "|", "joined")
+          .select("doc_id", "joined")
+          .orderBy("doc_id")),
+
+    Query("flow_switch", Corpus,
       """SELECT event_id, event_type, value, CASE WHEN event_type = 'error' THEN 'alerts' WHEN event_type = 'purchase' AND value > 100.0 THEN 'billing-large' WHEN event_type = 'purchase' THEN 'billing' ELSE 'activity' END AS route FROM events ORDER BY event_id""",
-    "flow_in_range" ->
+      (s, d) =>
+        switchRoute(Tables.events(s, d).select("event_id", "event_type", "value"),
+          on = "event_type",
+          routes = Seq(
+            (col("event_type") === "error") -> "alerts",
+            (col("event_type") === "purchase" && col("value") > 100.0) -> "billing-large",
+            (col("event_type") === "purchase") -> "billing"),
+          default = "activity", as = "route")
+          .orderBy("event_id")),
+
+    Query("flow_in_range", Corpus,
       """SELECT event_id, value, value >= 10.0 AND value <= 100.0 AS in_range FROM events ORDER BY event_id""",
-    "flow_edge_detector" ->
+      (s, d) =>
+        inRange(Tables.events(s, d).select("event_id", "value"), "value", 10.0, 100.0, "in_range")
+          .orderBy("event_id")),
+
+    Query("flow_edge_detector", Corpus,
       """SELECT event_id, user_id, value, CASE WHEN prev IS NULL THEN false ELSE prev < 100.0 AND value >= 100.0 END AS rising, CASE WHEN prev IS NULL THEN false ELSE prev >= 100.0 AND value < 100.0 END AS falling FROM (SELECT event_id, user_id, value, lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events) ORDER BY event_id""",
-    "flow_push" ->
+      (s, d) =>
+        edges(Tables.events(s, d).select("event_id", "user_id", "ts", "value"),
+          key = "user_id", ts = "ts", tiebreak = "event_id", v = "value",
+          threshold = 100.0)
+          .select("event_id", "user_id", "value", "rising", "falling")
+          .orderBy("event_id")),
+
+    Query("flow_push", Corpus,
       """SELECT doc_id, array_to_string(list_append(string_split(text, ' ')[1:3], 'EOS'), '|') AS pushed FROM documents ORDER BY doc_id""",
-    "flow_add_object_key" ->
+      (s, d) =>
+        push(Tables.documents(s, d).select("doc_id", "text"),
+          slice(split(col("text"), " "), 1, 3), lit("EOS"), "pushed")
+          .select(col("doc_id"), array_join(col("pushed"), "|").as("pushed"))
+          .orderBy("doc_id")),
+
+    Query("flow_add_object_key", Corpus,
       """SELECT event_id, event_type, value, value > 50.0 AS large FROM events ORDER BY event_id""",
-    "flow_to_json" ->
+      (s, d) =>
+        addObjectKey(
+          Tables.events(s, d).select(col("event_id"),
+            struct(col("event_type"), col("value")).as("obj")),
+          "obj", "large", col("obj.value") > 50.0)
+          .select(col("event_id"), col("obj.event_type").as("event_type"),
+            col("obj.value").as("value"), col("obj.large").as("large"))
+          .orderBy("event_id")),
+
+    Query("flow_to_json", Corpus,
       """SELECT event_id, to_json(struct_pack(event_id := event_id, event_type := event_type, value := value))::VARCHAR AS js FROM events ORDER BY event_id""",
-    "flow_json_parse" ->
+      (s, d) =>
+        toJsonStr(Tables.events(s, d).select("event_id", "event_type", "value"),
+          Seq("event_id", "event_type", "value"), "js")
+          .select("event_id", "js")
+          .orderBy("event_id")),
+
+    Query("flow_json_parse", Corpus,
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, CAST(json_extract_string(props, '$.k') AS BIGINT) * 2 AS k2 FROM events ORDER BY event_id""",
-    "flow_foreach" ->
+      (s, d) =>
+        jsonParse(Tables.events(s, d).select("event_id", "props"), "props",
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("k",
+              org.apache.spark.sql.types.LongType))))
+          .select(col("event_id"), col("k"), (col("k") * 2).as("k2"))
+          .orderBy("event_id")),
+
+    Query("flow_foreach", Corpus,
       """SELECT doc_id, array_to_string(list_transform(string_split(text, ' ')[1:5], t -> upper(t)), ' ') AS upped FROM documents ORDER BY doc_id""",
-    "flow_rewire" ->
-      """SELECT event_id, user_id AS actor, value AS metric FROM events ORDER BY event_id"""
+      (s, d) =>
+        forEachElem(Tables.documents(s, d).select("doc_id", "text"),
+          slice(split(col("text"), " "), 1, 5), t => upper(t), "upped")
+          .select(col("doc_id"), array_join(col("upped"), " ").as("upped"))
+          .orderBy("doc_id")),
+
+    Query("flow_rewire", Corpus,
+      """SELECT event_id, user_id AS actor, value AS metric FROM events ORDER BY event_id""",
+      (s, d) =>
+        rewire(Tables.events(s, d).select("event_id", "user_id", "value"),
+          Map("user_id" -> "actor", "value" -> "metric"))
+          .orderBy("event_id"))
   )
 }

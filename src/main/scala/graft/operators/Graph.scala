@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 
 /** Graph analytics over relational link structure. Connected components
@@ -446,46 +448,87 @@ object Graph {
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Query] = Seq(
     // 3 exact-integer PageRank rounds over the trade graph — influence
     // ranking over the entity graph, the Pregel step as join+agg
-    "graph_pagerank" -> ((s, d) =>
-      pageRank(tradeGraph(s, d), "src", "dst", iters = 3)
-        .withColumn("node_type",
-          when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")))
-        .select("node", "node_type", "rank")
-        .orderBy("node")),
+    Query("graph_pagerank", Corpus,
+      // the same 3 rounds unrolled; integer floors make summation order
+      // irrelevant, so the replay is exact with no float detour
+      {
+        val scale = "1000000000000"
+        // ::BIGINT per round: DuckDB's sum(BIGINT) widens to HUGEINT,
+        // which the compare would read as float
+        def round(prev: String, out: String): String =
+          s"""$out AS (SELECT e.dst AS node, ((SELECT ($scale * 15) // (100 * count(*)) FROM n) + sum(($prev.r * 85) // (100 * deg.d)))::BIGINT AS r FROM e JOIN $prev ON e.src = $prev.node JOIN deg ON e.src = deg.src GROUP BY e.dst)"""
+        s"""WITH e0 AS (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), n AS (SELECT DISTINCT src AS node FROM e), deg AS (SELECT src, count(*) AS d FROM e GROUP BY src), r0 AS (SELECT node, $scale // (SELECT count(*) FROM n) AS r FROM n), ${round("r0", "r1")}, ${round("r1", "r2")}, ${round("r2", "r3")} SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, r AS rank FROM r3 ORDER BY node"""
+      },
+      (s, d) =>
+        pageRank(tradeGraph(s, d), "src", "dst", iters = 3)
+          .withColumn("node_type",
+            when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")))
+          .select("node", "node_type", "rank")
+          .orderBy("node")),
 
     // exact per-supplier triangle census over the co-supply graph —
     // local clustering structure (degree + closed wedges) with the
     // orientation bound doing the 100 TB work
-    "graph_triangles" -> ((s, d) =>
-      triangleCounts(coSupplyEdges(s, d))
-        .withColumnRenamed("node", "suppkey")
-        .orderBy("suppkey")),
+    Query("graph_triangles", Corpus,
+      // GROUND-TRUTH triangle semantics — the definitional a<b<c triple
+      // enumeration over canonical edges, NOT a replay of the engine's
+      // degree orientation: if the oriented wedge algebra over- or
+      // under-counts anywhere, the hash fails
+      """WITH sl AS (SELECT DISTINCT l_orderkey AS o, l_suppkey AS sk FROM lineitem),
+        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b FROM sl x JOIN sl y ON x.o = y.o AND x.sk < y.sk),
+        |deg AS (SELECT node, count(*) AS degree FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY node),
+        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
+        |tn AS (SELECT node, count(*) AS triangles FROM (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri) GROUP BY node)
+        |SELECT d.node AS suppkey, d.degree, CAST(COALESCE(tn.triangles, 0) AS BIGINT) AS triangles
+        |FROM deg d LEFT JOIN tn ON tn.node = d.node ORDER BY suppkey""".stripMargin,
+      (s, d) =>
+        triangleCounts(coSupplyEdges(s, d))
+          .withColumnRenamed("node", "suppkey")
+          .orderBy("suppkey")),
 
     // connected components over the same-nation trade graph — the
     // fragmented regime (per-nation regional networks) the dedup
     // family's shallow near-dup clusters never exercise; same min-label
     // machinery (checkpointed rounds, alternating-star fallback)
-    "graph_components" -> ((s, d) => {
-      // checkpoint the derivation ONCE: the plan below references e0
-      // four times (nodes union ×2, symmetrize union ×2 inside
-      // connectedComponents) and each reference would re-run the
-      // fact-grain join — the sf10 smoke measured the un-cut shape at
-      // 530 s with propagation itself only 8 s (BASELINE.md)
-      val e0 = graft.CacheScope.register(
-        nationTradeEdges(s, d).localCheckpoint(true))
-      val nodes = e0.select(col("a").as("node"))
-        .unionByName(e0.select(col("b").as("node"))).distinct()
-      val comp = Dedup.connectedComponents(nodes, "node", e0, "a", "b")
-      // cluster-grain size table (≤ #components rows) — broadcast back
-      val sizes = comp.groupBy("cluster").agg(count(lit(1)).as("comp_size"))
-      comp.join(broadcast(sizes), "cluster")
-        .select(col("node"), nodeType(col("node")).as("node_type"),
-          col("cluster"), col("comp_size"))
-        .orderBy("node")
-    }),
+    Query("graph_components", Corpus,
+      // 12 unrolled min-label rounds — measured convergence ≤ 7 at sf0.1
+      // (the engine iterates to the exact fixpoint, so the unroll only
+      // has to REACH it; the margin covers a rounds-regression).
+      // MATERIALIZED per round: each round references its predecessor
+      // twice, and DuckDB inlines plain CTEs — 2^12 copies of the scan
+      // (the mm_decode_meta 2^k lesson, DuckDB edition; observed as an
+      // fd-exhaustion error before the hint)
+      {
+        def round(prev: String, out: String): String =
+          s"""$out AS MATERIALIZED (SELECT node, min(lbl) AS lbl FROM (SELECT node, lbl FROM $prev UNION ALL SELECT e.dst AS node, p.lbl FROM e JOIN $prev p ON e.src = p.node) t GROUP BY node)"""
+        val rounds = (1 to 12).map(i => round(s"l${i - 1}", s"l$i")).mkString(", ")
+        // convergence sentinel: the engine iterates to the true fixpoint,
+        // so at an untested SF an under-iterated unroll must FAIL LOUDLY —
+        // a NOT_CONVERGED row (present iff l12 <> l11) breaks the hash
+        // with a self-describing marker instead of a silent divergence
+        s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey JOIN customer c ON o.o_custkey = c.c_custkey JOIN supplier s ON l.l_suppkey = s.s_suppkey WHERE c.c_nationkey = s.s_nationkey), e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e), $rounds, sz AS (SELECT lbl, count(*) AS c FROM l12 GROUP BY lbl) SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, lbl AS cluster, c::BIGINT AS comp_size FROM l12 JOIN sz USING (lbl) UNION ALL SELECT -1::BIGINT, 'NOT_CONVERGED', -1::BIGINT, -1::BIGINT WHERE (SELECT count(*) FROM (SELECT * FROM l12 EXCEPT SELECT * FROM l11) x) > 0 ORDER BY node"""
+      },
+      (s, d) => {
+        // checkpoint the derivation ONCE: the plan below references e0
+        // four times (nodes union ×2, symmetrize union ×2 inside
+        // connectedComponents) and each reference would re-run the
+        // fact-grain join — the sf10 smoke measured the un-cut shape at
+        // 530 s with propagation itself only 8 s (BASELINE.md)
+        val e0 = graft.CacheScope.register(
+          nationTradeEdges(s, d).localCheckpoint(true))
+        val nodes = e0.select(col("a").as("node"))
+          .unionByName(e0.select(col("b").as("node"))).distinct()
+        val comp = Dedup.connectedComponents(nodes, "node", e0, "a", "b")
+        // cluster-grain size table (≤ #components rows) — broadcast back
+        val sizes = comp.groupBy("cluster").agg(count(lit(1)).as("comp_size"))
+        comp.join(broadcast(sizes), "cluster")
+          .select(col("node"), nodeType(col("node")).as("node_type"),
+            col("cluster"), col("comp_size"))
+          .orderBy("node")
+      }),
 
     // 6-hop BFS shell from the minimum node — reachability blast radius
     // over the full trade graph (measured eccentricity ≤ 4 at sf0.1,
@@ -495,124 +538,79 @@ object Graph {
     // semantics) is dropped, and only the canonical one-direction pair
     // list is checkpointed — the symmetrized view the rounds join is a
     // lazy union over the same blocks
-    "graph_bfs" -> ((s, d) => {
-      val pairs = graft.CacheScope.register(
-        Tables.orders(s, d).select("o_orderkey", "o_custkey")
-          .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-          .localCheckpoint(true))
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      bfsLayers(edges, "src", "dst", maxHops = 6)
-        .select(col("node"), nodeType(col("node")).as("node_type"),
-          col("hops"))
-        .orderBy("node")
-    }),
-
-    // 8-core of the trade graph: who keeps trading when thin
-    // relationships are peeled away — dense-subgraph extraction with
-    // the iterative peel doing one degree agg + two broadcast
-    // semi-joins per (shrinking) round
-    "graph_kcore" -> ((s, d) =>
-      kCore(tradePairs(s, d), "a", "b", k = 8)
-        .select(col("node"), nodeType(col("node")).as("node_type"),
-          col("core_degree"))
-        .orderBy("node")),
-
-    // power-of-2 degree histogram by node type — the graph-shaped
-    // sibling of data_skew_report (hub structure at a glance); the
-    // bucket is an exact integer when-ladder, not a float log2 (ln x /
-    // ln 2 can land 2.9999… at exact powers and flip a bucket)
-    "graph_degree_dist" -> ((s, d) => {
-      val deg = tradeGraph(s, d).groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("degree"))
-      var ladder = when(col("degree") >= (1L << 30), lit(1L << 30))
-      (29 to 1 by -1).foreach { k =>
-        ladder = ladder.when(col("degree") >= (1L << k), lit(1L << k))
-      }
-      deg.groupBy(nodeType(col("node")).as("node_type"),
-          ladder.otherwise(lit(1L)).as("degree_bucket"))
-        .agg(count(lit(1)).as("nodes"), min(col("degree")).as("min_degree"),
-          max(col("degree")).as("max_degree"))
-        .orderBy("node_type", "degree_bucket")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    // the same 3 rounds unrolled; integer floors make summation order
-    // irrelevant, so the replay is exact with no float detour
-    "graph_pagerank" -> {
-      val scale = "1000000000000"
-      // ::BIGINT per round: DuckDB's sum(BIGINT) widens to HUGEINT,
-      // which the compare would read as float
-      def round(prev: String, out: String): String =
-        s"""$out AS (SELECT e.dst AS node, ((SELECT ($scale * 15) // (100 * count(*)) FROM n) + sum(($prev.r * 85) // (100 * deg.d)))::BIGINT AS r FROM e JOIN $prev ON e.src = $prev.node JOIN deg ON e.src = deg.src GROUP BY e.dst)"""
-      s"""WITH e0 AS (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), n AS (SELECT DISTINCT src AS node FROM e), deg AS (SELECT src, count(*) AS d FROM e GROUP BY src), r0 AS (SELECT node, $scale // (SELECT count(*) FROM n) AS r FROM n), ${round("r0", "r1")}, ${round("r1", "r2")}, ${round("r2", "r3")} SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, r AS rank FROM r3 ORDER BY node"""
-    },
-
-    // GROUND-TRUTH triangle semantics — the definitional a<b<c triple
-    // enumeration over canonical edges, NOT a replay of the engine's
-    // degree orientation: if the oriented wedge algebra over- or
-    // under-counts anywhere, the hash fails
-    "graph_triangles" ->
-      """WITH sl AS (SELECT DISTINCT l_orderkey AS o, l_suppkey AS sk FROM lineitem),
-        |e AS (SELECT DISTINCT x.sk AS a, y.sk AS b FROM sl x JOIN sl y ON x.o = y.o AND x.sk < y.sk),
-        |deg AS (SELECT node, count(*) AS degree FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY node),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-        |tn AS (SELECT node, count(*) AS triangles FROM (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri) GROUP BY node)
-        |SELECT d.node AS suppkey, d.degree, CAST(COALESCE(tn.triangles, 0) AS BIGINT) AS triangles
-        |FROM deg d LEFT JOIN tn ON tn.node = d.node ORDER BY suppkey""".stripMargin,
-
-    // 12 unrolled min-label rounds — measured convergence ≤ 7 at sf0.1
-    // (the engine iterates to the exact fixpoint, so the unroll only
-    // has to REACH it; the margin covers a rounds-regression).
-    // MATERIALIZED per round: each round references its predecessor
-    // twice, and DuckDB inlines plain CTEs — 2^12 copies of the scan
-    // (the mm_decode_meta 2^k lesson, DuckDB edition; observed as an
-    // fd-exhaustion error before the hint)
-    "graph_components" -> {
-      def round(prev: String, out: String): String =
-        s"""$out AS MATERIALIZED (SELECT node, min(lbl) AS lbl FROM (SELECT node, lbl FROM $prev UNION ALL SELECT e.dst AS node, p.lbl FROM e JOIN $prev p ON e.src = p.node) t GROUP BY node)"""
-      val rounds = (1 to 12).map(i => round(s"l${i - 1}", s"l$i")).mkString(", ")
-      // convergence sentinel: the engine iterates to the true fixpoint,
-      // so at an untested SF an under-iterated unroll must FAIL LOUDLY —
-      // a NOT_CONVERGED row (present iff l12 <> l11) breaks the hash
-      // with a self-describing marker instead of a silent divergence
-      s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey JOIN customer c ON o.o_custkey = c.c_custkey JOIN supplier s ON l.l_suppkey = s.s_suppkey WHERE c.c_nationkey = s.s_nationkey), e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e), $rounds, sz AS (SELECT lbl, count(*) AS c FROM l12 GROUP BY lbl) SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, lbl AS cluster, c::BIGINT AS comp_size FROM l12 JOIN sz USING (lbl) UNION ALL SELECT -1::BIGINT, 'NOT_CONVERGED', -1::BIGINT, -1::BIGINT WHERE (SELECT count(*) FROM (SELECT * FROM l12 EXCEPT SELECT * FROM l11) x) > 0 ORDER BY node"""
-    },
-
-    // recursive frontier with set-UNION dedup on (node, hops): every
-    // (node, d ≤ 6) pair reachable in exactly d steps appears once, and
-    // min(d) per node is the hop distance — bounded by |nodes| × 7 rows
-    "graph_bfs" ->
+    Query("graph_bfs", Corpus,
+      // recursive frontier with set-UNION dedup on (node, hops): every
+      // (node, d ≤ 6) pair reachable in exactly d steps appears once, and
+      // min(d) per node is the hop distance — bounded by |nodes| × 7 rows
       """WITH RECURSIVE e0 AS (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
         |e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0),
         |b(node, d) AS (SELECT (SELECT min(src) FROM e), 0 UNION SELECT e.dst, b.d + 1 FROM b JOIN e ON e.src = b.node WHERE b.d < 6)
         |SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, min(d)::BIGINT AS hops
         |FROM b GROUP BY node ORDER BY node""".stripMargin,
+      (s, d) => {
+        val pairs = graft.CacheScope.register(
+          Tables.orders(s, d).select("o_orderkey", "o_custkey")
+            .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
+              col("o_orderkey") === col("l_orderkey"))
+            .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
+            .localCheckpoint(true))
+        val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+          .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+        bfsLayers(edges, "src", "dst", maxHops = 6)
+          .select(col("node"), nodeType(col("node")).as("node_type"),
+            col("hops"))
+          .orderBy("node")
+      }),
 
-    // 8 unrolled peel rounds (measured fixpoint in 2): degree per
-    // round, survivors with degree ≥ 8, edges restricted to survivor
-    // endpoints — the definitional peel, stable rounds are no-ops.
-    // MATERIALIZED for the same inlining reason as graph_components
-    // (each e_i references e_{i-1} three times → 3^8 inlined scans)
-    "graph_kcore" -> {
-      def peel(prev: String, i: Int): String =
-        s"""d$i AS MATERIALIZED (SELECT node, count(*) AS c FROM (SELECT a AS node FROM $prev UNION ALL SELECT b AS node FROM $prev) t GROUP BY node), e$i AS MATERIALIZED (SELECT a, b FROM $prev WHERE a IN (SELECT node FROM d$i WHERE c >= 8) AND b IN (SELECT node FROM d$i WHERE c >= 8))"""
-      val rounds = (1 to 8).map(i => peel(s"e${i - 1}", i)).mkString(", ")
-      // convergence sentinel (same contract as graph_components): the
-      // peel is monotone so e8 ⊆ e7; a NOT_CONVERGED row fires iff the
-      // 8-round unroll stopped short of the fixpoint at this SF
-      s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), $rounds SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, count(*)::BIGINT AS core_degree FROM (SELECT a AS node FROM e8 UNION ALL SELECT b AS node FROM e8) t GROUP BY node UNION ALL SELECT -1::BIGINT, 'NOT_CONVERGED', -1::BIGINT WHERE (SELECT count(*) FROM (SELECT * FROM e7 EXCEPT SELECT * FROM e8) x) > 0 ORDER BY node"""
-    },
+    // 8-core of the trade graph: who keeps trading when thin
+    // relationships are peeled away — dense-subgraph extraction with
+    // the iterative peel doing one degree agg + two broadcast
+    // semi-joins per (shrinking) round
+    Query("graph_kcore", Corpus,
+      // 8 unrolled peel rounds (measured fixpoint in 2): degree per
+      // round, survivors with degree ≥ 8, edges restricted to survivor
+      // endpoints — the definitional peel, stable rounds are no-ops.
+      // MATERIALIZED for the same inlining reason as graph_components
+      // (each e_i references e_{i-1} three times → 3^8 inlined scans)
+      {
+        def peel(prev: String, i: Int): String =
+          s"""d$i AS MATERIALIZED (SELECT node, count(*) AS c FROM (SELECT a AS node FROM $prev UNION ALL SELECT b AS node FROM $prev) t GROUP BY node), e$i AS MATERIALIZED (SELECT a, b FROM $prev WHERE a IN (SELECT node FROM d$i WHERE c >= 8) AND b IN (SELECT node FROM d$i WHERE c >= 8))"""
+        val rounds = (1 to 8).map(i => peel(s"e${i - 1}", i)).mkString(", ")
+        // convergence sentinel (same contract as graph_components): the
+        // peel is monotone so e8 ⊆ e7; a NOT_CONVERGED row fires iff the
+        // 8-round unroll stopped short of the fixpoint at this SF
+        s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), $rounds SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, count(*)::BIGINT AS core_degree FROM (SELECT a AS node FROM e8 UNION ALL SELECT b AS node FROM e8) t GROUP BY node UNION ALL SELECT -1::BIGINT, 'NOT_CONVERGED', -1::BIGINT WHERE (SELECT count(*) FROM (SELECT * FROM e7 EXCEPT SELECT * FROM e8) x) > 0 ORDER BY node"""
+      },
+      (s, d) =>
+        kCore(tradePairs(s, d), "a", "b", k = 8)
+          .select(col("node"), nodeType(col("node")).as("node_type"),
+            col("core_degree"))
+          .orderBy("node")),
 
-    // the same exact integer bucket ladder (largest power of 2 ≤ degree)
-    "graph_degree_dist" -> {
-      val ladder = (30 to 1 by -1)
-        .map(k => s"WHEN degree >= ${1L << k} THEN ${1L << k}")
-        .mkString("CASE ", " ", " ELSE 1 END")
-      s"""WITH e0 AS (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), deg AS (SELECT src AS node, count(*) AS degree FROM e GROUP BY src) SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, ($ladder)::BIGINT AS degree_bucket, count(*)::BIGINT AS nodes, min(degree)::BIGINT AS min_degree, max(degree)::BIGINT AS max_degree FROM deg GROUP BY 1, 2 ORDER BY node_type, degree_bucket"""
-    }
+    // power-of-2 degree histogram by node type — the graph-shaped
+    // sibling of data_skew_report (hub structure at a glance); the
+    // bucket is an exact integer when-ladder, not a float log2 (ln x /
+    // ln 2 can land 2.9999… at exact powers and flip a bucket)
+    Query("graph_degree_dist", Answer,
+      // the same exact integer bucket ladder (largest power of 2 ≤ degree)
+      {
+        val ladder = (30 to 1 by -1)
+          .map(k => s"WHEN degree >= ${1L << k} THEN ${1L << k}")
+          .mkString("CASE ", " ", " ELSE 1 END")
+        s"""WITH e0 AS (SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey), e AS (SELECT a AS src, b AS dst FROM e0 UNION ALL SELECT b AS src, a AS dst FROM e0), deg AS (SELECT src AS node, count(*) AS degree FROM e GROUP BY src) SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, ($ladder)::BIGINT AS degree_bucket, count(*)::BIGINT AS nodes, min(degree)::BIGINT AS min_degree, max(degree)::BIGINT AS max_degree FROM deg GROUP BY 1, 2 ORDER BY node_type, degree_bucket"""
+      },
+      (s, d) => {
+        val deg = tradeGraph(s, d).groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("degree"))
+        var ladder = when(col("degree") >= (1L << 30), lit(1L << 30))
+        (29 to 1 by -1).foreach { k =>
+          ladder = ladder.when(col("degree") >= (1L << k), lit(1L << k))
+        }
+        deg.groupBy(nodeType(col("node")).as("node_type"),
+            ladder.otherwise(lit(1L)).as("degree_bucket"))
+          .agg(count(lit(1)).as("nodes"), min(col("degree")).as("min_degree"),
+            max(col("degree")).as("max_degree"))
+          .orderBy("node_type", "degree_bucket")
+      })
   )
 }

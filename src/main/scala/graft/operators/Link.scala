@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 
 /** Record linkage / entity resolution: match dirty (typo-bearing)
@@ -220,7 +222,7 @@ object Link {
   def linkIndexArtifactPath(s: SparkSession, clean: DataFrame, d: String): String = {
     val fp = graft.sources.Io.contentFingerprint(clean,
       Seq(col("e").cast("string"), col("cname")))
-    "/tmp/graft_io/link_index/" + s"$d|k1|$fp".replaceAll("[^A-Za-z0-9.]", "_")
+    graft.sources.Io.artifactPath("link_index", s"$d|k1|$fp")
   }
 
   private def pipeline(s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -228,92 +230,6 @@ object Link {
     val dirty = dirtyRecords(clean)
     (dirty, clean)
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // deletion-neighborhood candidate pairs (linear index, no cross product)
-    "link_candidates" -> ((s, d) => {
-      val (dirty, clean) = pipeline(s, d)
-      candidates(dirty, clean)
-        .select(col("record_id"), col("e").as("entity_id"))
-        .orderBy("record_id", "entity_id")
-    }),
-
-    // lev-verified best entity per dirty record
-    "link_fuzzy_best" -> ((s, d) => {
-      val (dirty, clean) = pipeline(s, d)
-      bestMatch(candidates(dirty, clean))
-        .orderBy("record_id")
-    }),
-
-    // per-variant accuracy: matched vs formula ground truth (4 rows)
-    "link_er_report" -> ((s, d) => {
-      val (dirty, clean) = pipeline(s, d)
-      val best = bestMatch(candidates(dirty, clean))
-      dirty.join(best, Seq("record_id"), "left")
-        .groupBy("v")
-        .agg(
-          count(lit(1)).as("n_records"),
-          sum(when(col("matched_e").isNotNull, 1L).otherwise(0L)).as("n_matched"),
-          sum(when(col("matched_e") === col("true_e"), 1L).otherwise(0L)).as("n_correct"))
-        .orderBy("v")
-    }),
-
-    // Jaro-Winkler re-rank of the same candidates: argmax on the
-    // similarity (micro-scaled to BIGINT so the argmin bit-pack trick
-    // applies unchanged: (1e6 − jw_micro)·2^40 + e — 2^40 not 2^48
-    // because 10^6·2^48 overflows Long; 2^40 still clears any entity-id
-    // space we'd meet), tie-break min e. The native expression's parity
-    // with DuckDB's implementation IS the point of the oracle — strict
-    // 0.7 boost threshold, prefix cap 4, greedy match window — checked
-    // over every candidate pair.
-    "link_jaro_rerank" -> ((s, d) => {
-      val (dirty, clean) = pipeline(s, d)
-      candidates(dirty, clean)
-        .withColumn("jw_micro", expr(
-          "cast(round(jaro_winkler(dname, cname) * 1000000) as bigint)"))
-        .groupBy("record_id")
-        .agg(min(expr(s"(1000000L - jw_micro) * ${JPack}L + e")).as("pk"))
-        .select(
-          col("record_id"),
-          expr(s"pk % ${JPack}L").as("matched_e"),
-          expr(s"1000000L - (pk div ${JPack}L)").as("jw_micro"))
-        .orderBy("record_id")
-    }),
-
-    // incremental linkage: the nightly-batch production shape — the
-    // name-collapsed clean variant index is built ONCE, persisted as an
-    // atomic parquet artifact (content-fingerprint staleness key), and
-    // each new dirty batch (here: the e % 10 == 0 entities' records)
-    // answers against the READ-BACK artifact. The oracle is the full
-    // fuzzy_best pipeline restricted to the batch — the persistence
-    // must be answer-invisible; at scale only the batch explodes and
-    // shuffles, the catalog side is a narrow 3-column parquet scan.
-    "link_incremental" -> ((s, d) => {
-      val clean = cleanEntities(Tables.customer(s, d), "c_custkey")
-      val idx = graft.sources.Io.atomicParquetArtifact(
-        s, linkIndexArtifactPath(s, clean, d))(
-        deletionIndex(nameReps(clean), "cname", Seq("e", "cname")))
-      val batch = dirtyRecords(clean.filter(col("e") % 10 === 0))
-      val dv = deletionIndex(batch, "dname", Seq("record_id", "dname"))
-      bestMatch(
-        dv.join(idx.hint("shuffle_hash"), "variant")
-          .select("record_id", "dname", "e", "cname")
-          .distinct())
-        .orderBy("record_id")
-    }),
-
-    // entity-grain clusters of linked records
-    "link_clusters" -> ((s, d) => {
-      val (dirty, clean) = pipeline(s, d)
-      bestMatch(candidates(dirty, clean))
-        .groupBy(col("matched_e").as("entity_id"))
-        .agg(
-          count(lit(1)).as("n_records"),
-          min(col("record_id")).as("min_record"),
-          max(col("record_id")).as("max_record"))
-        .orderBy("entity_id")
-    })
-  )
 
   /** DuckDB definitional replay: same synthesis formulas, same deletion
     * index (bounded constant range — names are < 64 chars), same verify
@@ -361,33 +277,57 @@ object Link {
        |  FROM cand WHERE levenshtein(dname, cname) <= 2)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "link_candidates" ->
+  val registry: Seq[Query] = Seq(
+    // deletion-neighborhood candidate pairs (linear index, no cross product)
+    Query("link_candidates", Corpus,
       (s"WITH $linkCte " +
         "SELECT record_id, e AS entity_id FROM cand ORDER BY record_id, entity_id"),
-    "link_fuzzy_best" ->
+      (s, d) => {
+        val (dirty, clean) = pipeline(s, d)
+        candidates(dirty, clean)
+          .select(col("record_id"), col("e").as("entity_id"))
+          .orderBy("record_id", "entity_id")
+      }),
+
+    // lev-verified best entity per dirty record
+    Query("link_fuzzy_best", Corpus,
       (s"WITH $linkCte " +
         "SELECT record_id, matched_e, lev FROM best WHERE rn = 1 ORDER BY record_id"),
-    "link_er_report" ->
+      (s, d) => {
+        val (dirty, clean) = pipeline(s, d)
+        bestMatch(candidates(dirty, clean))
+          .orderBy("record_id")
+      }),
+
+    // per-variant accuracy: matched vs formula ground truth (4 rows)
+    Query("link_er_report", Answer,
       (s"WITH $linkCte " +
         """SELECT d.v, CAST(count(*) AS BIGINT) AS n_records,
           |  CAST(sum(CASE WHEN b.matched_e IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
           |  CAST(sum(CASE WHEN b.matched_e = d.true_e THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
           |FROM dirty d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (record_id)
           |GROUP BY d.v ORDER BY d.v""".stripMargin),
-    "link_clusters" ->
-      (s"WITH $linkCte " +
-        """SELECT matched_e AS entity_id, CAST(count(*) AS BIGINT) AS n_records,
-          |  min(record_id) AS min_record, max(record_id) AS max_record
-          |FROM best WHERE rn = 1 GROUP BY matched_e ORDER BY entity_id""".stripMargin),
-    // the persisted-index path must answer exactly like the in-session
-    // pipeline on the batch subset (record_id = e*4+v, so the batch
-    // predicate is (record_id // 4) % 10 = 0)
-    "link_incremental" ->
-      (s"WITH $linkCte " +
-        "SELECT record_id, matched_e, lev FROM best " +
-        "WHERE rn = 1 AND (record_id // 4) % 10 = 0 ORDER BY record_id"),
-    "link_jaro_rerank" ->
+      (s, d) => {
+        val (dirty, clean) = pipeline(s, d)
+        val best = bestMatch(candidates(dirty, clean))
+        dirty.join(best, Seq("record_id"), "left")
+          .groupBy("v")
+          .agg(
+            count(lit(1)).as("n_records"),
+            sum(when(col("matched_e").isNotNull, 1L).otherwise(0L)).as("n_matched"),
+            sum(when(col("matched_e") === col("true_e"), 1L).otherwise(0L)).as("n_correct"))
+          .orderBy("v")
+      }),
+
+    // Jaro-Winkler re-rank of the same candidates: argmax on the
+    // similarity (micro-scaled to BIGINT so the argmin bit-pack trick
+    // applies unchanged: (1e6 − jw_micro)·2^40 + e — 2^40 not 2^48
+    // because 10^6·2^48 overflows Long; 2^40 still clears any entity-id
+    // space we'd meet), tie-break min e. The native expression's parity
+    // with DuckDB's implementation IS the point of the oracle — strict
+    // 0.7 boost threshold, prefix cap 4, greedy match window — checked
+    // over every candidate pair.
+    Query("link_jaro_rerank", Corpus,
       (s"WITH $linkCte, " +
         """jscored AS (
           |  SELECT record_id, e,
@@ -397,6 +337,65 @@ object Link {
           |  SELECT record_id, e AS matched_e, jw_micro,
           |    row_number() OVER (PARTITION BY record_id ORDER BY jw_micro DESC, e) AS rn
           |  FROM jscored)
-          |SELECT record_id, matched_e, jw_micro FROM jbest WHERE rn = 1 ORDER BY record_id""".stripMargin)
+          |SELECT record_id, matched_e, jw_micro FROM jbest WHERE rn = 1 ORDER BY record_id""".stripMargin),
+      (s, d) => {
+        val (dirty, clean) = pipeline(s, d)
+        candidates(dirty, clean)
+          .withColumn("jw_micro", expr(
+            "cast(round(jaro_winkler(dname, cname) * 1000000) as bigint)"))
+          .groupBy("record_id")
+          .agg(min(expr(s"(1000000L - jw_micro) * ${JPack}L + e")).as("pk"))
+          .select(
+            col("record_id"),
+            expr(s"pk % ${JPack}L").as("matched_e"),
+            expr(s"1000000L - (pk div ${JPack}L)").as("jw_micro"))
+          .orderBy("record_id")
+      }),
+
+    // incremental linkage: the nightly-batch production shape — the
+    // name-collapsed clean variant index is built ONCE, persisted as an
+    // atomic parquet artifact (content-fingerprint staleness key), and
+    // each new dirty batch (here: the e % 10 == 0 entities' records)
+    // answers against the READ-BACK artifact. The oracle is the full
+    // fuzzy_best pipeline restricted to the batch — the persistence
+    // must be answer-invisible; at scale only the batch explodes and
+    // shuffles, the catalog side is a narrow 3-column parquet scan.
+    Query("link_incremental", Corpus,
+      // the persisted-index path must answer exactly like the in-session
+      // pipeline on the batch subset (record_id = e*4+v, so the batch
+      // predicate is (record_id // 4) % 10 = 0)
+      (s"WITH $linkCte " +
+        "SELECT record_id, matched_e, lev FROM best " +
+        "WHERE rn = 1 AND (record_id // 4) % 10 = 0 ORDER BY record_id"),
+      (s, d) => {
+        val clean = cleanEntities(Tables.customer(s, d), "c_custkey")
+        val idx = graft.sources.Io.atomicParquetArtifact(
+          s, linkIndexArtifactPath(s, clean, d))(
+          deletionIndex(nameReps(clean), "cname", Seq("e", "cname")))
+        val batch = dirtyRecords(clean.filter(col("e") % 10 === 0))
+        val dv = deletionIndex(batch, "dname", Seq("record_id", "dname"))
+        bestMatch(
+          dv.join(idx.hint("shuffle_hash"), "variant")
+            .select("record_id", "dname", "e", "cname")
+            .distinct())
+          .orderBy("record_id")
+      }),
+
+    // entity-grain clusters of linked records
+    Query("link_clusters", Corpus,
+      (s"WITH $linkCte " +
+        """SELECT matched_e AS entity_id, CAST(count(*) AS BIGINT) AS n_records,
+          |  min(record_id) AS min_record, max(record_id) AS max_record
+          |FROM best WHERE rn = 1 GROUP BY matched_e ORDER BY entity_id""".stripMargin),
+      (s, d) => {
+        val (dirty, clean) = pipeline(s, d)
+        bestMatch(candidates(dirty, clean))
+          .groupBy(col("matched_e").as("entity_id"))
+          .agg(
+            count(lit(1)).as("n_records"),
+            min(col("record_id")).as("min_record"),
+            max(col("record_id")).as("max_record"))
+          .orderBy("entity_id")
+      })
   )
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Grain.{Answer, Corpus}
+import graft.Query
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -164,58 +166,55 @@ object Pii {
       .withColumn("n_card", r.getField("cards"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val registry: Seq[Query] = Seq(
     // per-document typed scrub: the scanner vs the formula
-    "pii_scrub" -> ((s, d) =>
-      scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
-        .select("doc_id", "raw", "masked", "n_email", "n_phone", "n_ip", "n_card")
-        .orderBy("doc_id")),
-
-    // corpus PII exposure report: one partial-aggregable global agg
-    "pii_report" -> ((s, d) =>
-      scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("n_email") + col("n_phone") + col("n_ip") +
-            col("n_card") > 0, 1L).otherwise(0L)).as("docs_with_pii"),
-          sum(col("n_email").cast("long")).as("emails"),
-          sum(col("n_phone").cast("long")).as("phones"),
-          sum(col("n_ip").cast("long")).as("ips"),
-          sum(col("n_card").cast("long")).as("cards"))),
-
-    // Luhn validation in isolation: valid card vs checksum-broken twin,
-    // plain and separator-grouped forms must agree
-    "pii_luhn_check" -> ((s, d) => {
-      val base = synthesize(Tables.documents(s, d), "doc_id")
-      base.select(
-        col("doc_id"),
-        when(pmod(col("doc_id"), lit(2)) === 0, col("card16"))
-          .otherwise(col("bogus16")).as("candidate"),
-        GraftFunctions.luhnValid(
-          when(pmod(col("doc_id"), lit(2)) === 0, col("card16"))
-            .otherwise(col("bogus16"))).as("valid"),
-        GraftFunctions.luhnValid(
-          when(pmod(col("doc_id"), lit(2)) === 0, col("card_fmt"))
-            .otherwise(col("bogus16"))).as("valid_fmt"))
-        .orderBy("doc_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "pii_scrub" ->
+    Query("pii_scrub", Corpus,
       (s"WITH $piiCte " +
         "SELECT doc_id, raw, masked, n_email, n_phone, n_ip, n_card " +
         "FROM pii ORDER BY doc_id"),
-    "pii_report" ->
+      (s, d) =>
+        scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
+          .select("doc_id", "raw", "masked", "n_email", "n_phone", "n_ip", "n_card")
+          .orderBy("doc_id")),
+
+    // corpus PII exposure report: one partial-aggregable global agg
+    Query("pii_report", Answer,
       (s"WITH $piiCte " +
         "SELECT count(*) AS n_docs, " +
         "sum(CASE WHEN n_email + n_phone + n_ip + n_card > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_with_pii, " +
         "sum(n_email)::BIGINT AS emails, sum(n_phone)::BIGINT AS phones, " +
         "sum(n_ip)::BIGINT AS ips, sum(n_card)::BIGINT AS cards FROM pii"),
-    "pii_luhn_check" ->
+      (s, d) =>
+        scrub(synthesize(Tables.documents(s, d), "doc_id"), "raw")
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(when(col("n_email") + col("n_phone") + col("n_ip") +
+              col("n_card") > 0, 1L).otherwise(0L)).as("docs_with_pii"),
+            sum(col("n_email").cast("long")).as("emails"),
+            sum(col("n_phone").cast("long")).as("phones"),
+            sum(col("n_ip").cast("long")).as("ips"),
+            sum(col("n_card").cast("long")).as("cards"))),
+
+    // Luhn validation in isolation: valid card vs checksum-broken twin,
+    // plain and separator-grouped forms must agree
+    Query("pii_luhn_check", Corpus,
       (s"WITH $piiCte " +
         "SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN card ELSE bogus END AS candidate, " +
         "doc_id % 2 = 0 AS valid, doc_id % 2 = 0 AS valid_fmt " +
-        "FROM pii ORDER BY doc_id")
+        "FROM pii ORDER BY doc_id"),
+      (s, d) => {
+        val base = synthesize(Tables.documents(s, d), "doc_id")
+        base.select(
+          col("doc_id"),
+          when(pmod(col("doc_id"), lit(2)) === 0, col("card16"))
+            .otherwise(col("bogus16")).as("candidate"),
+          GraftFunctions.luhnValid(
+            when(pmod(col("doc_id"), lit(2)) === 0, col("card16"))
+              .otherwise(col("bogus16"))).as("valid"),
+          GraftFunctions.luhnValid(
+            when(pmod(col("doc_id"), lit(2)) === 0, col("card_fmt"))
+              .otherwise(col("bogus16"))).as("valid_fmt"))
+          .orderBy("doc_id")
+      })
   )
 }

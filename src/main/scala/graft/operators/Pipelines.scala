@@ -3,6 +3,8 @@ package graft.operators
 import graft.CacheScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Grain.Corpus
+import graft.Query
 import graft.Tables
 
 /** The flagship composed pipeline: the WHOLE training-data stack in one
@@ -73,10 +75,21 @@ object Pipelines {
         "pack_id", "pack_offset")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "training_data_e2e" -> ((s, d) =>
-      trainingData(Tables.documents(s, d).select("doc_id", "text", "source"))
-        .orderBy("doc_id")),
+  val registry: Seq[Query] = Seq(
+    Query("training_data_e2e", Corpus,
+      {
+        val draw = Dedup.sqlDraw("doc_id")
+        s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
+          s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
+          Dedup.sqlDedupKeepChain("bd") + ", " +
+          s"""mixed AS (SELECT b.doc_id, b.text, b.source FROM bd b JOIN keep USING (doc_id) WHERE $draw < (CASE WHEN b.source = 'src0' THEN 0.9 WHEN b.source = 'src1' THEN 0.1 ELSE 0.5 END) * 65536), """ +
+          s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
+          s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
+          s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
+      },
+      (s, d) =>
+        trainingData(Tables.documents(s, d).select("doc_id", "text", "source"))
+          .orderBy("doc_id")),
 
     // the flagship WITH the decontamination stage a production run needs:
     // after dedup, drop the eval docs themselves (doc_id < 20) and every
@@ -85,49 +98,36 @@ object Pipelines {
     // shuffles for the screen; only bloom-flagged candidates reach the
     // verify join), while the oracle states plain shared-shingle
     // semantics (the screen is exact by construction)
-    "training_data_decon_e2e" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-      val bench = docs.filter(col("doc_id") < 20).select("doc_id", "text")
-      trainingData(docs, preMix = { kept =>
-        val train = kept.filter(col("doc_id") >= 20)
-        train.join(
-          Dedup.contaminatedIds(train.select("doc_id", "text"), bench,
-            "doc_id", "text", n = 5, numBits = 1 << 16, numHashes = 4),
-          Seq("doc_id"), "left_anti")
-      }).orderBy("doc_id")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "training_data_e2e" -> {
-      val draw = Dedup.sqlDraw("doc_id")
-      s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
-        s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
-        Dedup.sqlDedupKeepChain("bd") + ", " +
-        s"""mixed AS (SELECT b.doc_id, b.text, b.source FROM bd b JOIN keep USING (doc_id) WHERE $draw < (CASE WHEN b.source = 'src0' THEN 0.9 WHEN b.source = 'src1' THEN 0.1 ELSE 0.5 END) * 65536), """ +
-        s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
-        s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
-        s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
-    },
-
-    // the decon stage states PLAIN shared-shingle semantics (drop eval
-    // docs + any kept doc sharing a 5-gram with them) — the Spark side's
-    // bloom screen + exact verify must land on exactly this set
-    "training_data_decon_e2e" -> {
-      val draw = Dedup.sqlDraw("doc_id")
-      s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
-        s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
-        Dedup.sqlDedupKeepChain("bd") + ", " +
-        s"""kd AS (SELECT b.doc_id, b.text, b.source FROM bd b JOIN keep USING (doc_id) WHERE b.doc_id >= 20), """ +
-        s"""bench AS (SELECT doc_id, text FROM documents WHERE doc_id < 20), """ +
-        Dedup.sqlShingleChain("q", "bench", 5) + ", " +
-        Dedup.sqlShingleChain("k", "kd", 5) + ", " +
-        s"""bad AS (SELECT DISTINCT k.doc_id FROM ksh k JOIN qsh q ON k.s = q.s), """ +
-        s"""decon AS (SELECT doc_id, text, source FROM kd WHERE doc_id NOT IN (SELECT doc_id FROM bad)), """ +
-        s"""mixed AS (SELECT b.doc_id, b.text, b.source FROM decon b WHERE $draw < (CASE WHEN b.source = 'src0' THEN 0.9 WHEN b.source = 'src1' THEN 0.1 ELSE 0.5 END) * 65536), """ +
-        s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
-        s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
-        s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
-    }
+    Query("training_data_decon_e2e", Corpus,
+      // the decon stage states PLAIN shared-shingle semantics (drop eval
+      // docs + any kept doc sharing a 5-gram with them) — the Spark side's
+      // bloom screen + exact verify must land on exactly this set
+      {
+        val draw = Dedup.sqlDraw("doc_id")
+        s"""WITH RECURSIVE ${TextOps.sqlQualityBandCtes("documents", 0.05, 0.95)}, """ +
+          s"""bd AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN band USING (doc_id)), """ +
+          Dedup.sqlDedupKeepChain("bd") + ", " +
+          s"""kd AS (SELECT b.doc_id, b.text, b.source FROM bd b JOIN keep USING (doc_id) WHERE b.doc_id >= 20), """ +
+          s"""bench AS (SELECT doc_id, text FROM documents WHERE doc_id < 20), """ +
+          Dedup.sqlShingleChain("q", "bench", 5) + ", " +
+          Dedup.sqlShingleChain("k", "kd", 5) + ", " +
+          s"""bad AS (SELECT DISTINCT k.doc_id FROM ksh k JOIN qsh q ON k.s = q.s), """ +
+          s"""decon AS (SELECT doc_id, text, source FROM kd WHERE doc_id NOT IN (SELECT doc_id FROM bad)), """ +
+          s"""mixed AS (SELECT b.doc_id, b.text, b.source FROM decon b WHERE $draw < (CASE WHEN b.source = 'src0' THEN 0.9 WHEN b.source = 'src1' THEN 0.1 ELSE 0.5 END) * 65536), """ +
+          s"""spl AS (SELECT doc_id, source, CASE WHEN $draw < 0.8 * 65536 THEN 'train' WHEN $draw < 0.9 * 65536 THEN 'val' ELSE 'test' END AS split, len(string_split_regex(trim(text), '\\s+'))::BIGINT AS ws_tokens, doc_id % 8 AS shard FROM mixed), """ +
+          s"""cum AS (SELECT *, sum(ws_tokens) OVER (PARTITION BY split, shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ws_tokens AS c FROM spl) """ +
+          s"""SELECT doc_id, source, split, shard::BIGINT AS shard, ws_tokens, (c // 2048)::BIGINT AS pack_id, (c % 2048)::BIGINT AS pack_offset FROM cum ORDER BY doc_id"""
+      },
+      (s, d) => {
+        val docs = Tables.documents(s, d).select("doc_id", "text", "source")
+        val bench = docs.filter(col("doc_id") < 20).select("doc_id", "text")
+        trainingData(docs, preMix = { kept =>
+          val train = kept.filter(col("doc_id") >= 20)
+          train.join(
+            Dedup.contaminatedIds(train.select("doc_id", "text"), bench,
+              "doc_id", "text", n = 5, numBits = 1 << 16, numHashes = 4),
+            Seq("doc_id"), "left_anti")
+        }).orderBy("doc_id")
+      })
   )
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Grain.Corpus
+import graft.Query
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -435,20 +437,6 @@ object Archive {
       .orderBy("split", "shard", "off")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_tar_roundtrip" -> ((s, d) => tarRoundtrip(s, d)),
-    "sink_webdataset" -> ((s, d) => webdatasetSink(s, d)),
-    "sink_webdataset_sized" -> ((s, d) => webdatasetSinkSized(s, d)),
-    "mm_webdataset" -> ((s, d) => webdatasetSamples(s, d)),
-    "src_zst_roundtrip" -> ((s, d) => zstRoundtrip(s, d)),
-    "mm_webdataset_zst" -> ((s, d) => webdatasetZstSamples(s, d)),
-    "src_zip_roundtrip" -> ((s, d) => zipRoundtrip(s, d)),
-    "src_gzip_roundtrip" -> ((s, d) => gzipRoundtrip(s, d)),
-    "src_warc_records" -> ((s, d) => warcRecords(s, d)),
-    "src_warc_gz_e2e" -> ((s, d) => warcGzE2e(s, d)),
-    "src_warc_zst_e2e" -> ((s, d) => warcZstE2e(s, d))
-  )
-
   /** Members ordered (doc_id, name) inside each shard — `.cls` sorts
     * before `.txt`, matching `sort_array` over (doc_id, name, payload)
     * structs. Every offset is stated from the format's own arithmetic:
@@ -465,13 +453,22 @@ object Archive {
       |         octet_length(encode(text))::BIGINT, md5(text) FROM documents)
       |""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    // the tarMembers statement re-keyed by (split, shard): the split is
-    // the doc_id residue, offsets are the same 512-block arithmetic
-    // inside each (split, shard) object's DECOMPRESSED bytes (the zstd
-    // layer contributes only its verified round trip, like
-    // mm_webdataset_zst)
-    "sink_webdataset" ->
+  val registry: Seq[Query] = Seq(
+    Query("src_tar_roundtrip", Corpus,
+      (tarMembers +
+        """, p AS (SELECT shard, name, size, payload_md5,
+        |  (512 + coalesce(sum(512 + ((size + 511) // 512) * 512)
+        |     OVER (PARTITION BY shard ORDER BY doc_id, name
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS off
+        |  FROM m)
+        |SELECT shard, name, off, size, payload_md5 FROM p ORDER BY shard, off""".stripMargin),
+      (s, d) => tarRoundtrip(s, d)),
+    Query("sink_webdataset", Corpus,
+      // the tarMembers statement re-keyed by (split, shard): the split is
+      // the doc_id residue, offsets are the same 512-block arithmetic
+      // inside each (split, shard) object's DECOMPRESSED bytes (the zstd
+      // layer contributes only its verified round trip, like
+      // mm_webdataset_zst)
       """WITH m AS (
         |  SELECT CASE WHEN doc_id % 10 < 8 THEN 'train'
         |              WHEN doc_id % 10 = 8 THEN 'val' ELSE 'test' END AS split,
@@ -491,12 +488,12 @@ object Archive {
         |  FROM m)
         |SELECT split, shard, name, off, size, payload_md5 FROM p
         |ORDER BY split, shard, off""".stripMargin,
-
-    // the sized sink's oracle replays the next-fit binning: per-doc
-    // exact tar bytes, prefix sum per (split, 512-doc block) in doc_id
-    // order, shard = block·512 + prior div 16384; members + offsets
-    // then follow the sink_webdataset arithmetic
-    "sink_webdataset_sized" ->
+      (s, d) => webdatasetSink(s, d)),
+    Query("sink_webdataset_sized", Corpus,
+      // the sized sink's oracle replays the next-fit binning: per-doc
+      // exact tar bytes, prefix sum per (split, 512-doc block) in doc_id
+      // order, shard = block·512 + prior div 16384; members + offsets
+      // then follow the sink_webdataset arithmetic
       s"""WITH d AS (
         |  SELECT doc_id, text,
         |         CASE WHEN doc_id % 10 < 8 THEN 'train'
@@ -529,52 +526,45 @@ object Archive {
         |  FROM m)
         |SELECT split, shard, name, off, size, payload_md5 FROM p
         |ORDER BY split, shard, off""".stripMargin,
-
-    "src_tar_roundtrip" -> (tarMembers +
-      """, p AS (SELECT shard, name, size, payload_md5,
-        |  (512 + coalesce(sum(512 + ((size + 511) // 512) * 512)
-        |     OVER (PARTITION BY shard ORDER BY doc_id, name
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS off
-        |  FROM m)
-        |SELECT shard, name, off, size, payload_md5 FROM p ORDER BY shard, off""".stripMargin),
-
-    "mm_webdataset" ->
+      (s, d) => webdatasetSinkSized(s, d)),
+    Query("mm_webdataset", Corpus,
       """SELECT doc_id // 8 AS shard, doc_id AS key, md5(text) AS txt_md5,
         |  (doc_id % 10)::VARCHAR AS cls_label,
         |  (octet_length(encode(text)) + octet_length(encode((doc_id % 10)::VARCHAR)))::BIGINT AS sample_bytes,
         |  2::BIGINT AS n_members
         |FROM documents ORDER BY key""".stripMargin,
-
-    "src_zip_roundtrip" -> (tarMembers +
-      """, p AS (SELECT shard, name, size, payload_md5,
+      (s, d) => webdatasetSamples(s, d)),
+    Query("src_zst_roundtrip", Corpus,
+      """SELECT doc_id,
+        |  (CASE WHEN doc_id % 7 <> 0 THEN 1 ELSE 0 END)::BIGINT AS ok,
+        |  CASE WHEN doc_id % 7 <> 0 THEN octet_length(encode(text))::BIGINT END AS un_bytes,
+        |  CASE WHEN doc_id % 7 <> 0 THEN md5(text) END AS un_md5
+        |FROM documents ORDER BY doc_id""".stripMargin,
+      (s, d) => zstRoundtrip(s, d)),
+    Query("mm_webdataset_zst", Corpus,
+      """SELECT doc_id // 8 AS shard, doc_id AS key, md5(text) AS txt_md5,
+        |  (doc_id % 10)::VARCHAR AS cls_label,
+        |  (octet_length(encode(text)) + octet_length(encode((doc_id % 10)::VARCHAR)))::BIGINT AS sample_bytes,
+        |  2::BIGINT AS n_members
+        |FROM documents ORDER BY key""".stripMargin,
+      (s, d) => webdatasetZstSamples(s, d)),
+    Query("src_zip_roundtrip", Corpus,
+      (tarMembers +
+        """, p AS (SELECT shard, name, size, payload_md5,
         |  (30 + octet_length(encode(name)) + coalesce(sum(30 + octet_length(encode(name)) + size)
         |     OVER (PARTITION BY shard ORDER BY doc_id, name
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS off
         |  FROM m)
         |SELECT shard, name, off, size, 1::BIGINT AS crc_ok, payload_md5 FROM p ORDER BY shard, off""".stripMargin),
-
-    "src_zst_roundtrip" ->
+      (s, d) => zipRoundtrip(s, d)),
+    Query("src_gzip_roundtrip", Corpus,
       """SELECT doc_id,
         |  (CASE WHEN doc_id % 7 <> 0 THEN 1 ELSE 0 END)::BIGINT AS ok,
         |  CASE WHEN doc_id % 7 <> 0 THEN octet_length(encode(text))::BIGINT END AS un_bytes,
         |  CASE WHEN doc_id % 7 <> 0 THEN md5(text) END AS un_md5
         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "mm_webdataset_zst" ->
-      """SELECT doc_id // 8 AS shard, doc_id AS key, md5(text) AS txt_md5,
-        |  (doc_id % 10)::VARCHAR AS cls_label,
-        |  (octet_length(encode(text)) + octet_length(encode((doc_id % 10)::VARCHAR)))::BIGINT AS sample_bytes,
-        |  2::BIGINT AS n_members
-        |FROM documents ORDER BY key""".stripMargin,
-
-    "src_gzip_roundtrip" ->
-      """SELECT doc_id,
-        |  (CASE WHEN doc_id % 7 <> 0 THEN 1 ELSE 0 END)::BIGINT AS ok,
-        |  CASE WHEN doc_id % 7 <> 0 THEN octet_length(encode(text))::BIGINT END AS un_bytes,
-        |  CASE WHEN doc_id % 7 <> 0 THEN md5(text) END AS un_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "src_warc_records" ->
+      (s, d) => gzipRoundtrip(s, d)),
+    Query("src_warc_records", Corpus,
       """WITH r AS (SELECT doc_id // 8 AS shard, doc_id,
         |  octet_length(encode(text))::BIGINT AS len, md5(text) AS body_md5,
         |  octet_length(encode(
@@ -591,8 +581,8 @@ object Archive {
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS off
         |  FROM r)
         |SELECT shard, rec_type, uri, off, len, body_md5 FROM q ORDER BY shard, off""".stripMargin,
-
-    "src_warc_zst_e2e" ->
+      (s, d) => warcRecords(s, d)),
+    Query("src_warc_gz_e2e", Corpus,
       """SELECT doc_id // 8 AS shard,
         |  (row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id) - 1)::BIGINT AS mi,
         |  'response' AS rec_type,
@@ -600,14 +590,15 @@ object Archive {
         |  octet_length(encode(text))::BIGINT AS len,
         |  md5(text) AS body_md5
         |FROM documents ORDER BY shard, mi""".stripMargin,
-
-    "src_warc_gz_e2e" ->
+      (s, d) => warcGzE2e(s, d)),
+    Query("src_warc_zst_e2e", Corpus,
       """SELECT doc_id // 8 AS shard,
         |  (row_number() OVER (PARTITION BY doc_id // 8 ORDER BY doc_id) - 1)::BIGINT AS mi,
         |  'response' AS rec_type,
         |  'https://crawl.test/doc/' || doc_id::VARCHAR AS uri,
         |  octet_length(encode(text))::BIGINT AS len,
         |  md5(text) AS body_md5
-        |FROM documents ORDER BY shard, mi""".stripMargin
+        |FROM documents ORDER BY shard, mi""".stripMargin,
+      (s, d) => warcZstE2e(s, d))
   )
 }

@@ -173,6 +173,23 @@ class IoSpec extends SparkSpec {
     assert(fp(Seq(1L -> null)) != fp(Seq(1L -> "")))
   }
 
+  test("persisted artifact names are not hidden from Spark's file listing") {
+    // a data dir's leading '/' must not become the name's leading '_'
+    import graft.operators.{Dedup, Link, Similarity}
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val paths = Seq(
+      Dedup.componentsArtifactPath(spark, sfDir),
+      Dedup.bloomArtifactPath(docs.filter(col("doc_id") < 20), sfDir),
+      Similarity.ivfPqArtifactPath(
+        Tables.embeddings(spark, sfDir).select("vec_id", "embedding"), sfDir),
+      Link.linkIndexArtifactPath(spark,
+        Link.cleanEntities(Tables.customer(spark, sfDir), "c_custkey"), sfDir))
+    paths.foreach { p =>
+      val name = new java.io.File(p).getName
+      assert(!name.startsWith("_") && !name.startsWith("."), p)
+    }
+  }
+
   test("persisted artifacts re-key on regenerated inputs (staleness contract)") {
     // The decon_bloom_persisted contract applied to the other two
     // persisted families: the on-disk key carries a corpus content

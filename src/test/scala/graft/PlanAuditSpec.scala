@@ -171,11 +171,12 @@ class PlanAuditSpec extends SparkSpec {
     // Sort(global=true) = distributed range sort, Sort(global=false) over
     // Repartition(1) = the local answer sort.
     import org.apache.spark.sql.catalyst.plans.logical.Sort
-    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+    SparkEntry.registry.sortBy(_.name).foreach { r =>
+      val q = r.name
       val df = run(q)
       df.queryExecution.optimizedPlan match {
         case Sort(_, global, _, _) =>
-          if (SparkEntry.corpusGrainQueries(q))
+          if (r.grain == Grain.Corpus)
             assert(global,
               s"$q: corpus-grain output funnels through a one-task local sort")
           else
@@ -183,7 +184,7 @@ class PlanAuditSpec extends SparkSpec {
               s"$q: answer-sized output pays a range-sampling pass")
         case _ => // no trailing sort at the root (TakeOrdered pagination etc.)
       }
-      if (!SparkEntry.corpusGrainQueries(q))
+      if (r.grain == Grain.Answer)
         assert(!plan(df).contains("rangepartitioning"),
           s"$q plans a range sort:\n${plan(df).take(1500)}")
     }
@@ -374,27 +375,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(!fc.contains("CartesianProduct"), fc.take(1500))
   }
 
-  test("corpusGrainQueries: no dead entries, and measured grain implies membership") {
+  test("measured corpus grain implies a Corpus registration") {
     // The presentation-sort audit above derives its expected shape from
-    // corpusGrainQueries itself, so on its own it is circular: a future
-    // corpus-grain registration omitted from the set would pass while
-    // funnelling its output through one task, and a typo'd entry is
-    // silently inert. Two independent checks close that:
-    // (1) every set entry names a registered query;
-    val dead = SparkEntry.corpusGrainQueries -- SparkEntry.queries.keySet
-    assert(dead.isEmpty, s"corpusGrainQueries entries match no registered query: $dead")
-    // (2) the membership criterion is re-MEASURED, not trusted: count
-    // every query's output at sf0.001 and sf0.01 and apply the documented
-    // criterion at test scale — >= 200 rows at sf0.01 (the 2000-at-sf0.1
-    // threshold, linear grain) AND >= 3x growth across the decade (which
-    // exonerates fixed-size samples/top-k that happen to be large).
-    // One-sided by design: small pair-list members keep their membership
-    // on the documented sf0.01->sf0.1 growth evidence instead.
+    // each registration's grain itself, so on its own it is circular: a
+    // corpus-grain query registered as Answer would pass while
+    // funnelling its output through one task. So the Grain criterion is
+    // re-MEASURED, not trusted: count every Answer query's output at
+    // sf0.001 and sf0.01 and apply the documented criterion at test
+    // scale — >= 200 rows at sf0.01 (the 2000-at-sf0.1 threshold, linear
+    // grain) AND >= 3x growth across the decade (which exonerates
+    // fixed-size samples/top-k that happen to be large). One-sided by
+    // design: small pair-list Corpus queries keep their grain on the
+    // documented sf0.01->sf0.1 growth evidence instead.
     val sf001 = "/root/testdata/sf0.001"
     val sf01 = "/root/testdata/sf0.01"
     val sf1 = "/root/testdata/sf0.1"
-    // only NON-members can be missing, so only they need measuring —
-    // ~70 queries instead of 2×186 executions. BOTH decades are
+    // only Answer queries can be misregistered, so only they need
+    // measuring — ~90 queries instead of 2×259 executions. BOTH decades are
     // measured (r13 ADVICE): a table that is flat from sf0.001 to
     // sf0.01 (documents: 500→500) exonerated linear-grain queries under
     // the first decade alone — sink_webdataset (2 rows/doc) and
@@ -402,8 +399,7 @@ class PlanAuditSpec extends SparkSpec {
     // their growth from sf0.01 to sf0.1. The second decade measures
     // queries with ≥ 100 rows at sf0.01 and flags ≥ 3× growth landing
     // ≥ 1000 rows at sf0.1.
-    val missing = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(SparkEntry.corpusGrainQueries)
+    val missing = SparkEntry.registry.filter(_.grain == Grain.Answer).map(_.name).sorted
       .flatMap { q =>
         val n01 = SparkEntry.queries(q)(spark, sf01).count()
         val firstDecade = n01 >= 200 && {
@@ -417,7 +413,7 @@ class PlanAuditSpec extends SparkSpec {
         if (firstDecade || secondDecade) Some(q) else None
       }
     assert(missing.isEmpty,
-      s"measured corpus-grain queries missing from corpusGrainQueries " +
+      s"measured corpus-grain queries registered with Grain.Answer " +
         s"(their presentation sort funnels through one task): $missing")
   }
 

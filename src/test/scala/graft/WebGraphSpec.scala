@@ -157,7 +157,7 @@ class WebGraphSpec extends SparkSpec {
   }
 
   test("graph_components: nation edges never cross clusters, sizes consistent") {
-    val comp = Graph.queries("graph_components")(spark, sfDir).cache()
+    val comp = SparkEntry.queries("graph_components")(spark, sfDir).cache()
     try {
       // the nation predicate fragments the trade graph: >1 component,
       // every edge's endpoints share a cluster (it IS a valid labelling)
@@ -176,7 +176,7 @@ class WebGraphSpec extends SparkSpec {
   }
 
   test("graph_degree_dist: buckets are powers of two and bound their degrees") {
-    val rows = Graph.queries("graph_degree_dist")(spark, sfDir).collect()
+    val rows = SparkEntry.queries("graph_degree_dist")(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (bucket, mn, mx) = (r.getLong(1), r.getLong(3), r.getLong(4))

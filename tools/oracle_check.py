@@ -1,7 +1,14 @@
 #!/usr/bin/env python3
 """Local simulation of the driver's correctness gate: run graft.Verify
 output against DuckDB oracles on the same parquet tables, compare
-values (columns sorted by name, rows sorted by all columns)."""
+values (columns sorted by name, rows sorted by all columns).
+
+Exits non-zero on any value mismatch, on any query Verify's
+failures.json lists (a query that threw has no dump to compare), and on
+any dump without an oracle (every registered query carries one, so a
+skip means the dump and oracle_sql.json disagree).
+
+usage: oracle_check.py [VERIFY_OUT_DIR] [SF_DIR]"""
 import duckdb, glob, json, math, os, sys
 import pandas as pd
 
@@ -15,6 +22,12 @@ for t in glob.glob(f"{sf}/*.parquet"):
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails, passes, skips = [], [], []
+try:
+    verify_failures = json.load(open(f"{out}/failures.json"))
+except FileNotFoundError:
+    verify_failures = {"failures.json": "missing from the Verify output"}
+for name, msg in sorted(verify_failures.items()):
+    fails.append(f"{name}: VERIFY FAILED {msg}")
 for name in sorted(os.listdir(out)):
     p = os.path.join(out, name)
     if not os.path.isdir(p):
@@ -67,4 +80,4 @@ for s in passes: print("PASS", s)
 for s in skips: print("SKIP", s)
 for s in fails: print("FAIL", s)
 print(f"\n{len(passes)} pass, {len(fails)} fail, {len(skips)} no-oracle")
-sys.exit(1 if fails else 0)
+sys.exit(1 if fails or skips else 0)
