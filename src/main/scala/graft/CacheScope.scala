@@ -13,10 +13,12 @@ import org.apache.spark.sql.DataFrame
   * in GC/eviction time (the BENCH_r04 pass-5 ANN spikes).
   *
   * Contract: an operator registers each checkpointed df it cannot free
-  * itself; the NEXT query invocation (by which time the previous result
-  * has been materialized — Verify/Bench/the driver all consume a query
-  * fully before building the next) sweeps everything registered earlier.
-  * At most one invocation's blocks are ever outstanding.
+  * itself; the same thread's NEXT query invocation sweeps everything it
+  * registered earlier. Registrations are kept per calling thread, so a
+  * thread consumes a query's result before it builds its next one
+  * (Verify, Bench, Probe and the specs all do), while concurrent callers
+  * on one session never free each other's blocks. At most one
+  * invocation's blocks are outstanding per thread.
   *
   * Fault-tolerance caveat for cluster deployments: `localCheckpoint`
   * trades lineage for speed — its blocks live on executors with no
@@ -29,10 +31,11 @@ import org.apache.spark.sql.DataFrame
   * persisted index twins) or `spark.checkpoint` with a checkpoint dir.
   */
 object CacheScope {
-  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private val pending = ThreadLocal.withInitial(() => new java.util.ArrayDeque[DataFrame]())
 
-  /** Track a checkpointed df whose blocks must outlive plan construction. */
-  def register(df: DataFrame): DataFrame = { pending.add(df); df }
+  /** Track a checkpointed df whose blocks must outlive plan construction,
+    * until the calling thread's next [[sweep]]. */
+  def register(df: DataFrame): DataFrame = { pending.get.add(df); df }
 
   /** Deterministically free a checkpointed df's storage NOW.
     *
@@ -62,8 +65,9 @@ object CacheScope {
     }
   }
 
-  /** Free every block registered by previous invocations. Safe to call at
-    * any point where no earlier query's un-materialized plan is live.
+  /** Free every block the calling thread registered in previous
+    * invocations. Safe to call at any point where none of this thread's
+    * earlier un-materialized plans is live.
     * Blocking (via [[free]]): the bound ("at most one invocation's blocks
     * outstanding") must hold the moment the next query starts allocating,
     * not eventually — async freeing leaves old blocks competing with the
@@ -72,10 +76,11 @@ object CacheScope {
     * round-trip, milliseconds against a query run.
     */
   def sweep(): Unit = {
-    var df = pending.poll()
+    val q = pending.get
+    var df = q.poll()
     while (df != null) {
       free(df)
-      df = pending.poll()
+      df = q.poll()
     }
   }
 }

@@ -26,16 +26,22 @@ object Tables {
     * is detected by the table directory's mtime in the key (one ~µs
     * stat per load vs the ~50 ms listing+schema it replaces) — the
     * auto-refresh analog of `REFRESH TABLE`, pinned by IoSpec's
-    * staleness contract.
+    * staleness contract. [[IndexCache]] keys indexes on the same stat.
     */
   private val rel =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
 
+  private def path(dir: String, name: String): String = s"$dir/$name.parquet"
+  private def mtime(path: String): Long = new java.io.File(path).lastModified
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val mtime = new java.io.File(path).lastModified
-    rel.computeIfAbsent((spark, path, mtime), k => k._1.read.parquet(k._2))
+    val p = path(dir, name)
+    rel.computeIfAbsent((spark, p, mtime(p)), k => k._1.read.parquet(k._2))
   }
+
+  /** The data version of `dir`: each table's mtime, as `load` reads it.
+    * Rewriting any table under `dir` moves it. */
+  def version(dir: String): Seq[Long] = names.map(n => mtime(path(dir, n)))
 
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")

@@ -591,8 +591,6 @@ object Dedup {
         .observe(obs, count(when(col("cluster") =!= col("_prev"), lit(1))).as("changed"))
         .localCheckpoint(true)
       changed = obs.get("changed").asInstanceOf[Long]
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${it + 1} changed=$changed")
       // free the superseded snapshot — its checkpoint-root Dataset, per
       // CacheScope.free's contract (free walks the whole plan's
       // LogicalRDDs, so the root names exactly the one checkpoint)
@@ -1043,13 +1041,11 @@ object Dedup {
     * exact-dedup reps and the minhash component labelling are
     * corpus-level indexes a dedup deployment builds ONCE and serves
     * every downstream query from (components, keeper tables, soft
-    * dedup, size reports). Deterministic constructions, so caching
-    * cannot change any result. Dependencies between indexes resolve
-    * BEFORE the dependent's IndexCache.of call — computeIfAbsent is not
-    * re-entrant (see IndexCache docs).
+    * dedup, size reports). Deterministic constructions over the dir's
+    * current data version, so caching cannot change any result.
     */
   def repsOf(s: SparkSession, d: String): DataFrame =
-    graft.IndexCache.of(s"$d|reps")(
+    graft.IndexCache.of(s, d, "reps")(
       representatives(Tables.documents(s, d).select("doc_id", "text"),
         "doc_id", "text"))
 
@@ -1068,22 +1064,19 @@ object Dedup {
     * signature depends only on the text — so every variant joins its
     * ids onto this one table by content hash instead of re-hashing.
     */
-  def sigsByTextOf(s: SparkSession, d: String): DataFrame = {
-    val reps = repsOf(s, d) // resolved OUTSIDE the thunk (not re-entrant)
-    graft.IndexCache.of(s"$d|sigs|3|8")(
+  def sigsByTextOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, "sigs|3|8") {
+      val reps = repsOf(s, d)
       minhashSignatures(reps.select("doc_id", "text"), "doc_id", "text", n = 3, k = 8)
         .join(reps.select(col("doc_id"), md5(col("text")).as("_ch")), "doc_id")
-        .drop("doc_id"))
-  }
+        .drop("doc_id")
+    }
 
-  def pairsOf(s: SparkSession, d: String): DataFrame = {
-    val reps = repsOf(s, d)          // both dependencies resolved OUTSIDE
-    val sigs = sigsByTextOf(s, d)    // the thunk (not re-entrant)
-    graft.IndexCache.of(s"$d|pairs|3|8|2")(
-      minhashPairsOfReps(reps.select("doc_id", "text"),
+  def pairsOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, "pairs|3|8|2")(
+      minhashPairsOfReps(repsOf(s, d).select("doc_id", "text"),
         "doc_id", "text", n = 3, k = 8, rowsPerBand = 2,
-        prebuiltSigs = Some(sigs)))
-  }
+        prebuiltSigs = Some(sigsByTextOf(s, d))))
 
   /** Minhash near-dup component labelling (doc_id → cluster) over the
     * reps, as a session index (params pinned to the oracle constants). */
@@ -1123,23 +1116,16 @@ object Dedup {
       s"$d|$bloomN|$bloomBits|$bloomHashes|${fpRow.getLong(0)}x${fpRow.getLong(1)}")
   }
 
-  def componentsOf(s: SparkSession, d: String): DataFrame = {
-    val reps = repsOf(s, d)    // both dependencies resolved OUTSIDE the
-    val pairs = pairsOf(s, d)  // thunk (not re-entrant)
-    graft.IndexCache.of(s"$d|components|3|8|2") {
-      connectedComponents(reps.select("doc_id"), "doc_id",
-        pairs.select("id_a", "id_b"), "id_a", "id_b")
-    }
-  }
+  def componentsOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, "components|3|8|2")(
+      connectedComponents(repsOf(s, d).select("doc_id"), "doc_id",
+        pairsOf(s, d).select("id_a", "id_b"), "id_a", "id_b"))
 
   /** Rep-level cluster table with content hash and per-cluster DOC
     * sizes — the shared substrate of soft dedup and the size report. */
-  def clusterSizesOf(s: SparkSession, d: String): DataFrame = {
-    val reps = repsOf(s, d)       // both dependencies resolved OUTSIDE
-    val comps = componentsOf(s, d) // the thunk (not re-entrant)
-    graft.IndexCache.of(s"$d|clustersizes")(
-      repClusterSizes(reps, comps, "doc_id", "text"))
-  }
+  def clusterSizesOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, "clustersizes")(
+      repClusterSizes(repsOf(s, d), componentsOf(s, d), "doc_id", "text"))
 
   /** Quality-aware cluster collapse: instead of the min-id keeper every
     * other dedup path uses, keep each near-dup cluster's HIGHEST-quality

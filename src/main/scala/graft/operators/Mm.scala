@@ -1468,7 +1468,7 @@ object Mm {
         // (r15): a deployment reads MP4 bytes from storage shards, it
         // doesn't synthesize them, so the steady-state row measures the
         // six-level sample-table walk + per-sample hash alone
-        mp4SampleTable(graft.IndexCache.of(s"$d|fixture|mp4samples")(
+        mp4SampleTable(graft.IndexCache.of(s, d, "fixture|mp4samples")(
           // fan the degenerate scan out BEFORE caching so the artifact
           // itself materializes parallel (walk side pays no exchange)
           graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
@@ -1497,7 +1497,7 @@ object Mm {
       // lpad(hex(dhash), 16, '0') — bit-exact through the LZW round trip
       """WITH p AS (SELECT doc_id, doc_id % 3 + 2 AS f FROM documents), fr AS (SELECT doc_id, unnest(range(0, f::INT)) AS fi FROM p), cells AS (SELECT doc_id, fi, cy, cx, ((((doc_id + 37 * fi) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM fr, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.fi, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.fi = a.fi AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, fi, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, fi, idx // 4) SELECT doc_id, fi::BIGINT AS fi, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS frame_dhash_hex FROM nib GROUP BY doc_id, fi ORDER BY doc_id, fi""",
       (s, d) =>
-        graft.IndexCache.of(s"$d|fixture|animgif")(
+        graft.IndexCache.of(s, d, "fixture|animgif")(
           graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
             .select(col("doc_id").cast("bigint").as("doc_id"),
               graft.functions.GraftFunctions.synthAnimGif(
@@ -1528,7 +1528,7 @@ object Mm {
       // cancels in the gradient), nibble-packed to the engine's hex
       """WITH p AS (SELECT doc_id, doc_id % 3 AS kmax FROM documents), im AS (SELECT doc_id, unnest(range(0, (kmax + 1)::INT))::BIGINT AS ii FROM p), cells AS (SELECT doc_id, ii, cy, cx, ((((doc_id + 53 * ii) % 167) * 31 + cy * 7 + cx * 13) % 97) % 8 AS gv FROM im, generate_series(0, 7) g1(cy), generate_series(0, 8) g2(cx)), bits AS (SELECT a.doc_id, a.ii, a.cy * 8 + a.cx AS idx, CASE WHEN b.gv > a.gv THEN 1 ELSE 0 END AS bit FROM cells a JOIN cells b ON b.doc_id = a.doc_id AND b.ii = a.ii AND b.cy = a.cy AND b.cx = a.cx + 1 WHERE a.cx < 8), nib AS (SELECT doc_id, ii, idx // 4 AS ni, sum(bit * (CASE idx % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) AS v FROM bits GROUP BY doc_id, ii, idx // 4) SELECT doc_id, ii, string_agg(substr('0123456789ABCDEF', (v + 1)::INT, 1), '' ORDER BY ni) AS dhash_hex FROM nib GROUP BY doc_id, ii ORDER BY doc_id, ii""",
       (s, d) => {
-        val html = graft.IndexCache.of(s"$d|fixture|inlinehtml")(
+        val html = graft.IndexCache.of(s, d, "fixture|inlinehtml")(
           graft.Par.fanOut(Tables.documents(s, d), col("doc_id"))
             .select(col("doc_id").cast("bigint").as("doc_id"), col("text"))
             .select(col("doc_id"), expr(

@@ -442,9 +442,6 @@ object Relational {
 
   // ---------------------------------------------------------------- queries
 
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
   private def ts(s: String) = lit(java.sql.Timestamp.valueOf(s))
 
   /** Shared moment sums for the stat_* pair: counts plus the five exact
@@ -863,12 +860,13 @@ object Relational {
           .select("c_custkey", "c_name")
         // the sketch is an INDEX ARTIFACT like the ANN lists: deterministic
         // for a (corpus, predicate, config), so build it once per session
-        // instead of one synchronous driver-side job per invocation. Every
-        // predicate/config input is part of the cache key — editing the
-        // filter without the key serving a stale (false-negative) sketch
-        // is impossible by construction.
-        val words = bloomCache.computeIfAbsent(s"$d|c_nationkey=$nation|$numBits|$numHashes",
-          _ => bloomOf(dim.select(col("c_custkey")), "c_custkey", numBits, numHashes))
+        // and data version instead of one synchronous driver-side job per
+        // invocation. Every predicate/config input is part of the cache
+        // key — editing the filter without the key serving a stale
+        // (false-negative) sketch is impossible by construction.
+        val words = graft.IndexCache.value(s, d,
+            s"bloom|c_nationkey=$nation|$numBits|$numHashes")(
+          bloomOf(dim.select(col("c_custkey")), "c_custkey", numBits, numHashes))
         bloomPrunedJoin(
           Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
           fk = "o_custkey", dim = dim, pk = "c_custkey",

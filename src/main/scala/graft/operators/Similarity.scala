@@ -323,7 +323,7 @@ object Similarity {
   /** The inverted-list table (id, vector, list id) — an INDEX ARTIFACT:
     * corpus-invariant, built once per (corpus, centroids) and queried many
     * times (the FAISS contract). Callers pass it prebuilt (see
-    * [[cachedIndex]]) or let the query build it inline.
+    * [[ivfListsOf]]) or let the query build it inline.
     */
   def ivfListsTable(nrm: DataFrame, id: String, cents: Seq[(Any, Seq[Double])],
                     euclid: Boolean): DataFrame =
@@ -966,8 +966,6 @@ object Similarity {
     * (this corpus's cos_c runs 0.12–0.85, median 0.31 — 0.15 flags only
     * the far tail, the "nothing explains this vector" shape). */
   val outlierTau = 0.15
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Any, Seq[Double])]]()
   // ANN config chosen against the tested recall contract (SimilaritySpec
   // recall@5 floor): for cos≈0.5 neighbors a 6-bit table matches with
   // P≈(2/3)^6≈0.09 — 4 such tables gave recall 0.22. 12 tables × 4 bits
@@ -990,25 +988,6 @@ object Similarity {
   // cos≈0.5, no planted neighbors) — 20 gave recall 0.56, 48 clears the
   // floor at a cost that stays |Q|×shortlist, independent of corpus size
   val pqShort = 48
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[(Any, Seq[Double])]]]()
-  private val pqResCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[(Any, Seq[Double])]]]()
-  private val sq8Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Seq[Double])]()
-
-  /** Session-lifetime INDEX TABLES (inverted lists, PQ codes): the FAISS
-    * contract is that an index is built once per corpus and amortized over
-    * every query — re-encoding 100 TB of vectors per lookup is not a real
-    * system's shape. Eagerly checkpointed and deliberately NOT
-    * CacheScope-swept; bounded at one narrow table per (corpus, config)
-    * key. Contents are deterministic, so caching cannot change results —
-    * the correctness gate's first invocation builds them from scratch.
-    */
-  // shared session-index contract — see graft.IndexCache (NOT re-entrant:
-  // builders must resolve nested index dependencies before the call)
-  private def cachedIndex(key: String)(build: => DataFrame): DataFrame =
-    graft.IndexCache.of(key)(build)
 
   /** The persisted IVF-PQ index's on-disk key: every training parameter
     * PLUS a content fingerprint of the embedding corpus (count + summed
@@ -1513,16 +1492,43 @@ object Similarity {
   val graphTopK = 5
   val graphInitCap = 48
 
+  // ---- session INDEX artifacts (graft.IndexCache): the FAISS contract
+  // is that an index is built once per corpus and amortized over every
+  // query — re-encoding 100 TB of vectors per lookup is not a real
+  // system's shape. One entry per (corpus, config) key; contents are
+  // deterministic, so caching cannot change results — the correctness
+  // gate's first invocation builds them from scratch.
+
+  private def nrmPlan(s: SparkSession, d: String): DataFrame =
+    normalized(Tables.embeddings(s, d).select("vec_id", "embedding"),
+      "vec_id", "embedding")
+
   /** The session-cached NORMALIZED vector table the sim family shares:
     * every ANN build and every beam-search hop scores against it, so it
     * is an index artifact in its own right (FAISS keeps exactly this
-    * table resident). IndexCache is not re-entrant — resolve this
-    * BEFORE any enclosing cachedIndex builder (pass it in). */
+    * table resident). */
   private def nrmOf(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s"$d|nrm") {
-      normalized(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        "vec_id", "embedding")
-    }
+    graft.IndexCache.of(s, d, "nrm")(nrmPlan(s, d))
+
+  /** The IVF coarse centroids every IVF query shares — training is index
+    * construction, run once per corpus, not re-trained per invocation. */
+  private def centsOf(s: SparkSession, d: String): Seq[(Any, Seq[Double])] =
+    graft.IndexCache.value(s, d, s"kmeans|$ivfC|$ivfIters")(
+      kmeansCentroids(nrmPlan(s, d), "vec_id", c = ivfC, iters = ivfIters))
+
+  /** The IVF inverted lists over [[centsOf]]. */
+  private def ivfListsOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, s"ivf_lists|$ivfC|$ivfIters")(
+      ivfListsTable(nrmPlan(s, d), "vec_id", centsOf(s, d), euclid = true))
+
+  /** The PQ codebooks the PQ and IVF-PQ queries share. */
+  private def pqBooksOf(s: SparkSession, d: String): Seq[Seq[(Any, Seq[Double])]] =
+    graft.IndexCache.value(s, d, s"pq|$pqM|$pqKs|$pqIters")(
+      pqCodebooks(nrmPlan(s, d), "vec_id", pqM, pqSubDims, pqKs, pqIters))
+
+  /** The SQ8 per-dim (min, scale) ranges (2×dims doubles). */
+  private def sq8Of(s: SparkSession, d: String): (Seq[Double], Seq[Double]) =
+    graft.IndexCache.value(s, d, "sq8")(sq8Train(nrmPlan(s, d)))
 
   /** The session-cached corpus LSH BUCKET table the graph-ANN family
     * shares (r16): the hash tables are the index's seed structure —
@@ -1532,36 +1538,30 @@ object Similarity {
     * deterministic (fixed annTabs hyperplanes), so serving it cached
     * cannot change results. */
   private def bktOf(s: SparkSession, d: String): DataFrame =
-    cachedIndex(s"$d|lshbkt|${annTabs.size}x${annTabs.head.size}") {
+    graft.IndexCache.of(s, d, s"lshbkt|${annTabs.size}x${annTabs.head.size}") {
       lshBuckets(Tables.embeddings(s, d).select("vec_id", "embedding"),
         "vec_id", "embedding", annTabs)
         .select(col("vec_id"), col("t"), col("bucket"))
     }
 
   /** The session-cached graph index the family's queries share. */
-  private def graphOf(s: SparkSession, d: String): DataFrame = {
-    val nrm = nrmOf(s, d) // resolve OUTSIDE the builder (re-entrancy)
-    cachedIndex(s"$d|knngraph|$graphK|$graphRounds") {
+  private def graphOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, s"knngraph|$graphK|$graphRounds")(
       knnGraph(Tables.embeddings(s, d), "vec_id", "embedding",
         k = graphK, rounds = graphRounds, tabs = annTabs,
-        bucketCap = graphInitCap, prebuiltNrm = Some(nrm))
-    }
-  }
+        bucketCap = graphInitCap, prebuiltNrm = Some(nrmOf(s, d))))
 
   /** The append family's frozen BASE graph: built over the corpus MINUS
     * the arriving batch (vec_id ≡ 7 mod 10 — the sim_ivfpq_append batch
     * convention), session-cached like every index artifact. */
   val graphBatchMod = 7
-  private def graphBaseOf(s: SparkSession, d: String): DataFrame = {
-    val nrm = nrmOf(s, d) // resolve OUTSIDE the builder (re-entrancy)
-    cachedIndex(s"$d|knngraph_base|$graphK|$graphRounds") {
+  private def graphBaseOf(s: SparkSession, d: String): DataFrame =
+    graft.IndexCache.of(s, d, s"knngraph_base|$graphK|$graphRounds")(
       knnGraph(
         Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= graphBatchMod),
         "vec_id", "embedding", k = graphK, rounds = graphRounds,
         tabs = annTabs, bucketCap = graphInitCap,
-        prebuiltNrm = Some(nrm.filter(col("vec_id") % 10 =!= graphBatchMod)))
-    }
-  }
+        prebuiltNrm = Some(nrmOf(s, d).filter(col("vec_id") % 10 =!= graphBatchMod))))
 
   // ---- oracle SQL generation (same plane literals, same fold order)
 
@@ -1847,15 +1847,9 @@ object Similarity {
         val truth = simTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
           k = 5, prebuiltNrm = Some(nrmOf(s, d)))
           .select("query_id", "neighbor_id")
-        val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-            "vec_id", c = ivfC, iters = ivfIters))
-        val nrmI = normalized(e, "vec_id", "embedding")
-        val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-          ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-        val ann = simIvfAnn(e, "vec_id", "embedding", cents,
+        val ann = simIvfAnn(e, "vec_id", "embedding", centsOf(s, d),
           queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
-          prebuiltLists = Some(lists))
+          prebuiltLists = Some(ivfListsOf(s, d)))
           .select("query_id", "neighbor_id")
         val perQ = truth.join(ann.withColumn("h", lit(1)),
             Seq("query_id", "neighbor_id"), "left")
@@ -1957,18 +1951,9 @@ object Similarity {
       ivfAnnOracle,
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        // centroid training is INDEX CONSTRUCTION — run once per corpus and
-        // reused by every query (the GroupIndex pattern), not re-trained per
-        // invocation; deterministic, so caching cannot change results
-        val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-            "vec_id", c = ivfC, iters = ivfIters))
-        val nrmI = normalized(e, "vec_id", "embedding")
-        val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-          ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-        simIvfAnn(e, "vec_id", "embedding", cents,
+        simIvfAnn(e, "vec_id", "embedding", centsOf(s, d),
           queryPred = col("vec_id") < 10, nProbe = 2, k = 5, euclid = true,
-          prebuiltLists = Some(lists))
+          prebuiltLists = Some(ivfListsOf(s, d)))
           .select("query_id", "neighbor_id", "cos_sim", "rank")
           .orderBy("query_id", "rank")
       }),
@@ -1982,17 +1967,10 @@ object Similarity {
       s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT f.vec_id AS neighbor_id, f.cid, e.label FROM fr f JOIN embeddings e ON f.vec_id = e.vec_id WHERE f.crank = 1), probes AS (SELECT vec_id AS query_id, cid FROM fr WHERE vec_id < 10 AND crank <= 4), cand AS (SELECT DISTINCT p.query_id, l.neighbor_id FROM probes p JOIN lists l USING (cid) WHERE p.query_id != l.neighbor_id AND l.label = 2), scored2 AS (SELECT query_id, neighbor_id, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON query_id = x.vec_id JOIN nrm y ON neighbor_id = y.vec_id), r AS (SELECT query_id, neighbor_id, cos_sim, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank FROM scored2) SELECT query_id, neighbor_id, cos_sim, rank FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-            "vec_id", c = ivfC, iters = ivfIters))
-        val nrmI = normalized(e, "vec_id", "embedding")
-        val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-          ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-        val meta = Tables.embeddings(s, d)
-          .select(col("vec_id").as("neighbor_id"), col("label"))
-        val listsMeta = cachedIndex(s"$d|ivf_lists_meta|$ivfC|$ivfIters")(
-          lists.join(meta, "neighbor_id"))
-        simIvfAnn(e, "vec_id", "embedding", cents,
+        val listsMeta = graft.IndexCache.of(s, d, s"ivf_lists_meta|$ivfC|$ivfIters")(
+          ivfListsOf(s, d).join(Tables.embeddings(s, d)
+            .select(col("vec_id").as("neighbor_id"), col("label")), "neighbor_id"))
+        simIvfAnn(e, "vec_id", "embedding", centsOf(s, d),
           queryPred = col("vec_id") < 10, nProbe = 4, k = 5, euclid = true,
           prebuiltLists = Some(listsMeta),
           neighborPred = Some(col("label") === 2))
@@ -2008,14 +1986,7 @@ object Similarity {
     Query("cluster_kmeans", Corpus,
       s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1) SELECT l.vec_id, l.cid, s.cluster_n FROM lists l JOIN (SELECT cid, count(*) AS cluster_n FROM lists GROUP BY cid) s USING (cid) ORDER BY l.vec_id""",
       (s, d) => {
-        val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-            "vec_id", c = ivfC, iters = ivfIters))
-        val nrmI = normalized(e, "vec_id", "embedding")
-        val lists = cachedIndex(s"$d|ivf_lists|$ivfC|$ivfIters")(
-          ivfListsTable(nrmI, "vec_id", cents, euclid = true))
-        val assign = lists.select(col("neighbor_id").as("vec_id"), col("cid"))
+        val assign = ivfListsOf(s, d).select(col("neighbor_id").as("vec_id"), col("cid"))
         val sizes = assign.groupBy("cid").agg(count(lit(1)).as("cluster_n"))
         assign.join(broadcast(sizes), "cid")
           .select("vec_id", "cid", "cluster_n")
@@ -2037,10 +2008,7 @@ object Similarity {
       s"""WITH $normCte, $kmeansCtes, fs AS (SELECT n.vec_id, c.cid, ${sqlDotRaw("n.ne", "c.ce")} - ${sqlDotRaw("c.ce", "c.ce")} / 2 AS score FROM nrm n CROSS JOIN c$ivfIters c), fr AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY 2.0 - score ASC, cid ASC) AS crank FROM fs), lists AS (SELECT vec_id, cid FROM fr WHERE crank = 1), cc AS (SELECT l.vec_id, l.cid, round(${sqlDotRaw("n.ne", "c.ce")} / sqrt(${sqlDotRaw("c.ce", "c.ce")}), 4) AS cos_c FROM lists l JOIN nrm n ON l.vec_id = n.vec_id JOIN c$ivfIters c ON l.cid = c.cid) SELECT vec_id, cid, cos_c, cos_c < $outlierTau AS is_outlier FROM cc ORDER BY vec_id""",
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val cents = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(normalized(e, "vec_id", "embedding"),
-            "vec_id", c = ivfC, iters = ivfIters))
-        embOutliers(e, "vec_id", "embedding", cents, tau = outlierTau)
+        embOutliers(e, "vec_id", "embedding", centsOf(s, d), tau = outlierTau)
           .orderBy("vec_id")
       }),
 
@@ -2066,7 +2034,7 @@ object Similarity {
       // fixpoint the Dedup oracles use; keep self-labelled reps + sizes
       s"""WITH RECURSIVE ${bucketsCte(dupTabs)}, $normCte, cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bkt a JOIN bkt b ON a.tid = b.tid AND a.bucket = b.bucket AND a.vec_id < b.vec_id), p AS (SELECT id_a, id_b, round(${sqlDotRaw("x.ne", "y.ne")}, 4) AS cos_sim FROM cand JOIN nrm x ON id_a = x.vec_id JOIN nrm y ON id_b = y.vec_id), prs AS (SELECT id_a, id_b FROM p WHERE cos_sim >= 0.4), e AS (SELECT id_a AS src, id_b AS dst FROM prs UNION ALL SELECT id_b AS src, id_a AS dst FROM prs), reach(id, label) AS (SELECT vec_id, vec_id FROM embeddings UNION SELECT e.dst, r.label FROM reach r JOIN e ON r.id = e.src), comp AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id), sizes AS (SELECT cluster, count(*) AS cluster_n FROM comp GROUP BY cluster) SELECT c.id AS vec_id, s.cluster_n FROM comp c JOIN sizes s ON c.cluster = s.cluster WHERE c.id = c.cluster ORDER BY vec_id""",
       (s, d) => {
-        val comps = cachedIndex(s"$d|semcomp|0.4") {
+        val comps = graft.IndexCache.of(s, d, "semcomp|0.4") {
           val e = Tables.embeddings(s, d).select("vec_id", "embedding")
           val pairs = embeddingPairs(e, "vec_id", "embedding", dupTabs,
             threshold = 0.4).select("id_a", "id_b")
@@ -2132,11 +2100,9 @@ object Similarity {
         pqTail),
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val nrm = normalized(e, "vec_id", "embedding")
-        // training is index construction: once per corpus (2×dims doubles)
-        val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
-        val codes = cachedIndex(s"$d|sq8_codes")(
-          sq8CodesTable(nrm, "vec_id", mn, sc))
+        val (mn, sc) = sq8Of(s, d)
+        val codes = graft.IndexCache.of(s, d, "sq8_codes")(
+          sq8CodesTable(nrmPlan(s, d), "vec_id", mn, sc))
         simSq8Ann(e, "vec_id", "embedding", col("vec_id") < 10, mn, sc,
           shortlist = pqShort, k = 5, prebuiltCodes = Some(codes))
           .select("query_id", "neighbor_id", "cos_sim", "rank")
@@ -2152,10 +2118,8 @@ object Similarity {
         s"""er AS (SELECT n.vec_id, list_transform(range(1, len(n.ne) + 1), i -> floor(abs(n.ne[i] - (v.mnl[i] + (c.cs[i] * v.scl[i]) / 255.0)) * 1000000.0)::BIGINT) AS e FROM nrm n JOIN codes c USING (vec_id) CROSS JOIN qv v) """ +
         s"""SELECT vec_id, list_max(e)::BIGINT AS max_abs_q6, list_sum(list_transform(e, x -> x * x))::BIGINT AS sse_q12, list_max(e) / 1000000.0 AS max_abs_err FROM er ORDER BY vec_id"""),
       (s, d) => {
-        val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        val nrm = normalized(e, "vec_id", "embedding")
-        val (mn, sc) = sq8Cache.computeIfAbsent(d, _ => sq8Train(nrm))
-        sq8QuantizeError(nrm, "vec_id", mn, sc)
+        val (mn, sc) = sq8Of(s, d)
+        sq8QuantizeError(nrmPlan(s, d), "vec_id", mn, sc)
           .orderBy("vec_id")
       }),
 
@@ -2163,13 +2127,9 @@ object Similarity {
       pqOracle,
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        // codebook training is index construction: once per corpus, cached
-        // like the IVF centroids (deterministic — caching can't change results)
-        val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-          _ => pqCodebooks(normalized(e, "vec_id", "embedding"), "vec_id",
-            pqM, pqSubDims, pqKs, pqIters))
-        val codes = cachedIndex(s"$d|pq_codes|$pqM|$pqKs|$pqIters")(
-          pqCodesTable(normalized(e, "vec_id", "embedding"), "vec_id", cbs, pqSubDims))
+        val cbs = pqBooksOf(s, d)
+        val codes = graft.IndexCache.of(s, d, s"pq_codes|$pqM|$pqKs|$pqIters")(
+          pqCodesTable(nrmPlan(s, d), "vec_id", cbs, pqSubDims))
         simPqAnn(e, "vec_id", "embedding", cbs, queryPred = col("vec_id") < 10,
           subDims = pqSubDims, shortlist = pqShort, k = 5,
           prebuiltCodes = Some(codes))
@@ -2182,11 +2142,9 @@ object Similarity {
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
         val nrm = normalized(e, "vec_id", "embedding")
-        val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-        val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-          _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
-        val lists = cachedIndex(s"$d|ivfpq_codes|$ivfC|$pqM|$pqKs|$pqIters")(
+        val coarse = centsOf(s, d)
+        val cbs = pqBooksOf(s, d)
+        val lists = graft.IndexCache.of(s, d, s"ivfpq_codes|$ivfC|$pqM|$pqKs|$pqIters")(
           ivfPqCodesTable(nrm, "vec_id", coarse, cbs, pqSubDims))
         simIvfPqAnn(e, "vec_id", "embedding", coarse, cbs,
           queryPred = col("vec_id") < 10, nProbe = 2,
@@ -2207,10 +2165,8 @@ object Similarity {
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
         val nrm = normalized(e, "vec_id", "embedding")
-        val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-        val cbs = pqCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-          _ => pqCodebooks(nrm, "vec_id", pqM, pqSubDims, pqKs, pqIters))
+        val coarse = centsOf(s, d)
+        val cbs = pqBooksOf(s, d)
         // kmeansSampleCut in the key: the coarse centroids are a function
         // of the training-sample draw, so a sampling change re-keys the
         // artifact instead of serving codes quantized under stale centroids
@@ -2241,11 +2197,12 @@ object Similarity {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
         val isBatch = col("vec_id") >= ivfC && col("vec_id") % 10 === 7
         val nrmBase = normalized(e.filter(!isBatch), "vec_id", "embedding")
-        val coarse = kmeansCache.computeIfAbsent(s"$d|app|$ivfC|$ivfIters",
-          _ => kmeansCentroids(nrmBase, "vec_id", c = ivfC, iters = ivfIters))
-        val cbs = pqCache.computeIfAbsent(s"$d|app|$pqM|$pqKs|$pqIters",
-          _ => pqCodebooks(nrmBase, "vec_id", pqM, pqSubDims, pqKs, pqIters))
-        val baseLists = cachedIndex(s"$d|ivfpq_app_base|$ivfC|$pqM|$pqKs|$pqIters")(
+        val coarse = graft.IndexCache.value(s, d, s"kmeans_app|$ivfC|$ivfIters")(
+          kmeansCentroids(nrmBase, "vec_id", c = ivfC, iters = ivfIters))
+        val cbs = graft.IndexCache.value(s, d, s"pq_app|$pqM|$pqKs|$pqIters")(
+          pqCodebooks(nrmBase, "vec_id", pqM, pqSubDims, pqKs, pqIters))
+        val baseLists = graft.IndexCache.of(s, d,
+            s"ivfpq_app_base|$ivfC|$pqM|$pqKs|$pqIters")(
           ivfPqCodesTable(nrmBase, "vec_id", coarse, cbs, pqSubDims))
         val batchCodes = ivfPqCodesTable(
           normalized(e.filter(isBatch), "vec_id", "embedding"),
@@ -2263,11 +2220,10 @@ object Similarity {
       (s, d) => {
         val e = Tables.embeddings(s, d).select("vec_id", "embedding")
         val nrm = normalized(e, "vec_id", "embedding")
-        val coarse = kmeansCache.computeIfAbsent(s"$d|$ivfC|$ivfIters",
-          _ => kmeansCentroids(nrm, "vec_id", c = ivfC, iters = ivfIters))
-        val rcbs = pqResCache.computeIfAbsent(s"$d|$pqM|$pqKs|$pqIters",
-          _ => pqResCodebooks(nrm, "vec_id", coarse, pqM, pqSubDims, pqKs, pqIters))
-        val lists = cachedIndex(s"$d|ivfpqres_codes|$ivfC|$pqM|$pqKs|$pqIters")(
+        val coarse = centsOf(s, d)
+        val rcbs = graft.IndexCache.value(s, d, s"pqres|$pqM|$pqKs|$pqIters")(
+          pqResCodebooks(nrm, "vec_id", coarse, pqM, pqSubDims, pqKs, pqIters))
+        val lists = graft.IndexCache.of(s, d, s"ivfpqres_codes|$ivfC|$pqM|$pqKs|$pqIters")(
           resCodesTable(nrm, "vec_id", coarse, rcbs, pqSubDims))
         simIvfPqResAnn(e, "vec_id", "embedding", coarse, rcbs,
           queryPred = col("vec_id") < 10, nProbe = 2,

@@ -1573,7 +1573,7 @@ object TextOps {
     */
   private[operators] def mergesFor(s: org.apache.spark.sql.SparkSession,
                                    d: String): DataFrame =
-    graft.IndexCache.of(s"$d|bpemerges|$bpeMergeK")(
+    graft.IndexCache.of(s, d, s"bpemerges|$bpeMergeK")(
       bpeMerges(Tables.documents(s, d).select("text"), "text", k = bpeMergeK))
 
   /** The merge loop unrolled as SQL: g0 is the character-delimited word

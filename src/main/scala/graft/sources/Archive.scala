@@ -380,8 +380,8 @@ object Archive {
     * short of 2^31 so zstd/tar overheads can't push past it. */
   val wdsShardCeiling = 2000000000L
 
-  /** Per-dataset scratch dir (md5 of the dataset path, the cachedIndex
-    * keying) — two datasets (or an sf1/sf10 pair in one session) must
+  /** Per-dataset scratch dir (md5 of the dataset path, keyed per dir
+    * like IndexCache) — two datasets (or an sf1/sf10 pair in one session) must
     * never read back each other's shards (r13 ADVICE race). */
   private[graft] def wdsScratch(dir: String, tag: String): String =
     s"${Io.scratch}/${tag}_" + java.security.MessageDigest.getInstance("MD5")

@@ -195,28 +195,55 @@ class IoSpec extends SparkSpec {
     // persisted families: the on-disk key carries a corpus content
     // fingerprint, so REGENERATING the input at the same path yields a
     // NEW artifact path and atomicParquetArtifact rebuilds — a fresh
-    // session can never serve an index of vanished data. (Within one
-    // session the in-memory index caches are keyed by dir and
-    // documented deterministic; this pins the cross-session disk layer.)
-    import org.apache.spark.sql.functions.col
+    // session can never serve an index of vanished data. Within one
+    // session, IndexCache entries carry the dir's data version, so the
+    // in-memory indexes rebuild too: dedup_components (a checkpointed
+    // table) and q_join_bloom (a driver-side sketch) warmed before the
+    // rewrite must answer like a fresh dir holding the new data.
+    import org.apache.spark.sql.functions.{col, lit}
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_stale").toString
-    def writeDocs(texts: Seq[String]): Unit =
-      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    def writeTo(at: String, name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$at/$name.parquet")
+    def writeDocs(texts: Seq[String], at: String = dir): Unit =
+      writeTo(at, "documents",
+        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
     def writeEmb(shift: Double): Unit =
-      (0L until 40L).map(i => (i, Array.tabulate(8)(j => (i * 7 + j + shift).toFloat)))
-        .toDF("vec_id", "embedding")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      writeTo(dir, "embeddings",
+        (0L until 40L).map(i => (i, Array.tabulate(8)(j => (i * 7 + j + shift).toFloat)))
+          .toDF("vec_id", "embedding"))
+    val cust = Tables.customer(spark, sfDir).filter(col("c_custkey") <= 30)
+      .select("c_custkey", "c_name", "c_nationkey")
+    // the rewrite moves every customer into nation 3, q_join_bloom's key
+    val custMoved = cust.withColumn("c_nationkey", col("c_nationkey") * 0 + lit(3))
+    val ords = Tables.orders(spark, sfDir).filter(col("o_custkey") <= 30)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    def answer(name: String, at: String) = run(name, at).collect().toSeq
     writeDocs(Seq("aa bb cc", "aa bb cc", "dd ee ff"))
     writeEmb(0.0)
+    writeTo(dir, "customer", cust)
+    writeTo(dir, "orders", ords)
     val compPath1 = graft.operators.Dedup.componentsArtifactPath(spark, dir)
     val ivfPath1 = graft.operators.Similarity.ivfPqArtifactPath(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"), dir)
-    // regenerate both inputs at the SAME dir
+    // warm the session indexes over the old data
+    answer("dedup_components", dir)
+    answer("q_join_bloom", dir)
+    // regenerate the inputs at the SAME dir, and the new data at a fresh one
     writeDocs(Seq("aa bb cc", "zz yy xx", "dd ee ff"))
     writeEmb(0.5)
+    writeTo(dir, "customer", custMoved)
+    writeDocs(Seq("aa bb cc", "zz yy xx", "dd ee ff"), fresh)
+    writeTo(fresh, "customer", custMoved)
+    writeTo(fresh, "orders", ords)
+    assert(answer("dedup_components", dir) == answer("dedup_components", fresh),
+      "dedup_components served a stale index after the rewrite")
+    val joined = answer("q_join_bloom", dir)
+    assert(joined == answer("q_join_bloom", fresh),
+      "q_join_bloom served a stale sketch after the rewrite")
+    assert(joined.length == ords.count(), "every order now joins a nation-3 customer")
     val compPath2 = graft.operators.Dedup.componentsArtifactPath(spark, dir)
     val ivfPath2 = graft.operators.Similarity.ivfPqArtifactPath(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"), dir)
@@ -232,6 +259,7 @@ class IoSpec extends SparkSpec {
     assert(a1 == 3 && a2 == 2, s"expected fresh builds per key, got $a1/$a2")
     assert(new java.io.File(compPath1, "_SUCCESS").exists())
     assert(new java.io.File(compPath2, "_SUCCESS").exists())
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    Seq(dir, fresh).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 }

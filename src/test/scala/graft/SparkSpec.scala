@@ -31,7 +31,8 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
-  def run(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
+  def run(name: String, dir: String = sfDir): DataFrame =
+    SparkEntry.queries(name)(spark, dir)
   /** the physical plan, for plan-shape assertions */
   def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 }
