@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.CacheScope
+import graft.{CacheScope, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -514,15 +514,15 @@ object Dedup {
     * removal list). Min-label propagation to fixpoint: each iteration
     * every node takes the min of its own and its neighbors' labels — a
     * join + hash-agg, two shuffles per round, converging in
-    * graph-diameter rounds (near-dup components are shallow; a 100 TB
-    * deployment would add the alternating-star contraction for
-    * pathological chains and checkpoint between rounds — localCheckpoint
-    * here truncates the growing lineage the same way).
+    * graph-diameter rounds (near-dup components are shallow). Each
+    * round is checkpointed by [[graft.Fixpoint]], which truncates the
+    * growing lineage.
     *
     * The fixpoint is unique, so the result is deterministic and
     * oracle-comparable (the DuckDB oracle reaches it via a recursive
-    * CTE). Throws if `maxIters` rounds don't converge — an honest
-    * failure beats a silently-partial clustering.
+    * CTE). If `maxIters` rounds don't converge, the answer comes from
+    * [[connectedComponentsStar]] instead — the same fixpoint, never a
+    * partial clustering.
     */
   def connectedComponents(nodes: DataFrame, id: String, edges: DataFrame,
                           aCol: String, bCol: String, maxIters: Int = 20): DataFrame = {
@@ -541,25 +541,21 @@ object Dedup {
     // over the checkpointed edge blocks, riding the same job): shallow
     // near-dup clusters are then BORN at their fixpoint and converge in
     // one confirming round instead of two, and deeper graphs save a
-    // round whenever the diameter parity tips (graph_components'
-    // sf0.1 floor decomposition in BASELINE.md (r11) priced a round at
-    // ~0.9 s of its 3.5 s propagation)
+    // round whenever the diameter parity tips (on graph_components at
+    // sf0.1 a round measured ~0.9 s of the 3.5 s propagation)
     val nbrMin = e.groupBy(col("_src").as(id)).agg(min(col("_dst")).as("_nm"))
-    var snapshot = nodes.select(col(id)).distinct()
+    val seed = nodes.select(col(id)).distinct()
       .join(nbrMin, Seq(id), "full_outer")
       .select(col(id), least(col(id), coalesce(col("_nm"), col(id))).as("cluster"))
-      .localCheckpoint(true)
-    var labels = snapshot
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
+    val fix = Fixpoint.iterate("connectedComponents", seed, maxIters) { (snapshot, _, _) =>
+      val labels = snapshot.select(col(id), col("cluster"))
       // TWO propagation steps per materialised round: the checkpoint is a
       // per-round fixed cost (a job launch — the dominant cost of shallow
       // components in local mode, and a scheduling round-trip on a
       // cluster), so covering distance 2 per round halves them; the extra
       // join/agg pair rides inside the same plan, and the convergence
-      // count rides the checkpoint job itself (observe() below). A
-      // 3-step variant was MEASURED SLOWER at sf0.1 (4.2 s vs 3.5 s
+      // count rides the checkpoint job itself (the observed `changed`).
+      // A 3-step variant was MEASURED SLOWER at sf0.1 (4.2 s vs 3.5 s
       // propagation on the nation trade graph: the marginal join+agg
       // inside the round costs more than the round it saves), so two is
       // the pinned choice, with the min-neighbor seed prepaying step 1.
@@ -579,40 +575,19 @@ object Dedup {
       val msgs2 = e.join(mid.select(col(id), col("cluster")), e("_src") === col(id))
         .select(col("_dst").as(id), col("cluster"),
           col("cluster").as("_prev"), lit(0).as("_self"))
-      // the convergence count rides the SAME job as the checkpoint
-      // materialization via observe() metrics (CollectMetrics passes rows
-      // through; the checkpoint action fires the listener that fills the
-      // Observation) — the old shape paid a second job launch per round
-      // just to count a cached DataFrame
-      val obs = org.apache.spark.sql.Observation()
       val next = mid.withColumn("_self", lit(1)).unionByName(msgs2)
         .groupBy(col(id)).agg(min(col("cluster")).as("cluster"),
           max(when(col("_self") === 1, col("_prev"))).as("_prev"))
-        .observe(obs, count(when(col("cluster") =!= col("_prev"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      // free the superseded snapshot — its checkpoint-root Dataset, per
-      // CacheScope.free's contract (free walks the whole plan's
-      // LogicalRDDs, so the root names exactly the one checkpoint)
-      CacheScope.free(snapshot)
-      snapshot = next
-      labels = next.select(col(id), col("cluster"))
-      it += 1
-    }
-    if (changed > 0) {
-      // Diameter exceeded the propagation budget — near-dup components are
-      // shallow by construction, so this is the PATHOLOGICAL-graph path
-      // (adversarial chains): switch to alternating-star contraction,
-      // which converges in O(log² n) rounds on ANY topology and reaches
-      // the same unique min-label fixpoint. Strictly better than the old
-      // honest-failure throw: still honest (same answer), never partial.
-      CacheScope.register(snapshot)
-      return connectedComponentsStar(nodes, id, edges, aCol, bCol)
-    }
-    // the returned plan reads the final snapshot's blocks — free them when
-    // the NEXT query starts (the caller has consumed this result by then)
-    CacheScope.register(snapshot)
-    labels
+      (next, Seq(count(when(col("cluster") =!= col("_prev"), lit(1))).as("changed")))
+    } { (_, m) => m("changed") == 0L }
+    if (fix.converged) fix.state.select(col(id), col("cluster"))
+    // Diameter exceeded the propagation budget — near-dup components are
+    // shallow by construction, so this is the PATHOLOGICAL-graph path
+    // (adversarial chains): switch to alternating-star contraction,
+    // which converges in O(log² n) rounds on ANY topology and reaches
+    // the same unique min-label fixpoint: the same answer, never a
+    // partial clustering.
+    else connectedComponentsStar(nodes, id, edges, aCol, bCol)
   }
 
   /** Connected components by ALTERNATING-STAR CONTRACTION (the
@@ -637,11 +612,6 @@ object Dedup {
   def connectedComponentsStar(nodes: DataFrame, id: String, edges: DataFrame,
                               aCol: String, bCol: String,
                               maxRounds: Int = 40): DataFrame = {
-    // canonical undirected edges as (hi > lo); self-loops dropped
-    var e = CacheScope.register(
-      edges.select(greatest(col(aCol), col(bCol)).as("hi"),
-          least(col(aCol), col(bCol)).as("lo"))
-        .filter(col("hi") =!= col("lo")).distinct().localCheckpoint(true))
     def bi(ed: DataFrame): DataFrame =
       ed.select(col("hi").as("u"), col("lo").as("v"))
         .unionByName(ed.select(col("lo").as("u"), col("hi").as("v")))
@@ -649,10 +619,13 @@ object Dedup {
     def mins(ed: DataFrame): DataFrame =
       bi(ed).groupBy(col("u")).agg(min(col("v")).as("_mn"))
         .select(col("u"), least(col("u"), col("_mn")).as("m"))
-    var sig: (Any, Any) = null
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    // canonical undirected edges as (hi > lo); self-loops dropped
+    val seed = edges.select(greatest(col(aCol), col(bCol)).as("hi"),
+        least(col(aCol), col(bCol)).as("lo"))
+      .filter(col("hi") =!= col("lo")).distinct()
+    // the seed observes nothing, so round 1 never converges: convergence
+    // is two consecutive rounds with equal (n, h) signatures
+    val e = Fixpoint.iterate("connectedComponentsStar", seed, maxRounds) { (e, _, _) =>
       // large-star: (v, m(u)) for v ∈ Γ(u), v > u — hooks large neighbors
       val ls = bi(e).join(mins(e), "u").filter(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
@@ -670,25 +643,11 @@ object Dedup {
         .select(greatest(col("_x"), col("m")).as("hi"),
           least(col("_x"), col("m")).as("lo"))
         .distinct()
-      val obs = org.apache.spark.sql.Observation()
       // decimal sum: a long sum of 64-bit hashes overflows under ANSI mode
-      val next = ss
-        .observe(obs, count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).as("h"))
-        .localCheckpoint(true)
-      val nsig = (obs.get("n"), obs.get("h"))
-      converged = nsig == sig
-      sig = nsig
-      // superseded edge set frees NOW (double-free via the registry
-      // sweep is a no-op for the round-0 input)
-      CacheScope.free(e)
-      e = next
-      round += 1
-    }
-    require(converged, s"star contraction did not converge in $maxRounds rounds")
-    // the labels plan below reads the final edge set's blocks
-    CacheScope.register(e)
+      (ss, Seq(count(lit(1)).as("n"),
+        coalesce(sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("h")))
+    } (_ == _).required
     // star forest: leaves point at their component min; centers label self;
     // isolated nodes (no edges at all) label self
     val lbl = bi(e).groupBy(col("u")).agg(min(col("v")).as("_mn"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Grain.{Answer, Corpus}
-import graft.Query
+import graft.{Fixpoint, Query}
 import graft.Tables
 
 /** Graph analytics over relational link structure. Connected components
@@ -335,9 +335,9 @@ object Graph {
     * variant of components' changed==0 fixpoint test. Node-grain
     * sides broadcast below the gate, so the fact-grain edge list is
     * never exchanged. The first cut kept the WHOLE distance table as
-    * the message source and re-min-agged it every round; the sf10
-    * probe (BASELINE.md) measured frontier messaging equal-or-
-    * better per round with the tail rounds collapsing to ~0.4 s once
+    * the message source and re-min-agged it every round; an sf10
+    * probe measured frontier messaging equal-or-better per round,
+    * with the tail rounds collapsing to ~0.4 s once
     * the shell is exhausted (diameter 4 < maxHops 6 on this graph).
     *
     * `maxHops` is bounded metadata (the oracle unrolls the same bound),
@@ -363,34 +363,24 @@ object Graph {
     require(eCnt > 0, "bfsLayers over an empty edge list")
     val bc = hintIf(eCnt <= broadcastLongLimit) _
     val seed = head.getLong(1)
-    var settled = graft.CacheScope.register(
-      e.sparkSession.range(0, 1)
-        .select(lit(seed).as("node"), lit(0L).as("hops"))
-        .localCheckpoint(true))
-    var frontier = settled
-    var hop = 1L
-    var fresh = 1L
-    while (fresh > 0 && hop <= maxHops) {
+    Fixpoint.iterate("bfsLayers",
+      e.sparkSession.range(0, 1).select(lit(seed).as("node"), lit(0L).as("hops")),
+      maxHops) { (settled, round, _) =>
+      val hop = round.toLong
       // every frontier node sits at hop-1, so the message hop is a
-      // literal and dedup within the round is a distinct, not a min-agg
+      // literal and dedup within the round is a distinct, not a min-agg.
+      // Round 1's frontier is the whole seed: unfiltered, its broadcast
+      // is reused by the settled side's (one job fewer per query)
+      val frontier = if (hop == 1) settled else settled.filter(col("hops") === hop - 1)
       val msgs = e.join(bc(frontier.select(col("node").as("_fr"))),
           e("src") === col("_fr"))
         .select(col("dst").as("node")).distinct()
         .join(bc(settled.select(col("node").as("_kn"))),
           col("node") === col("_kn"), "leftanti")
         .select(col("node"), lit(hop).as("hops"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = graft.CacheScope.register(
-        settled.unionByName(msgs)
-          .observe(obs, count(when(col("hops") === hop, lit(1))).as("fresh"))
-          .localCheckpoint(true))
-      fresh = obs.get("fresh").asInstanceOf[Long]
-      graft.CacheScope.free(settled)
-      settled = next
-      frontier = next.filter(col("hops") === hop)
-      hop += 1
-    }
-    settled
+      (settled.unionByName(msgs),
+        Seq(count(when(col("hops") === hop, lit(1))).as("fresh")))
+    } { (_, m) => m("fresh") == 0L }.state
   }
 
   /** Exact k-core: iteratively peel nodes of degree < k until the edge
@@ -417,33 +407,22 @@ object Graph {
     // smoke; pagerank hit the same class in its cached-edge variants).
     // Scanning the blocks from local disk costs one sequential read
     // per round; the iteration's memory then belongs to the agg + joins.
-    val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    var e = graft.CacheScope.register(
-      edges.select(col(aCol).cast("bigint").as("a"),
-        col(bCol).cast("bigint").as("b")).localCheckpoint(true, disk))
-    var cnt = e.count()
-    var converged = cnt == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
+    // Each state's edge count `n` rides its checkpoint job (the seed's
+    // too): the next round's broadcast gate reads it, and an unchanged
+    // count is the fixpoint.
+    val e = Fixpoint.iterate("kCore",
+      edges.select(col(aCol).cast("bigint").as("a"), col(bCol).cast("bigint").as("b")),
+      maxRounds, org.apache.spark.storage.StorageLevel.DISK_ONLY,
+      seedMetrics = Seq(count(lit(1)).as("n"))) { (e, _, m) =>
       val deg = e.select(col("a").as("node"))
         .unionByName(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
       val surv = deg.filter(col("d") >= k).select("node")
-      val bc = hintIf(cnt <= broadcastLongLimit) _
-      val obs = org.apache.spark.sql.Observation()
-      val next = graft.CacheScope.register(
-        e.join(bc(surv), e("a") === surv("node"), "leftsemi")
-          .join(bc(surv), e("b") === surv("node"), "leftsemi")
-          .observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint(true, disk))
-      val nextCnt = obs.get("n").asInstanceOf[Long]
-      graft.CacheScope.free(e)
-      e = next
-      converged = nextCnt == cnt
-      cnt = nextCnt
-      round += 1
-    }
-    require(converged, s"kCore did not converge in $maxRounds rounds")
+      val bc = hintIf(m("n").asInstanceOf[Long] <= broadcastLongLimit) _
+      (e.join(bc(surv), e("a") === surv("node"), "leftsemi")
+        .join(bc(surv), e("b") === surv("node"), "leftsemi"),
+        Seq(count(lit(1)).as("n")))
+    } (_ == _).required
     e.select(col("a").as("node")).unionByName(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
   }

@@ -1253,8 +1253,7 @@ object Similarity {
     val cand0 = probes.join(capped, Seq("t", "bucket"))
       .filter(col(id) =!= col("nb"))
       .select(col(id).as("src"), col("nb").as("dst")).distinct()
-    var g = graft.CacheScope.register(topK(cand0).localCheckpoint(true))
-    (1 to rounds).foreach { _ =>
+    graft.Fixpoint.iterate("knnGraph", topK(cand0), rounds) { (g, _, _) =>
       // REVERSE edges are in-degree-unbounded (a popular node — e.g.
       // every copy in a duplicate flood pointing at the cluster head —
       // collects arbitrarily many), and the neighbor-of-neighbor fan is
@@ -1277,9 +1276,8 @@ object Similarity {
         .filter(col("gb.dst") =!= col("ga.src"))
         .select(col("ga.src").as("src"), col("gb.dst").as("dst"))
       val cand = c1.unionByName(g.select("src", "dst")).distinct()
-      g = graft.CacheScope.register(topK(cand).localCheckpoint(true))
-    }
-    g
+      (topK(cand), Nil)
+    } ((_, _) => false).state
   }
 
   /** NSW-style BEAM SEARCH over the [[knnGraph]] structure: per query,
@@ -1325,7 +1323,7 @@ object Similarity {
     // the bucket projection feeds BOTH the capped corpus side and the
     // query-side seeds — lazy, that is two full corpus scans + sign
     // projections per search batch; checkpoint the narrow (id, t,
-    // bucket) rows once (r15). r16: the query sites pass the
+    // bucket) rows once. The query sites pass the
     // session-cached corpus bucket table ([[bktOf]]) — the LSH tables
     // ARE part of the navigable-graph index (the seed structure), so
     // like nrm/graph they are built once per corpus, not per search
@@ -1357,7 +1355,7 @@ object Similarity {
     // lazy chain doubles the plan per hop and re-executes hop 0 up to
     // 2^hops times; the frontier is |Q|·beam rows, so materialize each
     // hop (the knnGraph rounds contract applied to the search side).
-    // r16 NEGATIVE (measured, reverted): running these eager hop
+    // Measured and reverted: running these eager hop
     // checkpoints with AQE OFF — motivated by the job-cadence anatomy
     // (66 jobs/append, ~9 AQE sub-jobs per prune, ~45 ms driver cadence
     // each) — more than DOUBLED the family (append 4.7 → 9.3 s,
@@ -1367,19 +1365,17 @@ object Similarity {
     // exchange runs 32 un-coalesced tasks. AQE's per-stage cadence IS
     // the cheaper execution for the loop; the floor stands as the
     // price of runtime re-planning.
-    var beamDf = graft.CacheScope.register(
-      prune(seeds, beam).localCheckpoint(true))
-    (1 to hops).foreach { _ =>
-      val expanded = beamDf
-        .select(col("query_id"), col("node"))
-        .join(g.select(col("src").as("node"), col("dst")), "node")
-        .select(col("query_id"), col("dst").as("node"))
-        .unionByName(beamDf.select("query_id", "node"))
-        .distinct()
-      beamDf = graft.CacheScope.register(
-        prune(expanded, beam).localCheckpoint(true))
-    }
-    val fin = beamDf.filter(col("node") =!= col("query_id"))
+    val last = graft.Fixpoint.iterate("graphSearch", prune(seeds, beam), hops) {
+      (beamDf, _, _) =>
+        val expanded = beamDf
+          .select(col("query_id"), col("node"))
+          .join(g.select(col("src").as("node"), col("dst")), "node")
+          .select(col("query_id"), col("dst").as("node"))
+          .unionByName(beamDf.select("query_id", "node"))
+          .distinct()
+        (prune(expanded, beam), Nil)
+    } ((_, _) => false).state
+    val fin = last.filter(col("node") =!= col("query_id"))
       .select(col("query_id"), col("node").as("neighbor_id"), col("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)

@@ -414,6 +414,11 @@ class TextDedupSpec extends SparkSpec {
     val direct = Dedup.connectedComponentsStar(nodes, "id", edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(direct == viaFallback)
+    // convergence needs two rounds with equal signatures, so a one-round
+    // budget on a chain fails loudly and names the operator
+    val err = intercept[IllegalArgumentException](
+      Dedup.connectedComponentsStar(nodes, "id", edges, "a", "b", maxRounds = 1))
+    assert(err.getMessage.contains("connectedComponentsStar did not converge in 1 rounds"))
   }
 
   test("star contraction == union-find on random graphs (+ singletons, dup edges)") {

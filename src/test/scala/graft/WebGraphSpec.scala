@@ -149,6 +149,11 @@ class WebGraphSpec extends SparkSpec {
       Graph.kCore(edges, "a", "b", k).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core(3) == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    // one round peels the pendant chain; only a second, unchanged peel
+    // confirms the core, so a one-round budget fails and names kCore
+    val err = intercept[IllegalArgumentException](
+      Graph.kCore(edges, "a", "b", 3, maxRounds = 1))
+    assert(err.getMessage.contains("kCore did not converge in 1 rounds"))
     // k above the max core: empty result, not a throw
     assert(core(4).isEmpty)
     // k=1 keeps everything, with the in-core (= full) degrees
