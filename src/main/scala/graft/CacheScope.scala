@@ -1,60 +1,87 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** Invocation-scoped lifetime for eagerly-checkpointed DataFrames.
+/** The one owner of what a query invocation materializes: checkpoint
+  * blocks and scratch dirs that the returned (lazy) plan still reads, so
+  * the operator that made them cannot free them itself.
   *
-  * Several operators `localCheckpoint(true)` an intermediate relation that
-  * the RETURNED (lazy) plan still references — the blocks ARE the data
-  * (checkpointing truncated the lineage), so the operator itself can never
-  * unpersist them. Before this registry each invocation leaked its blocks
-  * for the session lifetime; a bench run (91 queries × 6 passes) accreted
-  * gigabytes of dead cached blocks and the end-of-run queries paid for it
-  * in GC/eviction time (the BENCH_r04 pass-5 ANN spikes).
+  *  - [[checkpoint]] eagerly `localCheckpoint`s a frame and registers its
+  *    blocks. The blocks ARE the data: the lineage is truncated.
+  *  - [[scratch]] hands out a fresh dir under `Io.scratch` and registers
+  *    it. No two calls share one, across threads and JVMs alike.
+  *  - [[sweep]] runs every registration the calling thread made: it
+  *    unpersists the blocks and deletes the dirs. `SparkEntry.queries`
+  *    sweeps before each build, so a query's state lives until the same
+  *    thread's next query.
+  *  - [[free]] unpersists one checkpoint's blocks now.
   *
-  * Contract: an operator registers each checkpointed df it cannot free
-  * itself; the same thread's NEXT query invocation sweeps everything it
-  * registered earlier. Registrations are kept per calling thread, so a
-  * thread consumes a query's result before it builds its next one
-  * (Verify, Bench, Probe and the specs all do), while concurrent callers
-  * on one session never free each other's blocks. At most one
-  * invocation's blocks are outstanding per thread.
+  * Registrations are kept per calling thread. A thread consumes a query's
+  * result before it builds its next one (Verify, Bench, Probe and the
+  * specs all do), and concurrent callers on one session never free each
+  * other's state. At most one invocation's state is outstanding per
+  * thread; what the JVM's threads still hold at exit is deleted then.
   *
-  * Fault-tolerance caveat for cluster deployments: `localCheckpoint`
-  * trades lineage for speed — its blocks live on executors with no
-  * recompute path, so losing an executor mid-job fails the job (Spark
-  * then retries it from the source). That is the right trade for the
-  * session-index pattern here (indexes are deterministic rebuilds of
-  * cheap intermediate state, and a retry rebuilds them), but a
-  * long-lived artifact that must survive executor churn belongs in the
-  * RELIABLE persistence paths instead: `atomicParquetArtifact` (the
-  * persisted index twins) or `spark.checkpoint` with a checkpoint dir.
+  * Owners that free their own states (`Fixpoint`'s rounds, `IndexCache`
+  * entries, `TextOps.bpeMerges`' vocabulary loop) checkpoint through
+  * [[unscoped]] and free with [[free]]; `Fixpoint` hands its final state
+  * to the scope with [[adopt]].
+  *
+  * Fault tolerance: `localCheckpoint` blocks have no recompute path, so
+  * losing an executor fails the job (Spark retries it from the source).
+  * An artifact that must survive executor churn belongs in
+  * `Io.atomicParquetArtifact` instead.
   */
 object CacheScope {
-  private val pending = ThreadLocal.withInitial(() => new java.util.ArrayDeque[DataFrame]())
+  private val pending = ThreadLocal.withInitial(() => new java.util.ArrayDeque[() => Unit]())
 
-  /** Track a checkpointed df whose blocks must outlive plan construction,
-    * until the calling thread's next [[sweep]]. */
-  def register(df: DataFrame): DataFrame = { pending.get.add(df); df }
+  private def register(release: () => Unit): Unit = pending.get.add(release)
 
-  /** Deterministically free a checkpointed df's storage NOW.
+  /** `df` eagerly checkpointed, freed at the calling thread's next [[sweep]]. */
+  def checkpoint(df: DataFrame, storage: StorageLevel = MEMORY_AND_DISK): DataFrame =
+    adopt(unscoped(df, storage))
+
+  /** `df` eagerly checkpointed and NOT registered: the caller frees it. */
+  private[graft] def unscoped(df: DataFrame, storage: StorageLevel = MEMORY_AND_DISK): DataFrame =
+    df.localCheckpoint(true, storage)
+
+  /** Register an [[unscoped]] checkpoint root, handing it to the scope. */
+  private[graft] def adopt(checkpointed: DataFrame): DataFrame = {
+    register(() => free(checkpointed))
+    checkpointed
+  }
+
+  /** This JVM's dir under `Io.scratch` that holds every [[scratch]] dir;
+    * deleted with whatever it still holds when the JVM exits. */
+  private[graft] lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory(
+      Files.createDirectories(Paths.get(graft.sources.Io.scratch)), "run-")
+    sys.addShutdownHook(FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh empty dir named after `kind`, deleted at the calling
+    * thread's next [[sweep]]. */
+  def scratch(kind: String): String = {
+    val dir = Files.createTempDirectory(scratchRoot, kind + "-").toFile
+    register(() => FileUtils.deleteQuietly(dir))
+    dir.getAbsolutePath
+  }
+
+  /** Free a checkpointed df's storage NOW, blocking. `Dataset.unpersist()`
+    * alone leaves the RDD blocks a localCheckpoint persisted to the
+    * GC-driven ContextCleaner, so each checkpoint RDD is unpersisted too.
     *
-    * `Dataset.unpersist()` alone is NOT enough: it only drops
-    * CacheManager (InMemoryRelation) entries and ignores the RDD-level
-    * blocks a localCheckpoint persisted — those would otherwise linger
-    * until the GC-driven ContextCleaner reclaims the RDD object, i.e.
-    * nondeterministically (the residual flakiness seen after r5's first
-    * sweep fix: sweeping only dropped the LAST strong reference and left
-    * actual freeing to the garbage collector). Blocking, so the storage
-    * is gone before the caller allocates more.
-    *
-    * CAUTION — this walks the WHOLE analyzed plan and unpersists EVERY
-    * LogicalRDD in it, not just "the df's own" checkpoint: pass the
-    * checkpoint-ROOT Dataset (what localCheckpoint returned, or a
+    * CAUTION — this unpersists EVERY LogicalRDD in the analyzed plan:
+    * pass the checkpoint ROOT (what [[unscoped]] returned, or a
     * projection over exactly that one checkpoint). A derived plan that
-    * JOINS a still-live shared checkpoint (e.g. a session-lifetime index
-    * table) would have the shared blocks destroyed — and a checkpoint's
-    * lineage is truncated, so later readers fail instead of recomputing.
+    * JOINS a still-live shared checkpoint (e.g. a session index table)
+    * would destroy the shared blocks, and with its lineage truncated a
+    * later reader fails instead of recomputing.
     */
   def free(df: DataFrame): Unit = {
     try df.unpersist(blocking = true)
@@ -65,22 +92,12 @@ object CacheScope {
     }
   }
 
-  /** Free every block the calling thread registered in previous
-    * invocations. Safe to call at any point where none of this thread's
-    * earlier un-materialized plans is live.
-    * Blocking (via [[free]]): the bound ("at most one invocation's blocks
-    * outstanding") must hold the moment the next query starts allocating,
-    * not eventually — async freeing leaves old blocks competing with the
-    * new query for storage memory, which is the exact pressure this
-    * registry exists to remove. The wait is a driver→BlockManager
-    * round-trip, milliseconds against a query run.
-    */
+  /** Free every checkpoint and delete every scratch dir the calling
+    * thread registered; safe wherever none of its earlier results is
+    * still to be consumed. Blocking (via [[free]]), so the bound holds
+    * the moment the next query starts allocating. */
   def sweep(): Unit = {
     val q = pending.get
-    var df = q.poll()
-    while (df != null) {
-      free(df)
-      df = q.poll()
-    }
+    Iterator.continually(q.poll()).takeWhile(_ != null).foreach(_())
   }
 }

@@ -6,14 +6,14 @@ import org.apache.spark.storage.StorageLevel
 /** The one host-side loop for the iterative operators (connected
   * components, star contraction, BFS shells, k-core peels, NN-Descent
   * rounds, beam hops); each round's step stays a declarative plan.
-  * Every state is `localCheckpoint(true, storage)`ed, so lineage never
-  * grows with the round count, and the round's metric columns ride that
-  * checkpoint job via `observe` (convergence costs no extra job). Each
-  * superseded state — always the checkpoint root created here — is
-  * freed with [[CacheScope.free]] exactly once, as soon as its successor
-  * is materialized; only the final state, which the caller's plan still
-  * reads, is registered with [[CacheScope]]. A loop so holds at most two
-  * states at once.
+  * Every state is checkpointed at `storage` ([[CacheScope.unscoped]]),
+  * so lineage never grows with the round count, and the round's metric
+  * columns ride that checkpoint job via `observe` (convergence costs no
+  * extra job). Each superseded state — always the checkpoint root
+  * created here — is freed with [[CacheScope.free]] exactly once, as
+  * soon as its successor is materialized; only the final state, which
+  * the caller's plan still reads, is handed to [[CacheScope]]. A loop so
+  * holds at most two states at once.
   */
 object Fixpoint {
   /** A state's observed metrics by column name; empty if it observed none. */
@@ -41,10 +41,10 @@ object Fixpoint {
       step: (DataFrame, Int, Metrics) => (DataFrame, Seq[Column]))(
       done: (Metrics, Metrics) => Boolean): Result = {
     def checkpoint(df: DataFrame, metrics: Seq[Column]): (DataFrame, Metrics) =
-      if (metrics.isEmpty) (df.localCheckpoint(true, storage), Map.empty)
+      if (metrics.isEmpty) (CacheScope.unscoped(df, storage), Map.empty)
       else {
         val obs = Observation()
-        (df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true, storage),
+        (CacheScope.unscoped(df.observe(obs, metrics.head, metrics.tail: _*), storage),
           obs.get)
       }
     var (state, metrics) = checkpoint(seed, seedMetrics)
@@ -59,7 +59,7 @@ object Fixpoint {
       state = next
       metrics = nextMetrics
     }
-    CacheScope.register(state)
+    CacheScope.adopt(state)
     Result(name, state, round, converged, maxRounds)
   }
 }

@@ -16,11 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus rewritten under a warm session never serves a stale index.
   * There is at most one entry per (session, dir, key).
   *
-  * [[of]] holds DataFrames: localCheckpoint'ed so consumers read
-  * materialized blocks, accounted in [[totalBytes]], and deliberately
-  * NOT CacheScope-registered — indexes survive for the session while
-  * per-invocation intermediates inside the builders still sweep
-  * normally. A replaced DataFrame entry is freed. [[value]] holds
+  * [[of]] holds DataFrames: checkpointed ([[CacheScope.unscoped]]) so
+  * consumers read materialized blocks, accounted in [[totalBytes]], and
+  * deliberately NOT swept with the invocation — indexes survive for
+  * the session while per-invocation intermediates inside the builders
+  * still sweep normally. A replaced DataFrame entry is freed. [[value]] holds
   * driver-side artifacts (centroids, codebooks, ranges, sketch words).
   *
   * Builders run outside any map lock, so a builder may itself call
@@ -62,7 +62,7 @@ object IndexCache {
   /** The checkpointed index table `key` over the data in `d`. */
   def of(s: SparkSession, d: String, key: String)(build: => DataFrame): DataFrame =
     lookup(s, d, key) { v =>
-      val df = build.localCheckpoint(true)
+      val df = CacheScope.unscoped(build)
       val ids = org.apache.spark.sql.graftbridge.GraftBridge
         .checkpointRdds(df).map(_.id).toSet
       val bytes = s.sparkContext.getRDDStorageInfo

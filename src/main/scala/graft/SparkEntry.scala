@@ -95,11 +95,11 @@ object SparkEntry {
 
   /** Each registered query's builder, by name.
     *
-    * Each invocation first sweeps checkpoint blocks the calling thread's
-    * PREVIOUS query registered in [[CacheScope]]. Contract: a thread
-    * consumes a query's result before it builds its next one, so this
-    * bounds cached-block growth to one invocation's worth per thread
-    * across a long session (see CacheScope docs).
+    * Each invocation first sweeps the checkpoint blocks and scratch dirs
+    * the calling thread's PREVIOUS query registered in [[CacheScope]], so
+    * a result's state lives until the thread's next query. Contract: a
+    * thread consumes a query's result before it builds its next one; this
+    * bounds growth to one invocation's worth per thread (see CacheScope).
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registered.map { case (name, q) =>

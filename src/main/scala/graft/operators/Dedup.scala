@@ -330,8 +330,7 @@ object Dedup {
     // (probe restriction, the shared-count self-join, per-doc rare
     // sizes) — a lazy plan re-runs the shingle explode + df join per
     // reference; materialize it once (narrow (id, sh) rows; r15)
-    val shr = graft.CacheScope.register(
-      repSh.join(rare, "sh").localCheckpoint(true))
+    val shr = graft.CacheScope.checkpoint(repSh.join(rare, "sh"))
     val psh = shr.join(probes, shr(id) === probes("probe_id"))
       .select(col("probe_id"), col("sh"))
     // count shared RARE shingles per DIRECTED (probe, other) pair — one
@@ -366,17 +365,17 @@ object Dedup {
     // hit semi-join) — both are answer-small pair lists, checkpoint
     // them so the exact-Jaccard verify and the banded-pair restriction
     // run once (r15)
-    val truth = graft.CacheScope.register(
+    val truth = graft.CacheScope.checkpoint(
       ngramJaccardOnPairs(pruned, reps, id, textCol, n, threshold)
-        .select("id_a", "id_b").localCheckpoint(true))
+        .select("id_a", "id_b"))
     val cand = prebuiltPairs.getOrElse(
       minhashPairsOfReps(reps, id, textCol, n, k, rowsPerBand))
       .select("id_a", "id_b")
-    val candP = graft.CacheScope.register(
+    val candP = graft.CacheScope.checkpoint(
       cand.join(probes.select(col("probe_id").as("id_a")), Seq("id_a"), "left_semi")
         .unionAll(cand.join(probes.select(col("probe_id").as("id_b")), Seq("id_b"), "left_semi")
           .select("id_a", "id_b"))
-        .distinct().localCheckpoint(true))
+        .distinct())
     val hits = truth.join(candP, Seq("id_a", "id_b"), "left_semi")
     // BLIND-SPOT BOUND (r15): a truth pair invisible to the audit must
     // overlap EXCLUSIVELY in >dfCap stop-shingles, so against probe a
@@ -529,10 +528,9 @@ object Dedup {
     // materialize the (possibly expensive) edge derivation ONCE — every
     // propagation round joins e, and without this the whole upstream
     // pipeline (e.g. minhash candidate generation) re-executes per round
-    val e = CacheScope.register(
+    val e = CacheScope.checkpoint(
       edges.select(col(aCol).as("_src"), col(bCol).as("_dst"))
-        .unionByName(edges.select(col(bCol).as("_src"), col(aCol).as("_dst")))
-        .localCheckpoint(true))
+        .unionByName(edges.select(col(bCol).as("_src"), col(aCol).as("_dst"))))
     // seed from nodes UNION edge endpoints: an endpoint missing from
     // `nodes` would otherwise appear mid-loop, be invisible to the
     // inner-join convergence check, and silently split its component.
@@ -927,8 +925,7 @@ object Dedup {
     */
   private[operators] def clusterDocSizes(docs: DataFrame, id: String,
                                          textCol: String): DataFrame = {
-    val reps = CacheScope.register(
-      representatives(docs, id, textCol).localCheckpoint(true))
+    val reps = CacheScope.checkpoint(representatives(docs, id, textCol))
     val pairs = minhashPairsOfReps(reps.select(col(id), col(textCol)),
       id, textCol, n = 3, k = 8, rowsPerBand = 2)
       .select("id_a", "id_b")

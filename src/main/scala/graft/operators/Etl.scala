@@ -771,7 +771,7 @@ object Etl {
     Query("etl_pipeline_e2e", Answer,
       """WITH n AS (SELECT event_id, user_id AS clientId, CASE WHEN event_type IN ('click','view','purchase') THEN event_type WHEN event_type = 'error' THEN 'pending' ELSE 'in-progress' END AS event_type, value FROM events), r AS (SELECT clientId, value, row_number() OVER (PARTITION BY clientId ORDER BY event_id NULLS FIRST, value NULLS FIRST, event_type NULLS FIRST) AS rn FROM n), sets AS (SELECT clientId, array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_type_set FROM n GROUP BY clientId), m AS (SELECT r.clientId, r.value, s.event_type_set FROM r JOIN sets s USING (clientId) WHERE rn = 1), p AS (SELECT clientId % 20 AS pk, to_json(struct_pack(clientId := clientId, value := value, event_type_set := event_type_set))::VARCHAR AS payload FROM m), b AS (SELECT pk, payload, (row_number() OVER (PARTITION BY pk ORDER BY payload) - 1) // 25 AS batch_seq FROM p) SELECT pk, batch_seq, count(*) AS n_items, md5(string_agg(payload, chr(10) ORDER BY payload)) AS digest FROM b GROUP BY pk, batch_seq ORDER BY pk, batch_seq""",
       (s, d) => {
-        val scratch = "/tmp/graft_io/jsonl_e2e"
+        val scratch = graft.CacheScope.scratch("jsonl_e2e")
         val src = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
         graft.sources.Io.writeJsonLines(src, scratch)
         val ingested = graft.sources.Io.readJsonLines(s, scratch, StructType(src.schema.fields))

@@ -1123,8 +1123,7 @@ object Events {
         (1 to 2).foreach { i =>
           // each fold references the standing state twice (anti-join +
           // union) — materialize per round, the components-loop contract
-          st = (graft.CacheScope.register(st._1.localCheckpoint(true)),
-            graft.CacheScope.register(st._2.localCheckpoint(true)))
+          st = (graft.CacheScope.checkpoint(st._1), graft.CacheScope.checkpoint(st._2))
           st = retentionMaintain(st._1, st._2, batch(i), "user_id", "ts")
         }
         retentionFromState(st._1, st._2, "user_id")

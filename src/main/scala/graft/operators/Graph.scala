@@ -65,16 +65,15 @@ object Graph {
     // wins (sf0.1: 2.6 s vs 3.2 s lazy; sf1 11.4 s — 4.4× at 10×
     // data). On a real cluster the durable analog is a bucketed edge
     // TABLE (write once, zero-exchange reads per iteration).
-    val e = graft.CacheScope.register(
+    val e = graft.CacheScope.checkpoint(
       edges.select(col(srcCol).cast("bigint").as("src"),
-        col(dstCol).cast("bigint").as("dst")).localCheckpoint(true))
+        col(dstCol).cast("bigint").as("dst")))
     // deg is NODE-grain (|nodes| rows of two longs) — checkpoint it once
     // so the per-round weight join never re-scans the fact-grain edge
     // list to recount degrees, and derive nodes/N from it (symmetrized
     // edges put every node in the src column) instead of paying a
     // separate distinct scan.
-    val deg = graft.CacheScope.register(
-      e.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint(true))
+    val deg = graft.CacheScope.checkpoint(e.groupBy("src").agg(count(lit(1)).as("d")))
     // N is ONE driver-side long (the formula constant), not a collect
     val n = deg.count()
     require(n > 0, "pageRank over an empty edge list")
@@ -128,18 +127,17 @@ object Graph {
     // lineitem) and is referenced by deg + the orientation + the final
     // join — checkpoint it ONCE. It is edge-grain and two-long narrow
     // (~16 B/row), so the blocks are tiny relative to the wedge work.
-    val e = graft.CacheScope.register(
+    val e = graft.CacheScope.checkpoint(
       edges.select(col("a").cast("bigint").as("a"),
-        col("b").cast("bigint").as("b")).localCheckpoint(true))
+        col("b").cast("bigint").as("b")))
     // deg is NODE-grain (two longs/row) and referenced FOUR times (both
     // degree-attach joins, the map-agg gate count, the final join) —
     // lazy, each reference re-ran the union + hash agg over the edge
     // blocks; checkpoint once (r15)
-    val deg = graft.CacheScope.register(
+    val deg = graft.CacheScope.checkpoint(
       e.select(col("a").as("node"))
         .unionByName(e.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("degree"))
-        .localCheckpoint(true))
+        .groupBy("node").agg(count(lit(1)).as("degree")))
     // attach both endpoint degrees, then orient by (degree, id).
     // deg is NODE-grain (two longs/row) while e is EDGE-grain: under the
     // family's byte-modeled gate, broadcasting deg removes BOTH
@@ -159,14 +157,13 @@ object Graph {
     // Checkpointed: edge-grain, two longs (~16 B/row) — the r9 lazy
     // version recomputed these node-grain joins per consumer (75 s
     // median, 24—142 s pass variance at sf0.1).
-    val oriented = graft.CacheScope.register(withDeg.select(
+    val oriented = graft.CacheScope.checkpoint(withDeg.select(
       when(col("da") < col("db") ||
            (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("src"), col("b").as("dst")))
       .otherwise(
         struct(col("b").as("src"), col("a").as("dst")))
-      .as("o")).select(col("o.src"), col("o.dst"))
-      .localCheckpoint(true))
+      .as("o")).select(col("o.src"), col("o.dst")))
     // COMPACT-FORWARD closing: each triangle is found exactly once, on
     // its a→b edge, as c ∈ N⁺(a) ∩ N⁺(b) (b→c can't yield it — a ∉
     // N⁺(b); a→c can't — b ∉ N⁺(c)). The r9→r10.0 wedge SELF-JOIN
@@ -265,8 +262,7 @@ object Graph {
     * consumer (graph_degree_dist, and graph_pagerank's edge checkpoint
     * job). Same blocks, two lazy views — the graph_bfs shape. */
   def tradeGraph(s: SparkSession, d: String): DataFrame = {
-    val pairs = graft.CacheScope.register(
-      tradePairs(s, d).localCheckpoint(true))
+    val pairs = graft.CacheScope.checkpoint(tradePairs(s, d))
     pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
   }
@@ -496,8 +492,7 @@ object Graph {
         // connectedComponents) and each reference would re-run the
         // fact-grain join — the sf10 smoke measured the un-cut shape at
         // 530 s with propagation itself only 8 s (BASELINE.md)
-        val e0 = graft.CacheScope.register(
-          nationTradeEdges(s, d).localCheckpoint(true))
+        val e0 = graft.CacheScope.checkpoint(nationTradeEdges(s, d))
         val nodes = e0.select(col("a").as("node"))
           .unionByName(e0.select(col("b").as("node"))).distinct()
         val comp = Dedup.connectedComponents(nodes, "node", e0, "a", "b")
@@ -527,12 +522,11 @@ object Graph {
         |SELECT node, CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type, min(d)::BIGINT AS hops
         |FROM b GROUP BY node ORDER BY node""".stripMargin,
       (s, d) => {
-        val pairs = graft.CacheScope.register(
+        val pairs = graft.CacheScope.checkpoint(
           Tables.orders(s, d).select("o_orderkey", "o_custkey")
             .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
               col("o_orderkey") === col("l_orderkey"))
-            .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b"))
-            .localCheckpoint(true))
+            .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b")))
         val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
           .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
         bfsLayers(edges, "src", "dst", maxHops = 6)

@@ -177,7 +177,7 @@ object Link {
     // pass.
     val dvIn = graft.Par.fanOut(dirty, col("record_id"))
     val dv = deletionIndex(dvIn, "dname", Seq("record_id", "dname"))
-    val reps = graft.CacheScope.register(nameReps(clean).localCheckpoint(true))
+    val reps = graft.CacheScope.checkpoint(nameReps(clean))
     val cv = deletionIndex(reps, "cname", Seq("e", "cname"))
     val joined =
       if (reps.count() <= broadcastNameLimit) dv.join(broadcast(cv), "variant")

@@ -47,11 +47,9 @@ object Pipelines {
       .select("doc_id")
     // banded docs feed BOTH the dedup rep derivation and the final
     // join-back — checkpoint once (swept at the next query, CacheScope)
-    val bd = CacheScope.register(
-      docs.join(band, "doc_id").localCheckpoint(true))
+    val bd = CacheScope.checkpoint(docs.join(band, "doc_id"))
     // 2. near-dedup: exact reps → minhash pairs → components → minima
-    val reps = CacheScope.register(
-      Dedup.representatives(bd, "doc_id", "text").localCheckpoint(true))
+    val reps = CacheScope.checkpoint(Dedup.representatives(bd, "doc_id", "text"))
     val pairs = Dedup.minhashPairsOfReps(reps.select("doc_id", "text"),
       "doc_id", "text", n = 3, k = 8, rowsPerBand = 2)
       .select("id_a", "id_b")

@@ -563,7 +563,7 @@ object Relational {
     Query("q_group_options_indexed", Answer,
       """SELECT DISTINCT p_type AS opt FROM part WHERE lower(p_type) LIKE 'pro%' ORDER BY opt LIMIT 100""",
       (s, d) => {
-        val idx = "/tmp/graft_io/gidx_p_type"
+        val idx = graft.CacheScope.scratch("gidx_p_type")
         graft.plans.GroupIndex.build(Tables.part(s, d), "p_type", idx)
         graft.plans.GroupIndex.options(s, idx, "p_type", "pro", 100)
       }),

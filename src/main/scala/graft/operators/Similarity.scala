@@ -160,9 +160,8 @@ object Similarity {
     // join-backs — lazy, each pair re-ran the scan + projection per
     // reference (r15); one narrow checkpoint each (the (id, ne) table
     // is what FAISS-class systems hold resident anyway)
-    val b = graft.CacheScope.register(
-      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket"))
-        .localCheckpoint(true))
+    val b = graft.CacheScope.checkpoint(
+      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket")))
     val qOwn = b.filter(queryPred)
     val q = (if (!multiProbe) qOwn else {
       qOwn.withColumn("bucket",
@@ -172,8 +171,7 @@ object Similarity {
     val cand = q.join(c, col("t") === col("t2") && col("bucket") === col("bucket2") &&
         col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val n = graft.CacheScope.register(
-      normalized(df, id, emb).localCheckpoint(true))
+    val n = graft.CacheScope.checkpoint(normalized(df, id, emb))
     broadcast(
         n.select(col(id).as("query_id"), col("ne").as("qe"))
           .join(broadcast(cand), "query_id"))
@@ -789,16 +787,14 @@ object Similarity {
     // Same narrow-shuffle shape as simLshAnn: id-only candidate pairs,
     // dedup, then join the pre-normalised vectors back for one dot fold.
     // b and n are each referenced twice — checkpoint once (r15)
-    val b = graft.CacheScope.register(
-      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket"))
-        .localCheckpoint(true))
+    val b = graft.CacheScope.checkpoint(
+      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket")))
     val a = b.select(col(id).as("id_a"), col("t"), col("bucket"))
     val bb = b.select(col(id).as("id_b"), col("t").as("t2"), col("bucket").as("bucket2"))
     val cand = a.join(bb, col("t") === col("t2") && col("bucket") === col("bucket2") &&
         col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val n = graft.CacheScope.register(
-      normalized(df, id, emb).localCheckpoint(true))
+    val n = graft.CacheScope.checkpoint(normalized(df, id, emb))
     cand
       .join(n.select(col(id).as("id_a"), col("ne").as("na")), "id_a")
       .join(n.select(col(id).as("id_b"), col("ne").as("nb")), "id_b")
@@ -848,17 +844,15 @@ object Similarity {
                  bucketCap: Int = Dedup.defaultBucketCap): DataFrame = {
     // b feeds the query side AND the capped neighbor side, n the two
     // vector join-backs — checkpoint each once per invocation (r15)
-    val b = graft.CacheScope.register(
-      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket"))
-        .localCheckpoint(true))
+    val b = graft.CacheScope.checkpoint(
+      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket")))
     val a = b.select(col(id).as("query_id"), col("t"), col("bucket"))
     val bb = Dedup.capBuckets(b, Seq("t", "bucket"), id, bucketCap)
       .select(col(id).as("neighbor_id"), col("t").as("t2"), col("bucket").as("bucket2"))
     val cand = a.join(bb, col("t") === col("t2") && col("bucket") === col("bucket2") &&
         col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val n = graft.CacheScope.register(
-      normalized(df, id, emb).localCheckpoint(true))
+    val n = graft.CacheScope.checkpoint(normalized(df, id, emb))
     val scored = cand
       .join(n.select(col(id).as("query_id"), col("ne").as("na")), "query_id")
       .join(n.select(col(id).as("neighbor_id"), col("ne").as("nb")), "neighbor_id")
@@ -937,9 +931,8 @@ object Similarity {
                     bucketCap: Int = Dedup.defaultBucketCap): DataFrame = {
     // the rep map feeds the copy fan-back AND the rep-grain kNN input —
     // checkpoint the vector-value hash agg once per invocation (r15)
-    val repMap = graft.CacheScope.register(
-      df.groupBy(col(emb)).agg(min(col(id)).as("rep_id"))
-        .localCheckpoint(true))
+    val repMap = graft.CacheScope.checkpoint(
+      df.groupBy(col(emb)).agg(min(col(id)).as("rep_id")))
     val copies = df.join(repMap, Seq(emb)).select(col(id).as("query_id"), col("rep_id"))
     val reps = repMap.select(col("rep_id").as(id), col(emb))
     val nn = simKnnJoin(reps, id, emb, tabs, k, bucketCap)
@@ -1225,7 +1218,7 @@ object Similarity {
     // not already supplied the session-cached copy, so counting and the
     // repeated scoring joins read blocks, not a re-normalizing scan
     val nrm = prebuiltNrm.getOrElse(
-      graft.CacheScope.register(normalized(df, id, emb).localCheckpoint(true)))
+      graft.CacheScope.checkpoint(normalized(df, id, emb)))
     // the candidate stream is n·tables·cap DIRECTED pairs — under the
     // byte gate, broadcast the node-grain vector table (|n| rows) so
     // pairs score MAP-SIDE and never shuffle 64-double payloads (the
@@ -1328,9 +1321,8 @@ object Similarity {
     // ARE part of the navigable-graph index (the seed structure), so
     // like nrm/graph they are built once per corpus, not per search
     // batch; a bare operator call without one still checkpoints its own.
-    val bkt = prebuiltBkt.getOrElse(graft.CacheScope.register(
-      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket"))
-        .localCheckpoint(true)))
+    val bkt = prebuiltBkt.getOrElse(graft.CacheScope.checkpoint(
+      lshBuckets(df, id, emb, tabs).select(col(id), col("t"), col("bucket"))))
     // seed candidates and the entry node come from the CORPUS side only
     // (corpusPred; default = whole df) — graphAppend searches a frozen
     // BASE graph, so its seeds must never be other batch nodes
@@ -1409,7 +1401,7 @@ object Similarity {
                   prebuiltNrm: Option[DataFrame] = None,
                   prebuiltBkt: Option[DataFrame] = None): DataFrame = {
     val nrm = prebuiltNrm.getOrElse(
-      graft.CacheScope.register(normalized(df, id, emb).localCheckpoint(true)))
+      graft.CacheScope.checkpoint(normalized(df, id, emb)))
     val found = graphSearch(df, id, emb, g, batchPred, beam, hops, k,
       tabs, bucketCap, prebuiltNrm = Some(nrm), corpusPred = !batchPred,
       prebuiltBkt = prebuiltBkt)
@@ -1423,10 +1415,9 @@ object Similarity {
     // materialized blocks (both consumers re-read blocks, never re-scan
     // the corpus) — no second checkpoint job needed.
     val bktQ = prebuiltBkt.map(_.filter(batchPred)).getOrElse(
-      graft.CacheScope.register(
+      graft.CacheScope.checkpoint(
         lshBuckets(df, id, emb, tabs)
-          .filter(batchPred).select(col(id), col("t"), col("bucket"))
-          .localCheckpoint(true)))
+          .filter(batchPred).select(col(id), col("t"), col("bucket"))))
     val capQ = bktQ.withColumn("bn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("t", "bucket").orderBy(col(id))))
@@ -1447,8 +1438,7 @@ object Similarity {
     val candF = found.select(col("query_id").as("src"),
         col("neighbor_id").as("dst"))
       .unionByName(bbs).distinct()
-    val fwd = graft.CacheScope.register(
-      scorer(candF, k).localCheckpoint(true))
+    val fwd = graft.CacheScope.checkpoint(scorer(candF, k))
     // reverse splice: candidate edges toward the new nodes, re-ranked
     // against each touched BASE node's standing list — bare int pairs,
     // vectors join back only inside the gated scorer (broadcast under

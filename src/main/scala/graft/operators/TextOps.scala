@@ -609,7 +609,7 @@ object TextOps {
     // the whole gap to the DuckDB bar.)
     // registered, not leaked: the returned plan reads these blocks, so the
     // sweep at the NEXT query invocation frees them (CacheScope contract)
-    val scored = CacheScope.register(df.localCheckpoint(true))
+    val scored = CacheScope.checkpoint(df)
     val hist = scored.groupBy(col(scoreCol).as("_s")).agg(count(lit(1)).as("_c"))
     val ws = Window.orderBy(col("_s"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -677,10 +677,9 @@ object TextOps {
     // dominant cost. The feature table is 3 longs/row; the IRLS passes
     // then scan materialized blocks (guide §5: reuse ⇒ persist the
     // cheap narrow intermediate, not the text).
-    val base = graft.CacheScope.register(
+    val base = graft.CacheScope.checkpoint(
       df.select(y.cast("long").as("y"),
-        x1.cast("long").as("x1"), x2.cast("long").as("x2"))
-        .localCheckpoint(true))
+        x1.cast("long").as("x1"), x2.cast("long").as("x2")))
     val S = 10000L
     def f(i: Int): Column = i match {
       case 0 => lit(S); case 1 => col("x1"); case 2 => col("x2")
@@ -860,10 +859,9 @@ object TextOps {
     val idx = 0 until m
     // checkpointed for the same 3-pass reuse as [[logitTrain]] (r15):
     // (k+1) longs/row vs re-running the regex feature projection per pass
-    val base = graft.CacheScope.register(
+    val base = graft.CacheScope.checkpoint(
       df.select(y.cast("long").as("y") +:
-        xs.zipWithIndex.map { case (x, i) => x.cast("long").as(s"x${i + 1}") }: _*)
-        .localCheckpoint(true))
+        xs.zipWithIndex.map { case (x, i) => x.cast("long").as(s"x${i + 1}") }: _*))
     def f(i: Int): Column = if (i == 0) lit(10000L) else col(s"x$i")
     def sn(i: Int, j: Int) = s"s${math.min(i, j)}${math.max(i, j)}"
     def dec(c: Column): Column = sum(c.cast("decimal(38,0)")).cast("double")
@@ -1023,7 +1021,7 @@ object TextOps {
     val vocab0 = words.groupBy("w").agg(count(lit(1)).as("wn"))
       .select(concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("repr"),
         col("wn"))
-    var cur = vocab0.localCheckpoint(true)
+    var cur = CacheScope.unscoped(vocab0)
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var rank = 1
     var done = false
@@ -1042,9 +1040,8 @@ object TextOps {
         val (x, y, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((rank.toLong, x, y, x + y, cnt))
-        val next = cur.withColumn("repr",
-          replace(col("repr"), lit(s" $x $y "), lit(s" $x$y ")))
-          .localCheckpoint(true)
+        val next = CacheScope.unscoped(cur.withColumn("repr",
+          replace(col("repr"), lit(s" $x $y "), lit(s" $x$y "))))
         CacheScope.free(cur)
         cur = next
         rank += 1
@@ -1325,11 +1322,10 @@ object TextOps {
     // fragile here — the final doc-grain join infers an isNotNull into
     // only the probe branch and column pruning specializes the agg
     // branch's scan, so the subtrees stop canonicalizing equal.)
-    val s = graft.CacheScope.register(
+    val s = graft.CacheScope.checkpoint(
       sentences(df.filter(col(idCol).isNotNull), idCol, textCol)
         .select(col(idCol), col("sent_idx"), col("sentence"))
-        .repartition(col("sentence"))
-        .localCheckpoint(true))
+        .repartition(col("sentence")))
     val dups = s.select(col(idCol), col("sentence")).distinct()
       .groupBy("sentence")
       .agg(count(lit(1)).as("_docs"), min(col(idCol)).as("_first"))
@@ -1393,11 +1389,10 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     // token arrays once; 0-based positions; the split runs once per
     // consumer of the checkpointed relation (kg, tok, final widths)
-    val tk = graft.CacheScope.register(
+    val tk = graft.CacheScope.checkpoint(
       df.filter(col(idCol).isNotNull)
         .select(col(idCol),
-          filter(tokens(col(textCol)), t => t =!= "").as("t"))
-        .localCheckpoint(true))
+          filter(tokens(col(textCol)), t => t =!= "").as("t")))
     // k-gram occurrences: (doc, pos, md5(gram)); unit-separator join so
     // token boundaries cannot alias; docs shorter than k emit none
     val kg = tk.filter(size(col("t")) >= k)
@@ -1471,9 +1466,8 @@ object TextOps {
     // the token table feeds the unigram agg and BOTH bigram passes —
     // lazy, that re-tokenized (lower + regex split) the corpus 3× per
     // invocation; checkpoint once (r15)
-    val toks = graft.CacheScope.register(
-      df.select(col(idCol), tokens(lower(col(textCol))).as("t"))
-        .localCheckpoint(true))
+    val toks = graft.CacheScope.checkpoint(
+      df.select(col(idCol), tokens(lower(col(textCol))).as("t")))
     val uni = toks.select(explode(col("t")).as("w")).filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("c1"))
     val vocab = uni.agg(count(lit(1)).as("v"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.StructType
 import graft.Grain.{Answer, Corpus}
-import graft.Query
+import graft.{CacheScope, Query}
 import graft.Tables
 
 /** Sources and sinks: JSON-lines, CSV, partitioned parquet, file streams.
@@ -245,17 +245,18 @@ object Io {
   }
 
   // ------------------------------------------------------- round-trip queries
-  // Each writes to a scratch dir then reads back through the source under
+  // Each writes to a fresh CacheScope.scratch dir, which lives until the
+  // calling thread's next query, then reads back through the source under
   // test; the oracle reads the original table — so a green row proves the
   // writer+reader pair is lossless.
 
-  private[graft] val scratch = "/tmp/graft_io"
+  private[graft] val scratch = s"${System.getProperty("java.io.tmpdir")}/graft_io"
 
   val registry: Seq[Query] = Seq(
     Query("src_jsonlines_file", Corpus,
       """SELECT event_id, event_type, value FROM events ORDER BY event_id""",
       (s, d) => {
-        val out = s"$scratch/jsonl"
+        val out = CacheScope.scratch("jsonl")
         val src = Tables.events(s, d).select("event_id", "event_type", "value")
         writeJsonLines(src, out)
         readJsonLines(s, out, StructType(src.schema.fields))
@@ -265,7 +266,7 @@ object Io {
     Query("src_csv_roundtrip", Corpus,
       """SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""",
       (s, d) => {
-        val out = s"$scratch/csv"
+        val out = CacheScope.scratch("csv")
         val src = Tables.customer(s, d)
           .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         writeCsv(src, out)
@@ -276,7 +277,7 @@ object Io {
     Query("src_orc_roundtrip", Corpus,
       """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey""",
       (s, d) => {
-        val out = s"$scratch/orc"
+        val out = CacheScope.scratch("orc")
         val src = Tables.supplier(s, d)
           .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         writeOrc(src, out)
@@ -288,7 +289,7 @@ object Io {
     Query("src_parquet_merge_schema", Corpus,
       """SELECT o_orderkey, o_totalprice, CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority FROM orders ORDER BY o_orderkey""",
       (s, d) => {
-        val out = s"$scratch/evolve"
+        val out = CacheScope.scratch("evolve")
         val o = Tables.orders(s, d)
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")
@@ -307,7 +308,7 @@ object Io {
     Query("src_binary_files", Corpus,
       """SELECT 'doc_' || doc_id || '.txt' AS file_name, octet_length(text::BLOB)::BIGINT AS n_bytes, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""",
       (s, d) => {
-        val out = s"$scratch/blob"
+        val out = CacheScope.scratch("blob")
         writeBlobFiles(
           Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
           out, concat(lit("doc_"), col("doc_id"), lit(".txt")), col("text"))
@@ -324,7 +325,7 @@ object Io {
     Query("src_text_files", Corpus,
       """SELECT 'doc_' || doc_id || '.txt' AS file_name, text FROM documents WHERE doc_id % 10 = 0 ORDER BY file_name""",
       (s, d) => {
-        val out = s"$scratch/blob"
+        val out = CacheScope.scratch("blob")
         writeBlobFiles(
           Tables.documents(s, d).filter(col("doc_id") % 10 === 0),
           out, concat(lit("doc_"), col("doc_id"), lit(".txt")), col("text"))
@@ -345,7 +346,7 @@ object Io {
     Query("sink_partitioned", Answer,
       """SELECT o_orderpriority, count(*) AS n, round(sum(CAST(o_totalprice AS DECIMAL(20,6))), 2)::DOUBLE AS sum_price FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
       (s, d) => {
-        val out = s"$scratch/part"
+        val out = CacheScope.scratch("part")
         writePartitioned(
           Tables.orders(s, d).select("o_orderkey", "o_totalprice", "o_orderpriority"),
           out, Seq("o_orderpriority"))

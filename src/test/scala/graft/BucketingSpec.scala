@@ -34,13 +34,16 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partition pruning: a filter on the partition column prunes the scan") {
-    Io.writePartitioned(Tables.orders(spark, sfDir)
-      .select("o_orderkey", "o_totalprice", "o_orderpriority"),
-      "/tmp/graft_io/part_prune", Seq("o_orderpriority"))
-    val df = spark.read.parquet("/tmp/graft_io/part_prune")
-      .filter(col("o_orderpriority") === "1-URGENT")
-    val p = plan(df)
-    assert(p.contains("PartitionFilters") && p.contains("o_orderpriority"))
-    assert(df.count() > 0)
+    val dir = java.nio.file.Files.createTempDirectory("part_prune").toString
+    try {
+      Io.writePartitioned(Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority"),
+        dir, Seq("o_orderpriority"))
+      val df = spark.read.parquet(dir)
+        .filter(col("o_orderpriority") === "1-URGENT")
+      val p = plan(df)
+      assert(p.contains("PartitionFilters") && p.contains("o_orderpriority"))
+      assert(df.count() > 0)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

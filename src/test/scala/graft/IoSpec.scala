@@ -23,9 +23,17 @@ class IoSpec extends SparkSpec {
     got.zip(src).foreach { case (g, s) => assert(g == s) }
   }
 
+  /** The dir a round-trip query wrote and read back, `depth` levels
+    * above a file its result reads. */
+  private def scratchOf(query: String, depth: Int): java.io.File = {
+    val got = run(query)
+    got.collect()
+    val file = new java.io.File(new java.net.URI(got.inputFiles.head))
+    Iterator.iterate(file)(_.getParentFile).drop(depth).next()
+  }
+
   test("partitioned write produces hive-style partition dirs") {
-    run("sink_partitioned").collect()
-    val dirs = new java.io.File("/tmp/graft_io/part").listFiles()
+    val dirs = scratchOf("sink_partitioned", depth = 2).listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("o_orderpriority=")))
   }
@@ -63,26 +71,22 @@ class IoSpec extends SparkSpec {
   }
 
   test("binaryFile pathGlobFilter prunes non-matching files at listing time") {
-    run("src_binary_files").collect() // materialize the fixture dir
-    val blobDir = s"${graft.sources.Io.scratch}/blob"
-    val planted = java.nio.file.Paths.get(blobDir, "ignore.bin")
-    try {
-      java.nio.file.Files.write(planted, "not a doc".getBytes("UTF-8"))
-      val got = graft.sources.Io.readBinaryFiles(spark, blobDir, "*.txt")
-      assert(!got.select("path").as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().exists(_.endsWith("ignore.bin")))
-    } finally {
-      // shared fixture dir: don't leave the foreign file for later tests
-      java.nio.file.Files.deleteIfExists(planted)
-    }
+    // the query's own scratch dir: the next query's sweep deletes it
+    // with the planted file
+    val blobDir = scratchOf("src_binary_files", depth = 1).getPath
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(blobDir, "ignore.bin"), "not a doc".getBytes("UTF-8"))
+    val got = graft.sources.Io.readBinaryFiles(spark, blobDir, "*.txt")
+    assert(!got.select("path").as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().exists(_.endsWith("ignore.bin")))
   }
 
   test("atomicParquetArtifact: a crashed half-write is swept and rebuilt") {
     val s = spark
     import s.implicits._
-    val path = "/tmp/graft_io/atomic_artifact_test"
+    val root = java.nio.file.Files.createTempDirectory("atomic_artifact")
+    val path = s"$root/atomic_artifact_test"
     val dir = new java.io.File(path)
-    org.apache.commons.io.FileUtils.deleteQuietly(dir)
     // simulate a builder that died mid-write: directory present, one
     // stale/partial part file, NO _SUCCESS commit marker
     Seq((99L, "stale")).toDF("id", "v")
@@ -105,6 +109,7 @@ class IoSpec extends SparkSpec {
     val litter = dir.getParentFile.listFiles()
       .filter(_.getName.startsWith(dir.getName + ".tmp-"))
     assert(litter.isEmpty, litter.mkString(","))
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
   test("unordered strips both presentation sorts, and the commit keeps every row") {

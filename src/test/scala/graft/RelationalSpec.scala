@@ -285,13 +285,14 @@ class RelationalSpec extends SparkSpec {
   test("GroupIndex.merge: incremental delta == full rebuild") {
     import graft.plans.GroupIndex
     val part = Tables.part(spark, sfDir)
-    val idx = "/tmp/graft_io/gidx_merge_test"
+    val root = java.nio.file.Files.createTempDirectory("gidx_merge")
+    val idx = s"$root/gidx_merge_test"
     // build from half the table, merge the other half as a delta batch
     GroupIndex.build(part.filter(col("p_partkey") % 2 === 0), "p_type", idx)
     GroupIndex.merge(part.filter(col("p_partkey") % 2 === 1), "p_type", idx)
     val merged = GroupIndex.options(spark, idx, "p_type", "", 10000)
       .collect().map(_.getString(0)).toSeq
-    val full = "/tmp/graft_io/gidx_merge_full"
+    val full = s"$root/gidx_merge_full"
     GroupIndex.build(part, "p_type", full)
     val rebuilt = GroupIndex.options(spark, full, "p_type", "", 10000)
       .collect().map(_.getString(0)).toSeq
@@ -301,6 +302,7 @@ class RelationalSpec extends SparkSpec {
     val again = GroupIndex.options(spark, idx, "p_type", "", 10000)
       .collect().map(_.getString(0)).toSeq
     assert(again == rebuilt)
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
   test("q_above_custavg == brute-force per-customer threshold") {

@@ -384,15 +384,20 @@ class TextDedupSpec extends SparkSpec {
     // (components edges/snapshot, dedup reps, quality-band scores) leaked
     // blocks for the session lifetime. The SparkEntry wrapper sweeps the
     // previous invocation's registrations, so repeated invocations must
-    // NOT grow the persisted-RDD set.
+    // NOT grow the persisted-RDD set, nor the scratch dirs the sinks write.
     def persisted = spark.sparkContext.getPersistentRDDs
+    def scratchDirs = CacheScope.scratchRoot.toFile.listFiles().count(_.isDirectory)
     def cycle(): Unit =
-      Seq("dedup_components", "text_quality_band", "dedup_pipeline_e2e")
+      Seq("dedup_components", "text_quality_band", "dedup_pipeline_e2e",
+        "etl_pipeline_e2e", "src_csv_roundtrip", "sink_partitioned")
         .foreach(n => run(n).count())
     cycle()
     val afterOne = persisted
+    val dirsAfterOne = scratchDirs
     (1 to 3).foreach(_ => cycle())
     val afterFour = persisted
+    assert(scratchDirs <= dirsAfterOne,
+      s"scratch dirs accreted across invocations: $dirsAfterOne -> $scratchDirs")
     assert(afterFour.size <= afterOne.size,
       s"checkpoint blocks accreted across invocations: ${afterOne.size} -> ${afterFour.size}\n" +
         s"afterOne: ${afterOne.map { case (k, v) => s"$k=${v.name}:${v.getStorageLevel}" }.mkString("; ")}\n" +
@@ -1320,7 +1325,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("decon_bloom_persisted: read-back artifact answers like the in-session build") {
-    val dir = new java.io.File("/tmp/graft_io/decon_bloom")
+    val dir = new java.io.File(s"${graft.sources.Io.scratch}/decon_bloom")
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
     val fresh = run("decon_bloom_persisted").collect().map(_.toSeq)
     // the artifact committed atomically (behind a _SUCCESS marker)...
